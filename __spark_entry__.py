@@ -79,11 +79,12 @@ def _roundtrip_proj(spark: SparkSession, sf_dir: str, table: str, columns: list[
     try:
         from parquet_spark.sources.arrow_scan import (
             MIN_FUSED_ROWS,
-            estimate_rows,
+            estimate_rows_files,
+            list_parquet_files,
             roundtrip_parquet_arrow,
         )
 
-        if estimate_rows(path) >= MIN_FUSED_ROWS:
+        if estimate_rows_files(list_parquet_files(path)) >= MIN_FUSED_ROWS:
             return roundtrip_parquet_arrow(
                 spark, path, list(columns), df.schema, codecs=codecs
             )

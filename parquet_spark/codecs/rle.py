@@ -46,23 +46,18 @@ def encode(vals: np.ndarray, width: int) -> bytes:
         raise ValueError(f"width {width} out of range 0..32 for RLE hybrid")
     v = np.ascontiguousarray(vals, dtype=np.uint64)
     n = len(v)
-    parts: list[bytes] = []
+    # stream layout in order: an int is a bit-packed region of that many
+    # 8-value groups, bytes are a finished RLE run. Every region is
+    # 8-aligned, so one pack() over their concatenation yields each
+    # region's bytes back to back (groups * width each) — one numpy pass
+    # per stream instead of one per region.
+    layout: list[int | bytes] = []
+    regions: list[np.ndarray] = []
 
-    def emit_bitpacked(seg: np.ndarray, pad_to_8: bool) -> None:
-        m = len(seg)
-        if m == 0:
-            return
-        if m % 8:
-            if not pad_to_8:
-                raise AssertionError("interior bit-pack region not 8-aligned")
-            seg = np.concatenate([seg, np.zeros(8 - m % 8, dtype=np.uint64)])
-        groups = len(seg) // 8
-        parts.append(leb128_encode((groups << 1) | 1))
-        parts.append(bitpack.pack(seg, width))
-
-    def emit_rle(value: int, count: int) -> None:
-        parts.append(leb128_encode(count << 1))
-        parts.append(_value_bytes(value, width))
+    def add_bitpacked(seg: np.ndarray) -> None:
+        if len(seg):
+            regions.append(seg)
+            layout.append(len(seg) // 8)
 
     if n:
         # vectorized run detection
@@ -90,11 +85,24 @@ def encode(vals: np.ndarray, width: int) -> bytes:
             borrow = (-gap) % 8  # align the bit-pack region to 8 values
             if ln - borrow < MIN_RLE_RUN:
                 continue  # run too short once borrowed — swallow into bit-pack
-            emit_bitpacked(v[pos : s + borrow], pad_to_8=False)
-            emit_rle(int(rvals[i]), ln - borrow)
+            add_bitpacked(v[pos : s + borrow])
+            layout.append(leb128_encode((ln - borrow) << 1) + _value_bytes(int(rvals[i]), width))
             pos = s + ln
-        emit_bitpacked(v[pos:], pad_to_8=True)  # tail, zero-padded like rle.go:142-151
+        tail = v[pos:]
+        if len(tail) % 8:  # zero-padded like rle.go:142-151
+            tail = np.concatenate([tail, np.zeros(8 - len(tail) % 8, dtype=np.uint64)])
+        add_bitpacked(tail)
 
+    packed = bitpack.pack(np.concatenate(regions), width) if regions else b""
+    parts: list[bytes] = []
+    off = 0
+    for item in layout:
+        if isinstance(item, bytes):
+            parts.append(item)
+        else:
+            parts.append(leb128_encode((item << 1) | 1))
+            parts.append(packed[off : off + item * width])
+            off += item * width
     payload = b"".join(parts)
     return struct.pack("<i", len(payload)) + payload
 

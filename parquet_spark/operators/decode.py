@@ -108,15 +108,18 @@ def roundtrip_table(
 ) -> DataFrame:
     """encode→decode fused into ONE mapInArrow stage (r6, guide §4.1).
 
-    Semantically identical to `decode_table(encode_table(df), df.schema)`
-    — the same `_encode_fn` kernels produce the same block bytes and the
-    same `_decode_fn` kernels decode them — but the blocks relation never
-    crosses the Python↔JVM boundary between the two stages (two chained
-    mapInArrow nodes each run their own Python worker, with a full Arrow
-    round-trip of the multi-MB payloads between them). Measured on the
-    sf1.0-scale documents-fsst roundtrip: 1.26 s → 0.86 s interleaved
-    min, CRC-identical. Stats sidecar columns are skipped — the immediate
-    decode would discard them (same rule as the fused-scan encode path)."""
+    Returns the rows of `decode_table(encode_table(df), schema)`, where
+    `schema` is df's schema without the internal `__bucket` column: when
+    df carries `__bucket`, it only steers block boundaries and is not
+    part of the output. The same `_encode_fn` kernels produce the same
+    block bytes and the same `_decode_fn` kernels decode them, but the
+    blocks relation never crosses the Python↔JVM boundary between the two
+    stages (two chained mapInArrow nodes each run their own Python
+    worker, with a full Arrow round-trip of the multi-MB payloads between
+    them). Measured on the sf1.0-scale documents-fsst roundtrip: 1.26 s →
+    0.86 s interleaved min, CRC-identical. Stats sidecar columns are
+    skipped — the immediate decode would discard them (same rule as the
+    fused-scan encode path)."""
     from parquet_spark.operators.encode import (
         BUCKET_COL,
         DEFAULT_BLOCK_ROWS,
@@ -170,62 +173,33 @@ def _maybe_decode_blocks_arrow(
     try:
         if not os.path.isdir(data_dir):
             return None
-        entries = os.listdir(data_dir)
-        if any(os.path.isdir(os.path.join(data_dir, e)) for e in entries):
+        if any(os.path.isdir(os.path.join(data_dir, e)) for e in os.listdir(data_dir)):
             return None  # partition-dir layout: keep Spark's scan
-        data_bytes = sum(
-            os.path.getsize(os.path.join(data_dir, e))
-            for e in entries
-            if e.endswith(".parquet") and not e.startswith((".", "_"))
-        )
     except OSError:
         return None
-    from parquet_spark.sources.arrow_scan import _read_split, plan_arrow_splits
+    from parquet_spark.sources.arrow_scan import _read_split, fused_scan, plan_arrow_splits
 
     try:
         splits = plan_arrow_splits(data_dir, spark.sparkContext.defaultParallelism)
-    except Exception:  # noqa: BLE001 — any planning surprise (no/unreadable
-        # files, all-empty part files): the Spark scan is always correct
+    except (OSError, ValueError):  # no or unreadable files (pyarrow's
+        # ArrowInvalid is a ValueError): the Spark scan is always correct
         return None
-    if not splits:
-        return None
-    bc = spark.sparkContext.broadcast(splits)
-    # pack splits into tasks the way Spark's scan bin-packs small files:
-    # a fragmented table (many tiny block files — the state compact_table
-    # exists to fix, and compact_table itself reads through here) must not
-    # schedule one near-empty task per file. Partition count follows data
-    # size (~128 MB per task, Spark's maxPartitionBytes default) with a
-    # floor of full parallelism; each task loops over its packed splits.
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(len(splits), max(par, data_bytes // (128 << 20))))
-    sdf = spark.range(0, len(splits), numPartitions=n_parts)
-    dec = _decode_fn(list(columns), out_schema, verify)
     want = (["meta"] if verify else []) + ["n_rows"] + list(columns)
 
-    def gen(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def read(split, pf):
+        have = set(pf.schema_arrow.names)
+        missing = [c for c in want if c not in have]
+        for batch in _read_split(pf, *split[1:], [c for c in want if c in have], 16384):
+            for c in missing:
+                # written before the column existed: null payload →
+                # _decode_fn null-fills the rows
+                batch = batch.append_column(c, pa.nulls(batch.num_rows, pa.binary()))
+            yield batch
 
-        def feed():
-            for b in batches:
-                for sid in b.column("id").to_pylist():
-                    f, rg, lo, hi = bc.value[sid]
-                    pf = pq.ParquetFile(f)
-                    have = set(pf.schema_arrow.names)
-                    cols_here = [c for c in want if c in have]
-                    missing = [c for c in want if c not in have]
-                    for batch in _read_split(f, rg, lo, hi, cols_here, 16384, pf=pf):
-                        for c in missing:
-                            # written before the column existed: null
-                            # payload → _decode_fn null-fills the rows
-                            batch = batch.append_column(
-                                c, pa.nulls(batch.num_rows, pa.binary())
-                            )
-                        yield batch
-
-        yield from dec(feed())
-
-    return sdf.mapInArrow(gen, out_schema)
+    # a fragmented table (many tiny block files — the state compact_table
+    # exists to fix, and compact_table itself reads through here) packs
+    # its splits into tasks by data size like Spark's own scan
+    return fused_scan(spark, splits, read, _decode_fn(list(columns), out_schema, verify), out_schema)
 
 
 _PRUNE_OPS = {">", ">=", "<", "<=", "=", "==", "!=", "in"}

@@ -147,8 +147,9 @@ def explain_partitioning(df: DataFrame, target_partitions: int | None = None) ->
         if len(splits) >= max(2, min(tp, par) // 2):
             return (
                 f"arrow fused scan+encode: bare local parquet relation, "
-                f"{len(splits)} row-group/range splits read with pyarrow in-task "
-                f"(no JVM row feed, no shuffle)"
+                f"{len(splits)} row-group/range splits in "
+                f"{arrow_scan.fused_task_count(spark, splits)} tasks, read with "
+                f"pyarrow in-task (no JVM row feed, no shuffle)"
             )
     if npart < max(2, min(tp, par) // 2):
         return (

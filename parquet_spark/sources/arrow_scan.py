@@ -31,6 +31,12 @@ Scale behaviour (the rules are size-derived, not tuned to local[32]):
   stops decoding its row group at the end of its range (iter_batches +
   break), so sub-splitting costs at most one extra partial decode of the
   leading rows, never a full redundant read of the file.
+- **tasks**: splits are packed into tasks, not run one task each. Every
+  Python task pays a fixed start-up cost before its kernel runs, so
+  `fused_task_count` packs contiguous splits into about
+  `spark.sql.files.maxPartitionBytes` of input per task, with a floor of
+  full parallelism — one wave of tasks for any input up to
+  parallelism x 128 MB.
 """
 
 from __future__ import annotations
@@ -39,7 +45,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn
+from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn, _parse_bytes_conf
 
 # below this row count the JVM feed is cheaper than split planning +
 # per-task footer reads; callers should use the plain encode_table path.
@@ -54,7 +60,7 @@ from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn
 MIN_FUSED_ROWS = 200_000
 
 
-def _list_parquet_files(path: str) -> list[str]:
+def list_parquet_files(path: str) -> list[str]:
     """Local parquet file or directory of part files, sorted for
     deterministic split planning."""
     if os.path.isfile(path):
@@ -68,18 +74,12 @@ def _list_parquet_files(path: str) -> list[str]:
     raise FileNotFoundError(path)
 
 
-def estimate_rows(path: str) -> int:
-    """Total row count from footer metadata (driver-side; one footer read
-    per file, intended for the small-file-count regime where the caller
-    is choosing between the fused and plain scan paths)."""
-    return estimate_rows_files(_list_parquet_files(path))
-
-
 def estimate_rows_files(files: list[str], max_footers: int = 64) -> int:
-    """Row-count estimate with bounded driver IO: exact when the file
-    count is small, first-file-rows x file-count beyond that (row counts
-    per part file are near-uniform for any sanely written table, and the
-    estimate only gates a threshold choice)."""
+    """Row-count estimate from footer metadata with bounded driver IO:
+    exact when the file count is small, first-file-rows x file-count
+    beyond that (row counts per part file are near-uniform for any sanely
+    written table, and the estimate only gates the choice between the
+    fused and plain scan paths)."""
     import pyarrow.parquet as pq
 
     if not files:
@@ -136,7 +136,7 @@ def plan_arrow_splits(path: str, parallelism: int, block_rows: int = DEFAULT_BLO
     """(file, row_group, lo, hi) splits. row_group == -1 means the whole
     file (many-files regime: the driver read no footer, the task will).
     lo/hi are row offsets within the row group; hi == -1 means to the end."""
-    files = _list_parquet_files(path)
+    files = list_parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return _plan_splits_for_files(files, parallelism, block_rows)
@@ -153,7 +153,8 @@ def _plan_splits_for_files(files: list[str], parallelism: int, block_rows: int) 
         meta = pq.ParquetFile(f).metadata
         for rg in range(meta.num_row_groups):
             rg_meta.append((f, rg, meta.row_group(rg).num_rows))
-    if len(rg_meta) >= parallelism:
+    if not rg_meta or len(rg_meta) >= parallelism:
+        # (no row groups at all: nothing to read, no splits)
         return [(f, rg, 0, -1) for f, rg, _n in rg_meta]
     # sub-split large row groups so every core gets work; keep ranges at
     # least a couple of blocks so per-split overhead stays amortized
@@ -169,15 +170,11 @@ def _plan_splits_for_files(files: list[str], parallelism: int, block_rows: int) 
     return splits
 
 
-def _read_split(path: str, rg: int, lo: int, hi: int, cols: list[str], batch_rows: int, pf=None):
-    """Yield Arrow batches for rows [lo, hi) of one row group (rg == -1:
-    the whole file; hi == -1: to the end). Stops decoding at hi, so a
-    sub-split pays at most the partial decode of its leading rows.
-    `pf`: an already-open ParquetFile for `path` (callers that probed the
-    schema avoid a second footer read)."""
-    import pyarrow.parquet as pq
-
-    pf = pf or pq.ParquetFile(path)
+def _read_split(pf, rg: int, lo: int, hi: int, cols: list[str], batch_rows: int):
+    """Yield Arrow batches for rows [lo, hi) of one row group of the open
+    ParquetFile `pf` (rg == -1: the whole file; hi == -1: to the end).
+    Stops decoding at hi, so a sub-split pays at most the partial decode
+    of its leading rows."""
     rgs = None if rg < 0 else [rg]
     end = float("inf") if hi < 0 else hi
     off = 0
@@ -192,49 +189,47 @@ def _read_split(path: str, rg: int, lo: int, hi: int, cols: list[str], batch_row
             break
 
 
-def _fused_scan_df(spark, path, cols, block_rows, kernel, out_schema):
-    """Shared skeleton of the fused-scan operators: plan splits, ship
-    them as a broadcast + JVM-native Range of split indices (one tiny row
-    each — a parallelize()d Python RDD would evaluate in one Python
-    worker and hand rows to the mapInArrow worker through the JVM, a
-    second Python hop per task that measured ~0.2 s across a 36-task
-    stage), and run `kernel` over the pyarrow batch feed inside each
-    task. The broadcast keeps the task closure O(1) at any split count."""
-    splits = plan_arrow_splits(path, spark.sparkContext.defaultParallelism, block_rows)
-    bc = spark.sparkContext.broadcast(splits)
-    sdf = spark.range(0, len(splits), numPartitions=len(splits))
+def fused_task_count(spark: SparkSession, splits: list[tuple]) -> int:
+    """Tasks the fused scan packs `splits` into — Spark's own small-file
+    rule: about `spark.sql.files.maxPartitionBytes` of input per task,
+    never fewer tasks than the default parallelism, never more than
+    splits. Splits end in (file, rg, lo, hi); each file counts once."""
+    max_part = _parse_bytes_conf(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 << 20
+    )
+    input_bytes = sum(os.path.getsize(f) for f in {s[-4] for s in splits})
+    par = spark.sparkContext.defaultParallelism
+    return max(1, min(len(splits), max(par, input_bytes // max(max_part, 1))))
+
+
+def fused_scan(spark: SparkSession, splits: list[tuple], read, kernel, out_schema) -> DataFrame:
+    """The one task skeleton of every fused-scan operator. The split list
+    ships as a broadcast and the tasks as a JVM-native Range of split ids
+    (a parallelize()d Python RDD would add a second Python hop per task),
+    so the task closure stays O(1) at any split count. The Range packs
+    contiguous split ids into `fused_task_count` tasks; each task opens
+    one ParquetFile per file (splits are file-ordered), feeds
+    `read(split, pf)` batches for its splits to `kernel`, and yields
+    the kernel's output batches."""
+    bc = spark.sparkContext.broadcast(list(splits))
+    sdf = spark.range(0, len(splits), numPartitions=fused_task_count(spark, splits))
 
     def gen(batches):
+        import pyarrow.parquet as pq
+
         def feed():
+            path = pf = None
             for b in batches:
                 for sid in b.column("id").to_pylist():
-                    f, rg, lo, hi = bc.value[sid]
-                    yield from _read_split(f, rg, lo, hi, cols, block_rows)
+                    split = bc.value[sid]
+                    if split[-4] != path:
+                        path = split[-4]
+                        pf = pq.ParquetFile(path)
+                    yield from read(split, pf)
 
         yield from kernel(feed())
 
     return sdf.mapInArrow(gen, out_schema)
-
-
-def encode_parquet_arrow(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    codecs: dict | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    compression: str | None = None,
-) -> DataFrame:
-    """Blocks DataFrame (same relation `encode_table` produces, minus the
-    optional stats columns — this path serves the in-memory roundtrip,
-    where blocks are decoded immediately and per-block min/max would be
-    computed only to be dropped)."""
-    cols = list(columns)
-    enc = _encode_fn(cols, block_rows, codecs, compression, has_bucket=False)
-    out_ddl = (
-        "part_id int, block_id long, bucket int, n_rows int, meta string, "
-        + ", ".join(f"`{c}` binary" for c in cols)
-    )
-    return _fused_scan_df(spark, path, cols, block_rows, enc, out_ddl)
 
 
 def roundtrip_parquet_arrow(
@@ -250,9 +245,9 @@ def roundtrip_parquet_arrow(
     inside the SAME mapInArrow task, so the multi-MB block payloads never
     cross into the JVM between the two kernels (two chained mapInArrow
     nodes run two Python workers per task with a full Arrow round-trip of
-    the blocks relation between them). Same kernels, same block bytes,
-    same decoded rows — measured 1.07 s → 0.74 s interleaved min on the
-    6M-row lineitem roundtrip, CRC-identical."""
+    the blocks relation between them). Same kernels, same decoded rows —
+    measured 1.07 s → 0.74 s interleaved min on the 6M-row lineitem
+    roundtrip, CRC-identical."""
     from parquet_spark.operators.decode import _decode_fn
     from parquet_spark.operators.encode import check_reserved_columns
 
@@ -260,8 +255,11 @@ def roundtrip_parquet_arrow(
     check_reserved_columns(cols)
     enc = _encode_fn(cols, block_rows, codecs, None, has_bucket=False)
     dec = _decode_fn(cols, out_schema, False)
-    return _fused_scan_df(
-        spark, path, cols, block_rows, lambda feed: dec(enc(feed)), out_schema
+    splits = plan_arrow_splits(path, spark.sparkContext.defaultParallelism, block_rows)
+    return fused_scan(
+        spark, splits,
+        lambda split, pf: _read_split(pf, *split[1:], cols, block_rows),
+        lambda feed: dec(enc(feed)), out_schema,
     )
 
 
@@ -278,37 +276,25 @@ def encode_splits_arrow(
     bloom_cols: list[str] | None = None,
 ) -> DataFrame:
     """Write-path fused scan+encode over pre-planned bucketed splits
-    [(bucket, file, rg, lo, hi)]: each task reads its slice with pyarrow,
-    tags the rows with the split's bucket id, and runs the standard
+    [(bucket, file, rg, lo, hi)]: each task reads its slices with pyarrow,
+    tags the rows with each split's bucket id, and runs the standard
     encode kernels — stats columns and side-band manifest included, so
     the blocks relation is exactly what `encode_table` would produce for
-    write_encoded's partition mode, minus the JVM row feed. Distribution
-    is a JVM-native Range over split indices + a broadcast split list
-    (single Python hop per task; see encode_parquet_arrow)."""
-    bc = spark.sparkContext.broadcast(list(splits))
-    sdf = spark.range(0, max(len(splits), 1), numPartitions=max(len(splits), 1))
+    write_encoded's partition mode, minus the JVM row feed. A task that
+    packs several splits still closes a block at every bucket change, so
+    block contents do not depend on the task count."""
+    from parquet_spark.operators.encode import BUCKET_COL
+
     cols = list(columns)
     enc = _encode_fn(
         cols, block_rows, codecs, compression, has_bucket=True,
         stats_cols=stats_cols, manifest_dir=manifest_dir, bloom_cols=bloom_cols,
     )
 
-    def gen(batches):
+    def read(split, pf):
         import pyarrow as pa
 
-        from parquet_spark.operators.encode import BUCKET_COL
+        for batch in _read_split(pf, *split[2:], cols, block_rows):
+            yield batch.append_column(BUCKET_COL, pa.array([split[0]] * batch.num_rows, pa.int32()))
 
-        def feed():
-            for b in batches:
-                for idx in b.column("id").to_pylist():
-                    if idx >= len(bc.value):
-                        continue  # empty split list: range(0,1) placeholder row
-                    bucket, f, rg, lo, hi = bc.value[idx]
-                    for batch in _read_split(f, rg, lo, hi, cols, block_rows):
-                        yield batch.append_column(
-                            BUCKET_COL, pa.array([bucket] * batch.num_rows, pa.int32())
-                        )
-
-        yield from enc(feed())
-
-    return sdf.mapInArrow(gen, out_ddl)
+    return fused_scan(spark, splits, read, enc, out_ddl)

@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 from parquet_spark.operators.decode import decode_table
 from parquet_spark.operators.encode import encode_table
 from parquet_spark.sources.arrow_scan import (
-    encode_parquet_arrow,
-    estimate_rows,
+    estimate_rows_files,
+    list_parquet_files,
     plan_arrow_splits,
+    roundtrip_parquet_arrow,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -28,7 +29,7 @@ def test_fused_scan_matches_spark_scan(spark):
     path = f"{SF_DIR}/lineitem.parquet"
     cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"]
     df = spark.read.parquet(path).select(*cols)
-    fused = decode_table(encode_parquet_arrow(spark, path, cols), df.schema)
+    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema)
     plain = decode_table(encode_table(df), df.schema)
     assert fused.count() == plain.count() == df.count()
     assert _crc(fused) == _crc(plain)
@@ -39,9 +40,7 @@ def test_fused_scan_with_codec_overrides(spark):
     path = f"{SF_DIR}/documents.parquet"
     cols = ["doc_id", "text"]
     df = spark.read.parquet(path).select(*cols)
-    fused = decode_table(
-        encode_parquet_arrow(spark, path, cols, codecs={"text": "fsst"}), df.schema
-    )
+    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema, codecs={"text": "fsst"})
     assert _crc(fused) == _crc(df)
 
 
@@ -51,16 +50,14 @@ def test_fused_scan_small_blocks_many_splits(spark):
     path = f"{SF_DIR}/orders.parquet"
     cols = ["o_orderkey", "o_orderdate"]
     df = spark.read.parquet(path).select(*cols)
-    fused = decode_table(
-        encode_parquet_arrow(spark, path, cols, block_rows=1024), df.schema
-    )
+    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema, block_rows=1024)
     assert fused.count() == df.count()
     assert _crc(fused) == _crc(df)
 
 
 def test_plan_splits_tile_rows_exactly():
     path = f"{SF_DIR}/lineitem.parquet"
-    total = estimate_rows(path)
+    total = estimate_rows_files(list_parquet_files(path))
     splits = plan_arrow_splits(path, parallelism=32)
     meta = pq.ParquetFile(path).metadata
     covered = 0
@@ -143,3 +140,174 @@ def test_write_encoded_arrow_resume_plan_drift_reencodes(spark, tmp_path, monkey
     assert s["buckets_skipped"] == 0  # plan drift -> full re-encode
     assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
     assert read_encoded(spark, path).count() == df.count()
+
+
+# ------------------------------------------------ task packing (one wave)
+
+def _max_stage_tasks(spark, group, fn):
+    """Run fn under a job group; the largest task count of its stages."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    return out, max(st.getStageInfo(s).numTasks for s in stages)
+
+
+def _eight_files(spark, tmp_path, n_rows=4000, seed=21):
+    from parquet_spark.sources.synth import write_sequences
+
+    inp = str(tmp_path / "seq8")
+    write_sequences(spark, inp, n_rows, seed=seed, n_partitions=8, mean_tokens=24)
+    assert len(list_parquet_files(inp)) == 8
+    return inp
+
+
+def test_roundtrip_packs_splits_into_one_wave(spark, tmp_path):
+    """8 files at parallelism 4: 8 whole-file splits, packed into at most
+    4 tasks, rows unchanged."""
+    inp = _eight_files(spark, tmp_path)
+    par = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(inp)
+    assert len(plan_arrow_splits(inp, par)) == 8
+    fused = roundtrip_parquet_arrow(spark, inp, df.columns, df.schema)
+    n, tasks = _max_stage_tasks(spark, "rt-pack", fused.count)
+    assert n == df.count()
+    assert tasks <= par
+    assert _crc_seq(fused) == _crc_seq(df)
+
+
+def test_write_encoded_arrow_packs_buckets_into_one_wave(spark, tmp_path, monkeypatch):
+    """Arrow-mode write of an 8-file input: 8 buckets (one per split) are
+    encoded by at most `parallelism` tasks, and every block stays inside
+    one bucket."""
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.plans import explain_partitioning
+    from parquet_spark.sources import arrow_scan
+
+    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
+    inp = _eight_files(spark, tmp_path)
+    df = spark.read.parquet(inp)
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "tbl")
+    r, tasks = _max_stage_tasks(
+        spark, "write-pack",
+        lambda: write_encoded(df, path, target_partitions=4, resume=False, block_rows=256),
+    )
+    assert read_snapshot(path)["bucket_mode"] == "arrow"
+    assert r["buckets_total"] == 8
+    assert tasks <= par
+    # the prediction comes from the same task-count helper the scan uses
+    line = explain_partitioning(df, target_partitions=4)
+    assert f"8 row-group/range splits in {min(8, par)} tasks" in line
+    data = pq.read_table(path + "/data", columns=["part_id", "bucket", "n_rows"]).to_pandas()
+    assert data["part_id"].nunique() <= par
+    assert data["bucket"].nunique() == 8
+    # one bucket per file: a block never spans two buckets in one task
+    rows = [pq.ParquetFile(f).metadata.num_rows for f in list_parquet_files(inp)]
+    assert len(data) == sum(-(-n // 256) for n in rows)
+    assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
+
+
+def test_write_encoded_arrow_partial_resume(spark, tmp_path, monkeypatch):
+    """Lose one task's output (its blocks part file, which holds several
+    buckets, and its manifest part): a resume re-encodes exactly those
+    buckets, duplicates none, and the table decodes to the input."""
+    from parquet_spark.operators.decode import read_encoded, read_manifest
+    from parquet_spark.operators.encode import write_encoded
+    from parquet_spark.sources import arrow_scan
+
+    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
+    inp = _eight_files(spark, tmp_path, seed=22)
+    df = spark.read.parquet(inp)
+    path = str(tmp_path / "tbl")
+    write_encoded(df, path, target_partitions=4, fingerprint="pr1", resume=False, block_rows=256)
+    data_dir, man_dir = os.path.join(path, "data"), os.path.join(path, "manifest")
+
+    def buckets_by_file(d):
+        return {
+            f: set(pq.read_table(os.path.join(d, f), columns=["bucket"]).column(0).to_pylist())
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+
+    def rows_per_bucket():
+        t = pq.read_table(data_dir, columns=["bucket", "n_rows"]).to_pandas()
+        return t.groupby("bucket")["n_rows"].sum().to_dict()
+
+    before_rows = rows_per_bucket()
+    before = buckets_by_file(data_dir)
+    victim, lost = next((f, b) for f, b in sorted(before.items()) if len(b) >= 2)
+    os.remove(os.path.join(data_dir, victim))
+    man_victims = [f for f, b in buckets_by_file(man_dir).items() if b & lost]
+    assert len(man_victims) == 1  # one manifest part per task
+    os.remove(os.path.join(man_dir, man_victims[0]))
+
+    r = write_encoded(df, path, target_partitions=4, fingerprint="pr1", resume=True, block_rows=256)
+    assert r["buckets_total"] == 8
+    assert r["buckets_skipped"] == 8 - len(lost)
+    after = buckets_by_file(data_dir)
+    fresh = {f: b for f, b in after.items() if f not in before}
+    assert set().union(*fresh.values()) == lost  # only the lost buckets re-encoded
+    assert rows_per_bucket() == before_rows  # no bucket written twice
+    man = read_manifest(spark, path).groupBy("bucket", "column").agg(F.sum("n_values").alias("n"))
+    assert {(row["bucket"], row["n"]) for row in man.where(F.col("column") == "doc_id").collect()} == set(
+        before_rows.items()
+    )
+    assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
+
+
+# ------------------------------------------------- zero-row-group inputs
+
+def _zero_row_group_files(src_schema, d, n):
+    os.makedirs(d, exist_ok=True)
+    for i in range(n):
+        pq.ParquetWriter(os.path.join(d, f"part-{i}.parquet"), src_schema).close()
+    assert all(pq.ParquetFile(f).metadata.num_row_groups == 0 for f in list_parquet_files(d))
+
+
+def test_roundtrip_zero_row_group_files(spark, tmp_path, monkeypatch):
+    """Files with no row groups at all plan to no splits (not a
+    ZeroDivisionError) and round-trip to the same empty result as the
+    Spark feed, also through the query-level gate."""
+    import pyarrow as pa
+
+    import __spark_entry__ as entry
+    from parquet_spark.operators.decode import roundtrip_table
+    from parquet_spark.sources import arrow_scan
+
+    d = str(tmp_path / "t.parquet")
+    _zero_row_group_files(pa.schema([("k", pa.int64()), ("s", pa.string())]), d, 2)
+    assert plan_arrow_splits(d, parallelism=4) == []
+    df = spark.read.parquet(d)
+    fused = roundtrip_parquet_arrow(spark, d, ["k", "s"], df.schema)
+    plain = roundtrip_table(df)
+    assert fused.schema == plain.schema
+    assert fused.count() == plain.count() == 0
+    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 0)  # force the fused gate
+    assert entry._roundtrip_proj(spark, str(tmp_path), "t", ["k", "s"]).count() == 0
+
+
+def test_read_encoded_zero_row_group_blocks(spark, tmp_path):
+    """An encoded table whose blocks files hold no row groups reads as
+    empty through read_encoded, like the Spark scan of the same files."""
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import write_encoded
+
+    path = str(tmp_path / "tbl")
+    df = spark.range(0, 300).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    write_encoded(df, path, target_partitions=2, resume=False)
+    data_dir = os.path.join(path, "data")
+    files = list_parquet_files(data_dir)
+    schema = pq.ParquetFile(files[0]).schema_arrow
+    for f in files:
+        os.remove(f)
+    _zero_row_group_files(schema, data_dir, 2)
+    got = read_encoded(spark, path)
+    assert got.schema == df.schema
+    assert got.count() == 0
+    assert spark.read.parquet(data_dir).count() == 0
