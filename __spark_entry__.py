@@ -21,76 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-
-def _roundtrip(df: DataFrame, codecs: dict | None = None) -> DataFrame:
-    """encode→decode a DataFrame fully in-memory through the engine.
-
-    Scale-adaptive parallelism (r6, guide §2): when the scan yields fewer
-    partitions than cores — which only happens when the input is small,
-    since Spark splits files at maxPartitionBytes — a repartition to the
-    core count spreads the encode kernels across every core for the price
-    of shuffling that small input once. Large inputs already arrive with
-    >= core-count partitions and take no shuffle, and inputs so small
-    that a per-core share would be under ~128 KB skip the shuffle too
-    (measured: repartitioning a 600 KB table cost more than the serial
-    encode it parallelized). Row values are unchanged either way (the
-    oracle compares canonicalized rows).
-
-    Encode and decode run FUSED in one mapInArrow stage (r6 session 2,
-    guide §4.1, `roundtrip_table`): the same kernels produce and consume
-    the same block bytes, but the blocks relation no longer round-trips
-    through the JVM between two Python workers — measured 1.26 s → 0.86 s
-    on the sf1.0-scale documents-fsst leg, CRC-identical."""
-    import os as _os
-
-    from parquet_spark.operators.decode import roundtrip_table
-
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        try:
-            sz = sum(
-                _os.path.getsize(f[len("file:"):])
-                for f in df.inputFiles()
-                if f.startswith("file:")
-            )
-        except OSError:
-            sz = 0
-        if sz >= par * (128 << 10):
-            df = df.repartition(par)
-    return roundtrip_table(df, codecs=codecs)
-
-
-def _roundtrip_proj(spark: SparkSession, sf_dir: str, table: str, columns: list[str], codecs: dict | None = None) -> DataFrame:
-    """Pure-projection roundtrip (no computed columns) with an
-    Arrow-native scan for large inputs (r6, guide §4.1/§8.4): above
-    MIN_FUSED_ROWS the JVM→Python row transpose of the Spark scan feed
-    dominates the leg (measured: identity mapInArrow 2.5 s vs 0.27 s scan
-    on 6M-row lineitem), so the encode reads its row-group slice with
-    pyarrow inside the task instead — same encode kernels, same decoded
-    rows (oracle-checked), 2.83 s → 1.51 s measured on the auto roundtrip.
-    Small inputs keep the plain path (split planning would cost more than
-    the feed). The decode is additionally fused into the SAME stage (r6
-    session 2, `roundtrip_parquet_arrow`): read+encode+decode in one
-    mapInArrow, so the block payloads never cross into the JVM between
-    the kernels — 1.07 s → 0.74 s measured on the 6M-row auto roundtrip,
-    CRC-identical."""
-    path = f"{sf_dir}/{table}.parquet"
-    df = _t(spark, sf_dir, table).select(*columns)
-    try:
-        from parquet_spark.sources.arrow_scan import (
-            MIN_FUSED_ROWS,
-            estimate_rows_files,
-            list_parquet_files,
-            roundtrip_parquet_arrow,
-        )
-
-        if estimate_rows_files(list_parquet_files(path)) >= MIN_FUSED_ROWS:
-            return roundtrip_parquet_arrow(
-                spark, path, list(columns), df.schema, codecs=codecs
-            )
-    except (OSError, ValueError):
-        pass  # non-local or unreadable input: use the Spark scan
-    return _roundtrip(df, codecs=codecs)
+from parquet_spark.operators.decode import roundtrip_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -132,9 +63,11 @@ def _q_roundtrip_codecs_forced(spark, sf_dir):
     encodings E1-E15), so one oracle row certifies all four kernels.
     Consolidates the former roundtrip_dict_strings / roundtrip_rle_ints /
     roundtrip_forbp_ints / roundtrip_plain_floats queries (r1-r4 green)."""
-    return _roundtrip_proj(
-        spark, sf_dir, "lineitem",
-        ["l_orderkey", "l_partkey", "l_linenumber", "l_extendedprice", "l_returnflag"],
+    df = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_linenumber", "l_extendedprice", "l_returnflag"
+    )
+    return roundtrip_table(
+        df,
         codecs={
             "l_orderkey": "rle", "l_partkey": "for_bp", "l_linenumber": "rle",
             "l_extendedprice": "plain", "l_returnflag": "dict",
@@ -143,17 +76,16 @@ def _q_roundtrip_codecs_forced(spark, sf_dir):
 
 
 def _q_roundtrip_delta_sorted(spark, sf_dir):
-    # the fused path preserves file order within each split, which is what
+    # from sf0.1 up, orders plans into enough row-range splits for the
+    # fused feed, which keeps file order within each split: that is what
     # keeps the o_orderkey deltas narrow (a repartition would widen them)
-    return _roundtrip_proj(
-        spark, sf_dir, "orders", ["o_orderkey", "o_orderdate"],
-        codecs={"o_orderkey": "delta_bp"},
-    )
+    df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    return roundtrip_table(df, codecs={"o_orderkey": "delta_bp"})
 
 
 def _q_roundtrip_fsst_text(spark, sf_dir):
     df = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return _roundtrip(df, codecs={"text": "fsst"})
+    return roundtrip_table(df, codecs={"text": "fsst"})
 
 
 def _q_roundtrip_map(spark, sf_dir):
@@ -175,7 +107,7 @@ def _q_roundtrip_map(spark, sf_dir):
         "doc_id",
         F.when(F.col("doc_id") % 11 == 0, F.lit(None)).otherwise(attrs).alias("attrs"),
     )
-    rt = _roundtrip(df)
+    rt = roundtrip_table(df)
     e = rt.select("doc_id", F.explode(F.map_entries("attrs")).alias("kv"))
     return e.select(
         "doc_id", F.col("kv.key").alias("mkey"), F.col("kv.value").alias("mval")
@@ -186,10 +118,10 @@ def _q_roundtrip_alp_decimal_floats(spark, sf_dir):
     """Price-like doubles (2 decimals) auto-select the ALP codec: exact
     10^e mantissas + int codec; the oracle is the identity, proving the
     rescale is bit-lossless."""
-    return _roundtrip_proj(
-        spark, sf_dir, "lineitem",
-        ["l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax"],
+    df = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax"
     )
+    return roundtrip_table(df)
 
 
 def _q_roundtrip_optional_nulls(spark, sf_dir):
@@ -197,7 +129,7 @@ def _q_roundtrip_optional_nulls(spark, sf_dir):
         "event_id",
         F.when(F.col("event_type") == "click", F.lit(None).cast("double")).otherwise(F.col("value")).alias("v"),
     )
-    return _roundtrip(df)
+    return roundtrip_table(df)
 
 
 def _q_roundtrip_temporal_bool(spark, sf_dir):
@@ -207,15 +139,15 @@ def _q_roundtrip_temporal_bool(spark, sf_dir):
     df = _t(spark, sf_dir, "events").select(
         "event_id", "ts", (F.col("value") > 10.0).alias("big")
     )
-    return _roundtrip(df)
+    return roundtrip_table(df)
 
 
 def _q_roundtrip_auto_all(spark, sf_dir):
     """Auto-chooser across a mixed-type projection — no overrides."""
-    return _roundtrip_proj(
-        spark, sf_dir, "lineitem",
-        ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"],
+    df = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"
     )
+    return roundtrip_table(df)
 
 
 def _q_roundtrip_nested_struct(spark, sf_dir):
@@ -230,7 +162,7 @@ def _q_roundtrip_nested_struct(spark, sf_dir):
             F.array("l_quantity", "l_extendedprice").alias("a"),
         )
     )
-    rt = _roundtrip(df)
+    rt = roundtrip_table(df)
     return rt.select(
         "l_orderkey", "l_linenumber",
         F.col("s.l_partkey").alias("l_partkey"),
@@ -264,7 +196,7 @@ def _q_roundtrip_embeddings(spark, sf_dir):
     flat = lambda d: d.select(
         "vec_id", F.posexplode("embedding").alias("idx", "val"), "label"
     ).withColumn("idx", F.col("idx").cast("int"))
-    out = flat(_roundtrip(df))
+    out = flat(roundtrip_table(df))
     path = tempfile.mkdtemp(prefix="psq-interop-") + "/list.parquet"
     parquet_raw.write_file(path, df.toArrow(), compression="snappy")
     interop = flat(spark.createDataFrame(pq.read_table(path)))
@@ -286,7 +218,7 @@ def _q_roundtrip_uint64_extremes(spark, sf_dir):
         .otherwise(F.lit(i64_max) - F.col("o_orderkey"))
         .alias("u64"),
     )
-    return _roundtrip(df)
+    return roundtrip_table(df)
 
 
 def _q_roundtrip_decimal(spark, sf_dir):
@@ -319,7 +251,7 @@ def _q_roundtrip_decimal(spark, sf_dir):
         "l_orderkey", "l_linenumber",
         (F.col("price_dec") * 100).cast("long").alias("price_cents"),
     )
-    out = cents(_roundtrip(df))
+    out = cents(roundtrip_table(df))
     path = tempfile.mkdtemp(prefix="psq-interop-") + "/dec.parquet"
     parquet_raw.write_file(path, df.toArrow(), compression="snappy")
     interop = cents(spark.createDataFrame(pq.read_table(path)))

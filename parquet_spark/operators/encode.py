@@ -36,6 +36,7 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_spark.operators.repartition import salted_repartition
@@ -487,7 +488,7 @@ def _scan_is_byte_balanced(df: DataFrame) -> bool | None:
     short-circuits)."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
         return None
     splittable = False
     for line in plan.splitlines():
@@ -760,13 +761,14 @@ def write_encoded(
         # decision and silently change what a bucket id means
         chosen = snap.get("bucket_mode", "salted")
         if chosen == "arrow":
-            from parquet_spark.sources.arrow_scan import bare_parquet_files, plan_encode_splits
+            from parquet_spark.sources.arrow_scan import fused_splits
 
-            files = bare_parquet_files(df)
-            if files is not None:
-                arrow_splits, arrow_plan = plan_encode_splits(files, par, block_rows)
+            # want=0: any plan of >= 2 splits; a recorded plan has that many
+            fused = fused_splits(df, 0, block_rows)
+            if fused is not None:
+                arrow_splits, arrow_plan = fused
             if (
-                files is None
+                fused is None
                 or snap.get("partition_plan") != arrow_plan
                 or snap.get("n_buckets") != len(arrow_splits)
             ):
@@ -788,24 +790,18 @@ def write_encoded(
     if chosen == "auto":
         chosen = "salted"
         if cluster_col is None:
-            # bare local parquet relation with a LARGE row count: feed the
-            # encode tasks with pyarrow reads of (file, row-group, range)
-            # splits instead of the Spark scan — same kernels, no
-            # JVM->Python row transpose (sources/arrow_scan.py; measured
-            # 2.5 s of pure conversion on a 6M-row feed, while a 300k-row
-            # nested-array table measured FASTER through the Spark feed —
-            # hence the row gate, which scales with what actually costs:
-            # the per-row transpose). Split planning is zero-footer-IO in
-            # the many-files regime; balance holds by construction
-            # (row-range splits), so no probe job is needed either.
-            from parquet_spark.sources import arrow_scan
+            # the one fused-feed gate (sources/arrow_scan.fused_splits)
+            # decides: a bare local parquet relation or plain-column
+            # projection with enough splits for min(target_partitions,
+            # cores) tasks is read with pyarrow inside the encode tasks —
+            # same kernels, no JVM->Python row transpose, no probe job
+            # (row-range splits are balanced by construction)
+            from parquet_spark.sources.arrow_scan import fused_splits
 
-            files = arrow_scan.bare_parquet_files(df)
-            if files is not None and arrow_scan.estimate_rows_files(files) >= arrow_scan.MIN_FUSED_ROWS:
-                cand_splits, cand_plan = arrow_scan.plan_encode_splits(files, par, block_rows)
-                if len(cand_splits) >= max(2, min(target_partitions, par) // 2):
-                    chosen = "arrow"
-                    arrow_splits, arrow_plan = cand_splits, cand_plan
+            fused = fused_splits(df, min(target_partitions, par), block_rows)
+            if fused is not None:
+                chosen = "arrow"
+                arrow_splits, arrow_plan = fused
         if chosen == "salted":
             # parallelism yardstick: what would the SALTED path actually give?
             # min(target_partitions, cluster cores) — when the input already

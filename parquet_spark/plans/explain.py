@@ -141,16 +141,14 @@ def explain_partitioning(df: DataFrame, target_partitions: int | None = None) ->
     npart = df.rdd.getNumPartitions()
     from parquet_spark.sources import arrow_scan
 
-    files = arrow_scan.bare_parquet_files(df)
-    if files is not None and arrow_scan.estimate_rows_files(files) >= arrow_scan.MIN_FUSED_ROWS:
-        splits, _plan = arrow_scan.plan_encode_splits(files, par)
-        if len(splits) >= max(2, min(tp, par) // 2):
-            return (
-                f"arrow fused scan+encode: bare local parquet relation, "
-                f"{len(splits)} row-group/range splits in "
-                f"{arrow_scan.fused_task_count(spark, splits)} tasks, read with "
-                f"pyarrow in-task (no JVM row feed, no shuffle)"
-            )
+    fused = arrow_scan.fused_splits(df, min(tp, par))
+    if fused is not None:
+        return (
+            f"arrow fused scan+encode: local parquet relation, "
+            f"{len(fused[0])} row-group/range splits in "
+            f"{arrow_scan.fused_task_count(spark, fused[0])} tasks, read with "
+            f"pyarrow in-task (no JVM row feed, no shuffle)"
+        )
     if npart < max(2, min(tp, par) // 2):
         return (
             f"salted shuffle: {npart} input partition(s) underuse "

@@ -22,6 +22,14 @@ min, same session).
 
 Scale behaviour (the rules are size-derived, not tuned to local[32]):
 
+- **one gate**: `fused_splits` decides for every caller (write_encoded,
+  decode.roundtrip_table, explain_partitioning). The fused feed runs
+  when df is a bare local parquet relation or a plain-column projection
+  of one, and the split plan below yields at least max(2, want // 2)
+  splits (`want` = the tasks the caller would run). The split count
+  comes from the footers the planner reads anyway; there is no row
+  threshold. With `spark.sql.files.ignoreCorruptFiles` on, the Spark
+  scan always runs, because only it skips unreadable files.
 - **many files** (>= default parallelism): one split per file and the
   driver reads NO footers — planning is file listing only, the same
   metadata Spark's own planner needs. The 100 TB case lands here.
@@ -43,21 +51,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn, _parse_bytes_conf
-
-# below this row count the JVM feed is cheaper than split planning +
-# per-task footer reads; callers should use the plain encode_table path.
-# Measured break points (interleaved minima, local[32]): a 600k-row flat
-# lineitem roundtrip reads 0.48 s fused vs 0.73 s through the Spark feed,
-# and after the Range+broadcast split distribution removed the extra
-# Python hop, even the 300k-row sequences table (nested token arrays)
-# writes faster fused (0.58 s vs 0.67 s, paired median 1.12x). Below
-# ~200k rows the work per task is too small for the split machinery to
-# matter either way; the quantity that actually costs is rows through
-# the per-row transpose.
-MIN_FUSED_ROWS = 200_000
 
 
 def list_parquet_files(path: str) -> list[str]:
@@ -74,58 +71,73 @@ def list_parquet_files(path: str) -> list[str]:
     raise FileNotFoundError(path)
 
 
-def estimate_rows_files(files: list[str], max_footers: int = 64) -> int:
-    """Row-count estimate from footer metadata with bounded driver IO:
-    exact when the file count is small, first-file-rows x file-count
-    beyond that (row counts per part file are near-uniform for any sanely
-    written table, and the estimate only gates the choice between the
-    fused and plain scan paths)."""
-    import pyarrow.parquet as pq
-
-    if not files:
-        return 0
-    if len(files) <= max_footers:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    return pq.ParquetFile(files[0]).metadata.num_rows * len(files)
+def ignores_corrupt_files(spark: SparkSession) -> bool:
+    """`spark.sql.files.ignoreCorruptFiles` is on: only the Spark scan
+    skips unreadable files, so no fused read may run."""
+    return spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false").lower() == "true"
 
 
-def bare_parquet_files(df: DataFrame) -> list[str] | None:
-    """Local parquet files of a DataFrame whose optimized plan is a BARE
-    file relation — no projection, filter, or computed column — i.e. the
-    only shape the fused Arrow feed reproduces exactly (anything Catalyst
-    computes must keep the Spark scan). None when the shape or storage
-    doesn't qualify; the caller falls back to the JVM feed."""
+def fused_splits(
+    df: DataFrame, want: int, block_rows: int = DEFAULT_BLOCK_ROWS
+) -> tuple[list[tuple[int, str, int, int, int]], dict] | None:
+    """The one fused-feed gate. Returns the bucketed split plan
+    [(bucket, file, rg, lo, hi)] and the plan-identity dict the snapshot
+    records, or None for the Spark feed. The fused feed needs:
+
+    - an optimized plan that is a bare local parquet relation or a
+      projection of its plain data columns (distinct; no alias, computed,
+      partition or metadata column) — the only shapes a pyarrow read of
+      the files reproduces exactly;
+    - at least max(2, want // 2) splits, enough to occupy the `want`
+      tasks the caller would otherwise run;
+    - readable footers, and `spark.sql.files.ignoreCorruptFiles` off.
+
+    A resume recomputes this plan and compares it for equality — any
+    drift (file set, core count, block size) invalidates recorded bucket
+    ids and forces a full re-encode, like partition-mode conf drift."""
+    spark = df.sparkSession
+    if ignores_corrupt_files(spark):
+        return None
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
+        node = df._jdf.queryExecution().optimizedPlan()
+        if node.getClass().getSimpleName() == "Project":
+            proj = node.projectList()
+            if any(proj.apply(i).getClass().getSimpleName() != "AttributeReference" for i in range(proj.size())):
+                return None
+            node = node.child()
+        if node.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = node.relation()
+        if (
+            rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        ):
+            return None
+        data_cols = set(rel.dataSchema().fieldNames())
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
         return None
-    lines = [ln for ln in plan.splitlines() if ln.strip()]
-    if len(lines) != 1:
-        return None
-    node = lines[0].lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-    if node != "Relation" or " parquet" not in lines[0]:
+    cols = df.columns
+    if not cols or len(set(cols)) != len(cols) or not set(cols) <= data_cols:
         return None
     files = df.inputFiles()
     if not files or not all(f.startswith("file:") for f in files):
         return None
-    out = sorted(f[len("file:") :] for f in files)
-    return out if all(os.path.exists(f) for f in out) else None
-
-
-def plan_encode_splits(
-    files: list[str], parallelism: int, block_rows: int = DEFAULT_BLOCK_ROWS
-) -> tuple[list[tuple[int, str, int, int, int]], dict]:
-    """Bucketed splits for the write path: [(bucket, file, rg, lo, hi)]
-    plus the plan-identity dict the snapshot records. A resume recomputes
-    this plan and compares for equality — any drift (file set, core
-    count, block size) invalidates recorded bucket ids and forces a full
-    re-encode, exactly like partition-mode conf drift."""
-    raw = _plan_splits_for_files(files, parallelism, block_rows)
+    files = sorted(f[len("file:") :] for f in files)
+    if not all(os.path.exists(f) for f in files):
+        return None
+    par = spark.sparkContext.defaultParallelism
+    try:
+        raw = _plan_splits_for_files(files, par, block_rows)
+    except (OSError, ValueError):  # unreadable footer (pyarrow's
+        # ArrowInvalid is a ValueError): the Spark scan reports it
+        return None
+    if len(raw) < max(2, want // 2):
+        return None
     splits = [(i, f, rg, lo, hi) for i, (f, rg, lo, hi) in enumerate(raw)]
     plan = {
         "mode": "arrow",
         "n_splits": len(splits),
-        "parallelism": int(parallelism),
+        "parallelism": int(par),
         "block_rows": int(block_rows),
         "n_files": len(files),
     }
@@ -230,37 +242,6 @@ def fused_scan(spark: SparkSession, splits: list[tuple], read, kernel, out_schem
         yield from kernel(feed())
 
     return sdf.mapInArrow(gen, out_schema)
-
-
-def roundtrip_parquet_arrow(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    out_schema,
-    codecs: dict | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-) -> DataFrame:
-    """Single-stage read+encode+decode roundtrip (r6, guide §4.1): the
-    fused scan feeds `_encode_fn` AND the block batches feed `_decode_fn`
-    inside the SAME mapInArrow task, so the multi-MB block payloads never
-    cross into the JVM between the two kernels (two chained mapInArrow
-    nodes run two Python workers per task with a full Arrow round-trip of
-    the blocks relation between them). Same kernels, same decoded rows —
-    measured 1.07 s → 0.74 s interleaved min on the 6M-row lineitem
-    roundtrip, CRC-identical."""
-    from parquet_spark.operators.decode import _decode_fn
-    from parquet_spark.operators.encode import check_reserved_columns
-
-    cols = list(columns)
-    check_reserved_columns(cols)
-    enc = _encode_fn(cols, block_rows, codecs, None, has_bucket=False)
-    dec = _decode_fn(cols, out_schema, False)
-    splits = plan_arrow_splits(path, spark.sparkContext.defaultParallelism, block_rows)
-    return fused_scan(
-        spark, splits,
-        lambda split, pf: _read_split(pf, *split[1:], cols, block_rows),
-        lambda feed: dec(enc(feed)), out_schema,
-    )
 
 
 def encode_splits_arrow(

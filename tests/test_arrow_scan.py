@@ -8,14 +8,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_spark.operators.decode import decode_table
+from parquet_spark.operators.decode import decode_table, roundtrip_table
 from parquet_spark.operators.encode import encode_table
-from parquet_spark.sources.arrow_scan import (
-    estimate_rows_files,
-    list_parquet_files,
-    plan_arrow_splits,
-    roundtrip_parquet_arrow,
-)
+from parquet_spark.sources.arrow_scan import list_parquet_files, plan_arrow_splits
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -25,22 +20,31 @@ def _crc(df):
     return df.agg(F.sum(F.crc32(F.concat_ws("\x1f", *cols)))).collect()[0][0]
 
 
+def _fused(df):
+    """df, after asserting it reads through the fused feed (a Range of
+    split ids), not a Spark file scan."""
+    assert "Range (" in df._jdf.queryExecution().executedPlan().toString()
+    return df
+
+
 def test_fused_scan_matches_spark_scan(spark):
     path = f"{SF_DIR}/lineitem.parquet"
     cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"]
     df = spark.read.parquet(path).select(*cols)
-    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema)
+    fused = _fused(roundtrip_table(df))
     plain = decode_table(encode_table(df), df.schema)
     assert fused.count() == plain.count() == df.count()
     assert _crc(fused) == _crc(plain)
     assert fused.schema == plain.schema
 
 
-def test_fused_scan_with_codec_overrides(spark):
-    path = f"{SF_DIR}/documents.parquet"
-    cols = ["doc_id", "text"]
-    df = spark.read.parquet(path).select(*cols)
-    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema, codecs={"text": "fsst"})
+def test_fused_scan_with_codec_overrides(spark, tmp_path):
+    # documents is one small row group (the Spark feed); rewritten with 4
+    # row groups it plans into 4 splits and takes the fused feed
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pq.read_table(f"{SF_DIR}/documents.parquet"), path, row_group_size=125)
+    df = spark.read.parquet(path).select("doc_id", "text")
+    fused = _fused(roundtrip_table(df, codecs={"text": "fsst"}))
     assert _crc(fused) == _crc(df)
 
 
@@ -50,14 +54,13 @@ def test_fused_scan_small_blocks_many_splits(spark):
     path = f"{SF_DIR}/orders.parquet"
     cols = ["o_orderkey", "o_orderdate"]
     df = spark.read.parquet(path).select(*cols)
-    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema, block_rows=1024)
+    fused = _fused(roundtrip_table(df, block_rows=1024))
     assert fused.count() == df.count()
     assert _crc(fused) == _crc(df)
 
 
 def test_plan_splits_tile_rows_exactly():
     path = f"{SF_DIR}/lineitem.parquet"
-    total = estimate_rows_files(list_parquet_files(path))
     splits = plan_arrow_splits(path, parallelism=32)
     meta = pq.ParquetFile(path).metadata
     covered = 0
@@ -66,7 +69,7 @@ def test_plan_splits_tile_rows_exactly():
         end = n if hi < 0 else hi
         assert 0 <= lo <= end <= n
         covered += end - lo
-    assert covered == total
+    assert covered == meta.num_rows
 
 
 def test_plan_splits_many_files_no_footer_reads(tmp_path):
@@ -93,16 +96,14 @@ def _crc_seq(df):
     ).collect()[0]["c"]
 
 
-def test_write_encoded_arrow_mode_roundtrip(spark, tmp_path, monkeypatch):
-    """auto on a bare local parquet scan above the row threshold selects
+def test_write_encoded_arrow_mode_roundtrip(spark, tmp_path):
+    """auto on a bare local parquet scan of 4 files (4 splits) selects
     the Arrow feed; the table it writes is bit-identical on decode and
-    fully resumable. (Threshold lowered so the small fixture qualifies.)"""
+    fully resumable."""
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import read_snapshot, write_encoded
-    from parquet_spark.sources import arrow_scan
     from parquet_spark.sources.synth import write_sequences
 
-    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
     inp = str(tmp_path / "seq")
     write_sequences(spark, inp, 3000, seed=11, n_partitions=4, mean_tokens=48)
     df = spark.read.parquet(inp)
@@ -121,21 +122,20 @@ def test_write_encoded_arrow_mode_roundtrip(spark, tmp_path, monkeypatch):
     assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
 
 
-def test_write_encoded_arrow_resume_plan_drift_reencodes(spark, tmp_path, monkeypatch):
+def test_write_encoded_arrow_resume_plan_drift_reencodes(spark, tmp_path):
     """A resume whose recomputed split plan differs from the recorded one
     (here: different block_rows) must re-encode rather than trust stale
     bucket ids."""
     from parquet_spark.operators.decode import read_encoded
-    from parquet_spark.operators.encode import write_encoded
-    from parquet_spark.sources import arrow_scan
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
     from parquet_spark.sources.synth import write_sequences
 
-    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
     inp = str(tmp_path / "seq")
     write_sequences(spark, inp, 2000, seed=12, n_partitions=4, mean_tokens=48)
     df = spark.read.parquet(inp)
     path = str(tmp_path / "tbl")
     write_encoded(df, path, target_partitions=4, fingerprint="ar1", resume=False, block_rows=512)
+    assert read_snapshot(path)["bucket_mode"] == "arrow"
     s = write_encoded(df, path, target_partitions=4, fingerprint="ar1", resume=True, block_rows=256)
     assert s["buckets_skipped"] == 0  # plan drift -> full re-encode
     assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
@@ -173,23 +173,21 @@ def test_roundtrip_packs_splits_into_one_wave(spark, tmp_path):
     par = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(inp)
     assert len(plan_arrow_splits(inp, par)) == 8
-    fused = roundtrip_parquet_arrow(spark, inp, df.columns, df.schema)
+    fused = _fused(roundtrip_table(df))
     n, tasks = _max_stage_tasks(spark, "rt-pack", fused.count)
     assert n == df.count()
     assert tasks <= par
     assert _crc_seq(fused) == _crc_seq(df)
 
 
-def test_write_encoded_arrow_packs_buckets_into_one_wave(spark, tmp_path, monkeypatch):
+def test_write_encoded_arrow_packs_buckets_into_one_wave(spark, tmp_path):
     """Arrow-mode write of an 8-file input: 8 buckets (one per split) are
     encoded by at most `parallelism` tasks, and every block stays inside
     one bucket."""
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import read_snapshot, write_encoded
     from parquet_spark.plans import explain_partitioning
-    from parquet_spark.sources import arrow_scan
 
-    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
     inp = _eight_files(spark, tmp_path)
     df = spark.read.parquet(inp)
     par = spark.sparkContext.defaultParallelism
@@ -213,19 +211,18 @@ def test_write_encoded_arrow_packs_buckets_into_one_wave(spark, tmp_path, monkey
     assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
 
 
-def test_write_encoded_arrow_partial_resume(spark, tmp_path, monkeypatch):
+def test_write_encoded_arrow_partial_resume(spark, tmp_path):
     """Lose one task's output (its blocks part file, which holds several
     buckets, and its manifest part): a resume re-encodes exactly those
     buckets, duplicates none, and the table decodes to the input."""
     from parquet_spark.operators.decode import read_encoded, read_manifest
-    from parquet_spark.operators.encode import write_encoded
-    from parquet_spark.sources import arrow_scan
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
 
-    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
     inp = _eight_files(spark, tmp_path, seed=22)
     df = spark.read.parquet(inp)
     path = str(tmp_path / "tbl")
     write_encoded(df, path, target_partitions=4, fingerprint="pr1", resume=False, block_rows=256)
+    assert read_snapshot(path)["bucket_mode"] == "arrow"
     data_dir, man_dir = os.path.join(path, "data"), os.path.join(path, "manifest")
 
     def buckets_by_file(d):
@@ -270,26 +267,20 @@ def _zero_row_group_files(src_schema, d, n):
     assert all(pq.ParquetFile(f).metadata.num_row_groups == 0 for f in list_parquet_files(d))
 
 
-def test_roundtrip_zero_row_group_files(spark, tmp_path, monkeypatch):
+def test_roundtrip_zero_row_group_files(spark, tmp_path):
     """Files with no row groups at all plan to no splits (not a
-    ZeroDivisionError) and round-trip to the same empty result as the
-    Spark feed, also through the query-level gate."""
+    ZeroDivisionError) and round-trip to the empty result, bare and
+    projected."""
     import pyarrow as pa
-
-    import __spark_entry__ as entry
-    from parquet_spark.operators.decode import roundtrip_table
-    from parquet_spark.sources import arrow_scan
 
     d = str(tmp_path / "t.parquet")
     _zero_row_group_files(pa.schema([("k", pa.int64()), ("s", pa.string())]), d, 2)
     assert plan_arrow_splits(d, parallelism=4) == []
     df = spark.read.parquet(d)
-    fused = roundtrip_parquet_arrow(spark, d, ["k", "s"], df.schema)
-    plain = roundtrip_table(df)
-    assert fused.schema == plain.schema
-    assert fused.count() == plain.count() == 0
-    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 0)  # force the fused gate
-    assert entry._roundtrip_proj(spark, str(tmp_path), "t", ["k", "s"]).count() == 0
+    for src in (df, df.select("s", "k")):
+        got = roundtrip_table(src)
+        assert got.schema == src.schema
+        assert got.count() == 0
 
 
 def test_read_encoded_zero_row_group_blocks(spark, tmp_path):

@@ -3,8 +3,8 @@
 - `read_encoded` bare reads decode via a fused pyarrow blocks scan
   (Range + broadcast split plan, no JVM hop for payloads) and must equal
   the Spark-scan + decode_table path row for row.
-- `roundtrip_table` / `roundtrip_parquet_arrow` run encode+decode in ONE
-  mapInArrow stage and must equal the two-stage chain.
+- `roundtrip_table` runs encode+decode in ONE mapInArrow stage, over
+  either feed, and must equal the two-stage chain.
 """
 
 from __future__ import annotations
@@ -207,13 +207,15 @@ def test_fused_read_packs_fragmented_files(spark, tmp_path):
     assert fused.count() == 1600
 
 
-def test_roundtrip_parquet_arrow_matches(spark):
-    from parquet_spark.sources.arrow_scan import roundtrip_parquet_arrow
+def test_roundtrip_table_fused_projection_matches(spark):
+    """A plain-column projection of a multi-split file takes the fused
+    feed (pyarrow reads in a Range of split ids) and returns the input."""
+    from parquet_spark.operators.decode import roundtrip_table
 
-    path = f"{SF_DIR}/lineitem.parquet"
-    cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"]
-    df = spark.read.parquet(path).select(*cols)
-    fused = roundtrip_parquet_arrow(spark, path, cols, df.schema)
+    cols = ["l_linestatus", "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"]
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(*cols)
+    fused = roundtrip_table(df)
+    assert "Range (" in fused._jdf.queryExecution().executedPlan().toString()
     assert fused.schema == df.schema
     assert fused.count() == df.count()
     assert _crc(fused) == _crc(df)

@@ -1,0 +1,164 @@
+"""One gate, `arrow_scan.fused_splits`, chooses between the fused Arrow
+feed and the Spark feed for write_encoded, roundtrip_table and
+explain_partitioning. The three must agree for every input shape, and
+either feed must return the input's rows."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from parquet_spark.operators.decode import decode_table, read_encoded, roundtrip_table
+from parquet_spark.operators.encode import read_snapshot, write_encoded
+from parquet_spark.plans import explain_partitioning
+from parquet_spark.sources.arrow_scan import fused_splits, list_parquet_files
+
+N = 4000
+
+
+def _crc(df):
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in df.columns]
+    return df.agg(F.sum(F.crc32(F.concat_ws("\x1f", *cols)))).collect()[0][0]
+
+
+def _table(lo: int, hi: int) -> pa.Table:
+    k = pa.array(range(lo, hi), pa.int64())
+    return pa.table({
+        "k": k,
+        "s": pa.array([f"w{i % 37}" for i in range(lo, hi)]),
+        "v": pa.array([i * 0.25 for i in range(lo, hi)]),
+    })
+
+
+def _dir4(d):
+    os.makedirs(d)
+    for i in range(4):
+        pq.write_table(_table(i * N // 4, (i + 1) * N // 4), os.path.join(d, f"part-{i}.parquet"))
+    return d
+
+
+def _one_file(d, row_group_size):
+    os.makedirs(d)
+    pq.write_table(_table(0, N), os.path.join(d, "t.parquet"), row_group_size=row_group_size)
+    return d
+
+
+def _zero_rg(d):
+    os.makedirs(d)
+    for i in range(2):
+        pq.ParquetWriter(os.path.join(d, f"part-{i}.parquet"), _table(0, 0).schema).close()
+    return d
+
+
+# (input files, DataFrame on them, expected feed)
+SHAPES = {
+    "dir_4_files": (_dir4, lambda df: df, "fused"),
+    "small_one_row_group": (lambda d: _one_file(d, N), lambda df: df, "spark"),
+    "plain_projection": (lambda d: _one_file(d, N // 4), lambda df: df.select("k", "v"), "fused"),
+    "reordered_projection": (lambda d: _one_file(d, N // 4), lambda df: df.select("v", "s", "k"), "fused"),
+    # the aliased and computed columns reuse data column names: only the
+    # plan, not the names, tells the gate that a file read would differ
+    "aliased_projection": (
+        lambda d: _one_file(d, N // 4), lambda df: df.select(F.col("v").alias("k"), F.col("k").alias("v")), "spark"
+    ),
+    "computed_projection": (
+        lambda d: _one_file(d, N // 4), lambda df: df.select("k", (F.col("v") * 2).alias("v")), "spark"
+    ),
+    "filtered": (lambda d: _one_file(d, N // 4), lambda df: df.where(F.col("k") % 3 != 0), "spark"),
+    "zero_row_groups": (_zero_rg, lambda df: df, "spark"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_gate_agreement(spark, tmp_path, shape):
+    """explain_partitioning predicts arrow exactly when write_encoded
+    records it; roundtrip_table reads from a Range exactly when
+    fused_splits returns splits; both decode to the input."""
+    make, view, want_feed = SHAPES[shape]
+    df = view(spark.read.parquet(make(str(tmp_path / "in"))))
+    par = spark.sparkContext.defaultParallelism
+    fused = fused_splits(df, par)
+    assert (fused is not None) == (want_feed == "fused")
+
+    rt = roundtrip_table(df)
+    assert ("Range (" in rt._jdf.queryExecution().executedPlan().toString()) == (fused is not None)
+    assert rt.count() == df.count()
+    assert _crc(rt) == _crc(df)
+
+    path = str(tmp_path / "tbl")
+    predicted = explain_partitioning(df)
+    write_encoded(df, path, resume=False)
+    recorded = read_snapshot(path)["bucket_mode"]
+    assert predicted.startswith("arrow") == (recorded == "arrow") == (fused is not None)
+    dec = read_encoded(spark, path)
+    assert dec.count() == df.count()
+    assert _crc(dec) == _crc(df)
+
+
+# ------------------------------------ spark.sql.files.ignoreCorruptFiles
+
+@pytest.fixture
+def ignore_corrupt(spark):
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    yield
+    spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
+
+
+def _truncate(path):
+    """Cut the file in half. Its Hadoop `.crc` sidecar goes too: with a
+    stale sidecar the local filesystem fails the read with a checksum
+    error before the parquet reader sees the file."""
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_ignore_corrupt_input_file(spark, tmp_path, ignore_corrupt):
+    """A truncated input file is skipped, as the Spark scan skips it:
+    roundtrip_table and write_encoded return the intact files' rows."""
+    d = _dir4(str(tmp_path / "in"))
+    _truncate(list_parquet_files(d)[-1])
+    df = spark.read.parquet(d)
+    assert fused_splits(df, spark.sparkContext.defaultParallelism) is None
+    intact = N * 3 // 4
+    assert df.count() == intact
+
+    rt = roundtrip_table(df)
+    assert rt.count() == intact
+    assert _crc(rt) == _crc(df)
+
+    path = str(tmp_path / "tbl")
+    write_encoded(df, path, resume=False)
+    dec = read_encoded(spark, path)
+    assert dec.count() == intact
+    assert _crc(dec) == _crc(df)
+
+
+def test_ignore_corrupt_blocks_file(spark, tmp_path):
+    """A truncated blocks file of an encoded table: a bare read_encoded
+    returns what the Spark scan of the blocks returns, the rows of the
+    intact blocks files, and raises nothing."""
+    path = str(tmp_path / "tbl")
+    df = spark.read.parquet(_dir4(str(tmp_path / "in")))
+    write_encoded(df, path, resume=False)
+    data_dir = os.path.join(path, read_snapshot(path).get("data_dir", "data"))
+    files = list_parquet_files(data_dir)
+    assert len(files) >= 2
+    victim = files[-1]
+    lost = sum(pq.read_table(victim, columns=["n_rows"]).column(0).to_pylist())
+    _truncate(victim)
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        got = read_encoded(spark, path)
+        assert "Range (" not in got._jdf.queryExecution().executedPlan().toString()
+        assert got.count() == N - lost
+        blocks = spark.read.option("mergeSchema", "true").parquet(data_dir)
+        assert _crc(got) == _crc(decode_table(blocks, df.schema))
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")

@@ -242,13 +242,13 @@ def test_block_bucket_contiguity_guard():
 
 def test_bucket_mode_auto_balanced_goes_zero_shuffle(spark, seq_path, tmp_path):
     """Balanced input partitions → auto picks partition mode: no shuffle,
-    bucket = input partition id, snapshot records the mode. (The r6 Arrow
-    feed engages only above its row threshold — tests/test_arrow_scan.py
-    covers that path with the threshold lowered.)"""
+    bucket = input partition id, snapshot records the mode. The filter
+    keeps the input off the fused Arrow feed, which takes bare scans and
+    plain projections (tests/test_arrow_scan.py covers that path)."""
     from parquet_spark.operators.encode import read_snapshot
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(seq_path)
+    df = spark.read.parquet(seq_path).filter(F.col("n_tok") >= 0)
     npart = df.rdd.getNumPartitions()
     path = str(tmp_path / "enc_pm")
     # small fixture: shrink block_rows so the anti-fragmentation guard
