@@ -37,6 +37,7 @@ import numpy as np
 import pyarrow as pa
 
 from py4j.protocol import Py4JError
+from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_spark.operators.repartition import salted_repartition
@@ -119,7 +120,9 @@ def _encode_fn(columns: list[str], block_rows: int, codec_overrides: dict | None
         from pyspark import TaskContext
 
         from parquet_spark.codecs import blocks as blk
+        from parquet_spark.util import drop_spark_archive_importers
 
+        drop_spark_archive_importers()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
         attempt = ctx.attemptNumber() if ctx else 0
@@ -611,10 +614,11 @@ def _partition_plan_conf(spark: SparkSession) -> dict:
 
     def get(key: str) -> str:
         # no typed default: Spark validates defaults against the conf's
-        # declared type, so an ''-default on an int conf raises
+        # declared type, so an ''-default on an int conf raises. Known
+        # optional keys return None; only an unknown, unset key raises.
         try:
             return str(conf.get(key))
-        except Exception:
+        except SparkNoSuchElementException:
             return "<unset>"
 
     return {

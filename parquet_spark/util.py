@@ -1,7 +1,11 @@
-"""Shared low-level helpers: LEB128 varints, bit-length math, crc."""
+"""Shared low-level helpers: LEB128 varints, bit-length math, crc, and
+the Python-task start-up trim."""
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 import zlib
 
 import numpy as np
@@ -49,3 +53,45 @@ def as_uint64(arr: np.ndarray) -> np.ndarray:
     """Reinterpret a signed integer array as uint64 (two's complement),
     widening first. Used for overflow-safe frame-of-reference deltas."""
     return arr.astype(np.int64, copy=False).view(np.uint64)
+
+
+def drop_spark_archive_importers() -> None:
+    """Drop the zipimporters of Spark's own archives from this Python
+    worker's import cache, so the next task's start-up does not re-read
+    them. Call it at the top of a task function; on the driver it does
+    nothing.
+
+    Why: at the start of every task PySpark's worker
+    (`pyspark/worker_util.py: setup_spark_files`) calls
+    `importlib.invalidate_caches()`, and on CPython 3.11
+    `zipimporter.invalidate_caches()` eagerly re-reads its archive's whole
+    central directory. Workers import pyspark from `pyspark.zip`, so a
+    worker's `sys.path_importer_cache` holds one zipimporter per imported
+    pyspark subpackage (13 over pyspark.zip, 1,328 entries each), two over
+    the spark-core jar (5,359 entries each) and one over the py4j zip:
+    ~26.7k directory entries parsed in pure Python per task, 0.26-0.49 s
+    of every task on a 4-CPU host (local[4]). A 4-task identity
+    `mapInArrow` took 0.54-0.78 s against 0.09 s for a JVM-only job, and
+    0.28 s once the cache entries are gone.
+
+    Why it is safe: the cache is a memo. `PathFinder` rebuilds a missing
+    entry through `sys.path_hooks`, and the zipimporter constructor reuses
+    `zipimport._zip_directory_cache`, so the rebuild reads nothing.
+    Spark's archives do not change during a session. Zips under the
+    task's SparkFiles root (`addPyFile`, `--py-files`) keep their entries,
+    and with them Spark's invalidate semantics.
+
+    It runs on every task, not once per process: the scan is ~100 dict
+    entries, and later imports add entries back. The task that calls it
+    has already paid for its own invalidate; the saving goes to every
+    later task in the reused worker."""
+    from pyspark import SparkFiles
+
+    root = SparkFiles._root_directory
+    if not SparkFiles._is_running_on_worker or not root:
+        return
+    keep = os.path.join(root, "")
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and not finder.archive.startswith(keep):
+            del cache[key]

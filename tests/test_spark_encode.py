@@ -524,3 +524,30 @@ def test_reserved_column_names_rejected(spark):
     df2 = spark.range(10).select(F.col("id"), F.lit(1).alias("_min_id"))
     with pytest.raises(ValueError, match="_min_id"):
         encode_table(df2)
+
+
+def test_partition_plan_conf_keys_and_error_propagation(spark):
+    from pyspark.errors import SparkNoSuchElementException
+
+    from parquet_spark.operators.encode import _partition_plan_conf
+
+    plan = _partition_plan_conf(spark)
+    assert set(plan) == {"maxPartitionBytes", "openCostInBytes", "filesMinPartitionNum", "defaultParallelism"}
+    assert plan["defaultParallelism"] == spark.sparkContext.defaultParallelism
+
+    class _Conf:
+        def __init__(self, err):
+            self.err = err
+
+        def get(self, key):
+            raise self.err
+
+    class _Session:
+        def __init__(self, err):
+            self.conf = _Conf(err)
+            self.sparkContext = spark.sparkContext
+
+    unset = _partition_plan_conf(_Session(SparkNoSuchElementException(message="unset")))
+    assert unset["maxPartitionBytes"] == "<unset>"
+    with pytest.raises(RuntimeError, match="conf backend down"):
+        _partition_plan_conf(_Session(RuntimeError("conf backend down")))
