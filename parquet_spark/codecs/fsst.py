@@ -19,6 +19,17 @@ Body layout:
 
 Tokens work in uint16 space during encode: 0..255 literals, 256+k = merge
 code k, 0xFFFE tombstone (deferred compaction).
+
+Table construction keeps dense pair counts (key a*512+b) across its merge
+steps: each merge subtracts and re-adds only the pairs that overlap its
+matches, and the counts are rebuilt only after a compaction. Pairs whose
+joined symbol would exceed 8 bytes are pushed below zero as their codes
+appear, so `argmax` picks the same most frequent pair, with the same
+smallest-(a, b) tie-break, as a full recount each step would. Tables and
+encoded bytes are unchanged by this (tests/test_fsst_golden.py). The
+encoder's replay over the whole buffer is left as is: per-token position
+lists, a uint32-view pair search and a single-compare pass all measured
+level or slower.
 """
 
 from __future__ import annotations
@@ -30,15 +41,23 @@ import numpy as np
 ESCAPE = 255
 TOMB = np.uint16(0xFFFE)
 MAX_SYMBOL_LEN = 8
+_CODES = 512  # token space of build_table: 256 literals + up to 254 merges
+_OVER_LONG = 1 << 40  # subtracted from pair counts that may never merge
 
 
 def _merge_pass(tok: np.ndarray, a: int, b: int, code: int) -> tuple[np.ndarray, int]:
     """Replace non-overlapping left-greedy occurrences of (a,b) with code.
     Returns (tok with second elements tombstoned, replacements made)."""
+    idx = _match_positions(tok, a, b)
+    tok[idx] = code
+    tok[idx + 1] = TOMB
+    return tok, int(idx.size)
+
+
+def _match_positions(tok: np.ndarray, a: int, b: int) -> np.ndarray:
+    """Start positions of the non-overlapping left-greedy (a,b) matches."""
     idx = np.flatnonzero((tok[:-1] == a) & (tok[1:] == b))
-    if idx.size == 0:
-        return tok, 0
-    if a == b:
+    if a == b and idx.size:
         # runs like "aaa": keep every other occurrence within each chain
         breaks = np.flatnonzero(np.diff(idx) > 1) + 1
         starts = np.concatenate(([0], breaks))
@@ -47,13 +66,25 @@ def _merge_pass(tok: np.ndarray, a: int, b: int, code: int) -> tuple[np.ndarray,
         np.cumsum(run_id, out=run_id)
         offset = idx - idx[starts][run_id]
         idx = idx[offset % 2 == 0]
-    tok[idx] = code
-    tok[idx + 1] = TOMB
-    return tok, int(idx.size)
+    return idx
 
 
 def _compact(tok: np.ndarray) -> np.ndarray:
     return tok[tok != TOMB]
+
+
+def _pair_keys(tok: np.ndarray, pos: np.ndarray | None = None) -> np.ndarray:
+    """Dense keys a*512+b of the pairs starting at `pos` (all pairs when
+    None), skipping pairs with a tombstone on either side."""
+    a = tok[:-1] if pos is None else tok[pos]
+    b = tok[1:] if pos is None else tok[pos + 1]
+    keep = (a != TOMB) & (b != TOMB)
+    return a[keep].astype(np.int64) * _CODES + b[keep]
+
+
+def _count_pairs(tok: np.ndarray, over_long: np.ndarray) -> np.ndarray:
+    """Dense pair counts; over-long pairs sit below zero."""
+    return np.bincount(_pair_keys(tok), minlength=_CODES * _CODES) - over_long
 
 
 def build_table(sample: np.ndarray, max_merges: int = 160, min_count: int = 4) -> list[bytes]:
@@ -65,44 +96,56 @@ def build_table(sample: np.ndarray, max_merges: int = 160, min_count: int = 4) -
     tok = sample.astype(np.uint16)
     expansions: dict[int, bytes] = {}
     merges: list[bytes] = []
-    sym_len = np.ones(0x10000, dtype=np.int32)  # literal lengths = 1
+    sym_len = np.ones(_CODES, dtype=np.int64)  # literal lengths = 1
+    over_long = np.zeros(_CODES * _CODES, dtype=np.int64)
+    cnt = _count_pairs(tok, over_long)
+    floor = max(min_count, 1)
     next_code = 256
     dirty = False  # tombstones pending compaction
     steps = 0
     while steps < max_merges:
         if len(tok) < 2:
             break
-        pairs = (tok[:-1].astype(np.uint32) << 16) | tok[1:]
-        valid = (tok[:-1] != TOMB) & (tok[1:] != TOMB)
-        pairs = pairs[valid]
-        stuck = pairs.size == 0
-        if not stuck:
-            uniq, counts = np.unique(pairs, return_counts=True)
-            ua = (uniq >> 16).astype(np.int64)
-            ub = (uniq & 0xFFFF).astype(np.int64)
-            ok = sym_len[ua] + sym_len[ub] <= MAX_SYMBOL_LEN
-            uniq, counts = uniq[ok], counts[ok]
-            stuck = counts.size == 0 or counts.max() < min_count
-        if stuck:
+        # first max in key order: the smallest (a, b) wins a tie
+        best = int(np.argmax(cnt[: next_code * _CODES]))
+        if cnt[best] < floor:
             if dirty:  # tombstones may be hiding pairs — compact and retry
                 tok = _compact(tok)
+                cnt = _count_pairs(tok, over_long)
                 dirty = False
                 continue
             break
         steps += 1
-        best = int(uniq[np.argmax(counts)])
-        a, b = best >> 16, best & 0xFFFF
+        a, b = divmod(best, _CODES)
         exp_a = expansions.get(a, bytes([a]) if a < 256 else b"")
         exp_b = expansions.get(b, bytes([b]) if b < 256 else b"")
         expansions[next_code] = exp_a + exp_b
         merges.append(exp_a + exp_b)
         sym_len[next_code] = sym_len[a] + sym_len[b]
-        tok, n_rep = _merge_pass(tok, a, b, next_code)
-        dirty = dirty or n_rep > 0
-        next_code += 1
-        if n_rep > len(tok) // 32:  # heavy merge: compact so chains keep merging
+        # pairs of the new code with any code too long to join it
+        xs = np.flatnonzero(sym_len[: next_code + 1] + sym_len[next_code] > MAX_SYMBOL_LEN)
+        keys = np.unique(np.concatenate((next_code * _CODES + xs, xs * _CODES + next_code)))
+        over_long[keys] = _OVER_LONG
+        cnt[keys] -= _OVER_LONG
+        idx = _match_positions(tok, a, b)
+        if idx.size > len(tok) // 32:  # heavy merge: compact so chains keep merging
+            tok[idx] = next_code
+            tok[idx + 1] = TOMB
             tok = _compact(tok)
+            cnt = _count_pairs(tok, over_long)
             dirty = False
+        else:
+            # only the pairs overlapping a match change: idx-1, idx, idx+1
+            # (sorted, since matches are >= 2 apart; dedup neighbours)
+            pos = (idx[:, None] + np.arange(-1, 2)).ravel()
+            pos = pos[(pos >= 0) & (pos < len(tok) - 1)]
+            pos = pos[np.concatenate(([True], pos[1:] != pos[:-1]))]
+            np.subtract.at(cnt, _pair_keys(tok, pos), 1)
+            tok[idx] = next_code
+            tok[idx + 1] = TOMB
+            np.add.at(cnt, _pair_keys(tok, pos), 1)
+            dirty = True
+        next_code += 1
         if len(merges) >= 254:
             break
     tok = _compact(tok)

@@ -128,16 +128,21 @@ def roundtrip_table(
     splits each task reads its slices with pyarrow (no JVM→Python row
     transpose; 1.07 s → 0.74 s on the 6M-row lineitem roundtrip).
     Otherwise the Spark scan feeds the kernels; when it yields fewer
-    partitions than cores and at least ~128 KB of input per core, a
-    repartition to the core count spreads the encode over every core
-    (smaller inputs encode faster serially than shuffled)."""
+    partitions than cores and at least `arrow_scan.MIN_SPLIT_BYTES`
+    (128 KB) of input per core, a repartition to the core count spreads
+    the encode over every core (smaller inputs encode faster serially
+    than shuffled). The planner sub-splits bare files by the same byte
+    unit, so a bare local parquet input that large takes the fused feed;
+    the repartition serves inputs that are not bare files (filters,
+    computed columns, joins) and inputs under
+    `spark.sql.files.ignoreCorruptFiles`."""
     from parquet_spark.operators.encode import (
         BUCKET_COL,
         DEFAULT_BLOCK_ROWS,
         _encode_fn,
         check_reserved_columns,
     )
-    from parquet_spark.sources.arrow_scan import _read_split, fused_scan, fused_splits
+    from parquet_spark.sources.arrow_scan import MIN_SPLIT_BYTES, _read_split, fused_scan, fused_splits, local_path
 
     block_rows = block_rows or DEFAULT_BLOCK_ROWS
     columns = [c for c in df.columns if c != BUCKET_COL]
@@ -161,14 +166,10 @@ def roundtrip_table(
         )
     if df.rdd.getNumPartitions() < par:
         try:
-            sz = sum(
-                os.path.getsize(f[len("file:"):])
-                for f in df.inputFiles()
-                if f.startswith("file:")
-            )
+            sz = sum(os.path.getsize(p) for p in map(local_path, df.inputFiles()) if p)
         except OSError:
             sz = 0
-        if sz >= par * (128 << 10):
+        if sz >= par * MIN_SPLIT_BYTES:
             df = df.repartition(par)
 
     def gen(batches):

@@ -35,10 +35,15 @@ Scale behaviour (the rules are size-derived, not tuned to local[32]):
   metadata Spark's own planner needs. The 100 TB case lands here.
 - **few files**: the driver reads those footers (bounded by the
   parallelism, so bounded work) and splits at row-group granularity;
-  row groups much larger than a block are range-sub-split, and a task
-  stops decoding its row group at the end of its range (iter_batches +
+  when there are fewer row groups than cores, each is range-sub-split
+  into equal row ranges of at least `MIN_SPLIT_BYTES` (128 KB) of its
+  compressed column-chunk bytes, read from the same footers. Bytes, not
+  rows, are the unit: 9,000 wide text rows in one 1 MB row group split
+  4 ways, as many narrow rows of the same bytes would. A task stops
+  decoding its row group at the end of its range (iter_batches +
   break), so sub-splitting costs at most one extra partial decode of the
-  leading rows, never a full redundant read of the file.
+  leading rows, never a full redundant read of the file. Row groups
+  without rows plan no split.
 - **tasks**: splits are packed into tasks, not run one task each. Every
   Python task pays a fixed start-up cost before its kernel runs, so
   `fused_task_count` packs contiguous splits into about
@@ -50,11 +55,18 @@ Scale behaviour (the rules are size-derived, not tuned to local[32]):
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn, _parse_bytes_conf
+
+# The least input worth a split of its own, per core: a range sub-split
+# holds at least this much of its row group's compressed bytes, and
+# decode.roundtrip_table repartitions a Spark-fed input across the cores
+# from this much input per core.
+MIN_SPLIT_BYTES = 128 << 10
 
 
 def list_parquet_files(path: str) -> list[str]:
@@ -69,6 +81,13 @@ def list_parquet_files(path: str) -> list[str]:
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
     raise FileNotFoundError(path)
+
+
+def local_path(uri: str) -> str | None:
+    """The local path of a `file:` URI from `DataFrame.inputFiles()`
+    (percent-decoded: a space arrives as %20), else None."""
+    parts = urlparse(uri)
+    return unquote(parts.path) if parts.scheme == "file" else None
 
 
 def ignores_corrupt_files(spark: SparkSession) -> bool:
@@ -119,15 +138,13 @@ def fused_splits(
     cols = df.columns
     if not cols or len(set(cols)) != len(cols) or not set(cols) <= data_cols:
         return None
-    files = df.inputFiles()
-    if not files or not all(f.startswith("file:") for f in files):
+    files = [local_path(f) for f in df.inputFiles()]
+    if not files or None in files or not all(os.path.exists(f) for f in files):
         return None
-    files = sorted(f[len("file:") :] for f in files)
-    if not all(os.path.exists(f) for f in files):
-        return None
+    files.sort()
     par = spark.sparkContext.defaultParallelism
     try:
-        raw = _plan_splits_for_files(files, par, block_rows)
+        raw = _plan_splits_for_files(files, par)
     except (OSError, ValueError):  # unreadable footer (pyarrow's
         # ArrowInvalid is a ValueError): the Spark scan reports it
         return None
@@ -144,41 +161,39 @@ def fused_splits(
     return splits, plan
 
 
-def plan_arrow_splits(path: str, parallelism: int, block_rows: int = DEFAULT_BLOCK_ROWS) -> list[tuple[str, int, int, int]]:
+def plan_arrow_splits(path: str, parallelism: int) -> list[tuple[str, int, int, int]]:
     """(file, row_group, lo, hi) splits. row_group == -1 means the whole
     file (many-files regime: the driver read no footer, the task will).
     lo/hi are row offsets within the row group; hi == -1 means to the end."""
     files = list_parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
-    return _plan_splits_for_files(files, parallelism, block_rows)
+    return _plan_splits_for_files(files, parallelism)
 
 
-def _plan_splits_for_files(files: list[str], parallelism: int, block_rows: int) -> list[tuple[str, int, int, int]]:
+def _plan_splits_for_files(files: list[str], parallelism: int) -> list[tuple[str, int, int, int]]:
     import pyarrow.parquet as pq
 
     if len(files) >= parallelism:
         return [(f, -1, 0, -1) for f in files]
     splits: list[tuple[str, int, int, int]] = []
-    rg_meta = []  # (file, rg, n_rows)
+    rg_meta = []  # (file, rg, n_rows, compressed column-chunk bytes)
     for f in files:
         meta = pq.ParquetFile(f).metadata
         for rg in range(meta.num_row_groups):
-            rg_meta.append((f, rg, meta.row_group(rg).num_rows))
+            g = meta.row_group(rg)
+            if g.num_rows:  # a row group without rows needs no read
+                nbytes = sum(g.column(i).total_compressed_size for i in range(g.num_columns))
+                rg_meta.append((f, rg, g.num_rows, nbytes))
     if not rg_meta or len(rg_meta) >= parallelism:
-        # (no row groups at all: nothing to read, no splits)
-        return [(f, rg, 0, -1) for f, rg, _n in rg_meta]
-    # sub-split large row groups so every core gets work; keep ranges at
-    # least a couple of blocks so per-split overhead stays amortized
+        return [(f, rg, 0, -1) for f, rg, _n, _b in rg_meta]
+    # sub-split large row groups so every core gets work, into equal row
+    # ranges of at least MIN_SPLIT_BYTES of the row group's compressed
+    # bytes each, so per-split overhead stays amortized
     per_rg = max(1, -(-parallelism // len(rg_meta)))
-    for f, rg, n in rg_meta:
-        step = max(2 * block_rows, -(-n // per_rg))
-        lo = 0
-        while lo < n:
-            splits.append((f, rg, lo, min(lo + step, n)))
-            lo += step
-        if n == 0:
-            splits.append((f, rg, 0, -1))
+    for f, rg, n, nbytes in rg_meta:
+        k = max(1, min(per_rg, nbytes // MIN_SPLIT_BYTES, n))
+        splits.extend((f, rg, i * n // k, (i + 1) * n // k) for i in range(k))
     return splits
 
 

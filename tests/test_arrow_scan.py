@@ -4,13 +4,15 @@ semantics change (r6 optimization; see sources/arrow_scan.py)."""
 
 import os
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from parquet_spark.operators.decode import decode_table, roundtrip_table
 from parquet_spark.operators.encode import encode_table
-from parquet_spark.sources.arrow_scan import list_parquet_files, plan_arrow_splits
+from parquet_spark.sources.arrow_scan import MIN_SPLIT_BYTES, list_parquet_files, plan_arrow_splits
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -70,6 +72,79 @@ def test_plan_splits_tile_rows_exactly():
         assert 0 <= lo <= end <= n
         covered += end - lo
     assert covered == meta.num_rows
+
+
+def _hex_table(n_rows: int, row_chars: int, seed: int) -> pa.Table:
+    """n_rows of random hex text: barely compressible, so the footer's
+    compressed bytes track row_chars."""
+    rng = np.random.default_rng(seed)
+    buf = np.frombuffer(b"0123456789abcdef", np.uint8)[rng.integers(0, 16, n_rows * row_chars)].tobytes().decode()
+    return pa.table({
+        "k": pa.array(range(n_rows), pa.int64()),
+        "s": [buf[i * row_chars : (i + 1) * row_chars] for i in range(n_rows)],
+    })
+
+
+def _rg_bytes(path: str, rg: int = 0) -> int:
+    g = pq.ParquetFile(path).metadata.row_group(rg)
+    return sum(g.column(i).total_compressed_size for i in range(g.num_columns))
+
+
+def _assert_tiles(splits, n_rows):
+    """Contiguous (lo, hi) ranges covering [0, n_rows) once."""
+    assert [lo for _f, _rg, lo, _hi in splits] == [0] + [hi for *_x, hi in splits[:-1]]
+    assert splits[-1][3] == n_rows
+
+
+@pytest.mark.parametrize("par", [4, 32])
+def test_plan_splits_byte_floor_splits_one_wide_row_group(tmp_path, par):
+    """A one-row-group file of few wide rows and >= parallelism x
+    MIN_SPLIT_BYTES splits into >= parallelism row ranges (the old row
+    floor kept it whole); with more cores than its bytes allow, every
+    range still holds MIN_SPLIT_BYTES, give or take one row."""
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(_hex_table(400, 4096, 1), path)
+    n, nbytes = pq.ParquetFile(path).metadata.num_rows, _rg_bytes(path)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert 4 * MIN_SPLIT_BYTES <= nbytes < 32 * MIN_SPLIT_BYTES
+    splits = plan_arrow_splits(path, parallelism=par)
+    assert all(rg == 0 for _f, rg, _lo, _hi in splits)
+    _assert_tiles(splits, n)
+    assert len(splits) == min(par, nbytes // MIN_SPLIT_BYTES)
+    assert len(splits) >= 4
+    assert all((hi - lo + 1) * nbytes / n >= MIN_SPLIT_BYTES for _f, _rg, lo, hi in splits)
+
+
+def test_plan_splits_small_file_stays_one_split(tmp_path):
+    """Under 2 x MIN_SPLIT_BYTES a row group is not worth two splits,
+    however many rows it has."""
+    path = str(tmp_path / "small.parquet")
+    pq.write_table(_hex_table(10000, 6, 2), path)
+    assert MIN_SPLIT_BYTES <= _rg_bytes(path) < 2 * MIN_SPLIT_BYTES
+    assert plan_arrow_splits(path, parallelism=4) == [(path, 0, 0, 10000)]
+
+
+def test_plan_splits_zero_row_row_groups_plan_no_reads(tmp_path):
+    """Row groups without rows get no split, in either planner regime;
+    a file with no row groups at all plans nothing."""
+    t = _hex_table(3000, 256, 3)
+    empty = t.slice(0, 0)
+    path = str(tmp_path / "holes.parquet")
+    with pq.ParquetWriter(path, t.schema) as w:
+        for part in (empty, t, empty, t, empty):
+            w.write_table(part)
+    meta = pq.ParquetFile(path).metadata
+    assert [meta.row_group(i).num_rows for i in range(5)] == [0, 3000, 0, 3000, 0]
+    # two row groups with rows at parallelism 2: one whole-group split each
+    assert plan_arrow_splits(path, parallelism=2) == [(path, 1, 0, -1), (path, 3, 0, -1)]
+    # parallelism 8: both are range-split, and only they
+    splits = plan_arrow_splits(path, parallelism=8)
+    assert {rg for _f, rg, _lo, _hi in splits} == {1, 3}
+    for rg in (1, 3):
+        _assert_tiles([s for s in splits if s[1] == rg], 3000)
+    none_path = str(tmp_path / "none.parquet")
+    pq.ParquetWriter(none_path, t.schema).close()
+    assert plan_arrow_splits(none_path, parallelism=4) == []
 
 
 def test_plan_splits_many_files_no_footer_reads(tmp_path):

@@ -55,6 +55,44 @@ def test_fused_read_matches_spark_scan(spark, tmp_path):
     assert "Scan parquet" not in plan
 
 
+@pytest.mark.parametrize("verify", [False, True])
+def test_fused_read_range_splits_one_wide_blocks_file(spark, tmp_path, verify):
+    """One blocks file whose single row group holds >= parallelism x
+    MIN_SPLIT_BYTES of payload: the bare read plans it into row ranges
+    (byte floor) and still equals the Spark-scan decode, with and
+    without verify."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import write_encoded
+    from parquet_spark.sources.arrow_scan import MIN_SPLIT_BYTES, list_parquet_files, plan_arrow_splits
+
+    rng = np.random.default_rng(9)
+    hexes = np.frombuffer(b"0123456789abcdef", np.uint8)[rng.integers(0, 16, (400, 4096))]
+    src = str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(400), pa.int64()), "s": [r.tobytes().decode() for r in hexes]}), src)
+    path = str(tmp_path / "t")
+    # the filter keeps the input on the Spark feed: one bucket, one blocks file
+    df = spark.read.parquet(src).where(F.col("k") >= 0)
+    write_encoded(df, path, target_partitions=1, resume=False, block_rows=32)
+    files = list_parquet_files(os.path.join(path, "data"))
+    meta = pq.ParquetFile(files[0]).metadata
+    par = spark.sparkContext.defaultParallelism
+    assert len(files) == 1 and meta.num_row_groups == 1
+    g = meta.row_group(0)
+    assert sum(g.column(i).total_compressed_size for i in range(g.num_columns)) >= par * MIN_SPLIT_BYTES
+    splits = plan_arrow_splits(os.path.join(path, "data"), par)
+    assert len(splits) >= par and all(rg == 0 and hi > lo for _f, rg, lo, hi in splits)
+
+    fused = read_encoded(spark, path, verify=verify)
+    assert "Range (" in fused._jdf.queryExecution().executedPlan().toString()
+    plain = _spark_scan_decode(spark, path)
+    assert fused.count() == plain.count() == 400
+    assert _crc(fused) == _crc(plain) == _crc(df)
+
+
 def test_fused_read_projection(spark, tmp_path):
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import write_encoded

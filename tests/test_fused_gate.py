@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -47,6 +48,19 @@ def _one_file(d, row_group_size):
     return d
 
 
+def _wide_one_file(d):
+    """Few wide rows of random hex text (barely compressible) in one
+    row group: 160 rows, ~640 KB of column-chunk bytes."""
+    os.makedirs(d)
+    rng = np.random.default_rng(5)
+    hexes = np.frombuffer(b"0123456789abcdef", np.uint8)[rng.integers(0, 16, (160, 4096))]
+    pq.write_table(
+        pa.table({"k": pa.array(range(160), pa.int64()), "s": [r.tobytes().decode() for r in hexes]}),
+        os.path.join(d, "t.parquet"),
+    )
+    return d
+
+
 def _zero_rg(d):
     os.makedirs(d)
     for i in range(2):
@@ -58,6 +72,12 @@ def _zero_rg(d):
 SHAPES = {
     "dir_4_files": (_dir4, lambda df: df, "fused"),
     "small_one_row_group": (lambda d: _one_file(d, N), lambda df: df, "spark"),
+    # one row group, but >= 4 x MIN_SPLIT_BYTES: range splits by bytes
+    "wide_one_row_group": (_wide_one_file, lambda df: df, "fused"),
+    # Spark reports this directory as .../dir%20with%20space%25/t.parquet
+    "percent_encoded_path": (
+        lambda d: _one_file(os.path.join(d, "dir with space%"), N // 4), lambda df: df, "fused"
+    ),
     "plain_projection": (lambda d: _one_file(d, N // 4), lambda df: df.select("k", "v"), "fused"),
     "reordered_projection": (lambda d: _one_file(d, N // 4), lambda df: df.select("v", "s", "k"), "fused"),
     # the aliased and computed columns reuse data column names: only the

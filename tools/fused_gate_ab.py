@@ -1,11 +1,13 @@
 """Interleaved A/B of the shapes whose feed the fused-feed gate decides.
 
-Times four ops in two checkouts of this repo, one Spark session per run:
+Times five ops in two checkouts of this repo, one Spark session per run:
 
 - `write_encoded` of a 100k-row, 8-file nested token table,
 - `write_encoded` of a 4k-row, 4-file nested token table,
 - `roundtrip_delta_sorted` at sf0.1 (orders, 150k rows),
-- `roundtrip_auto_all` at sf0.01 (lineitem, 60k rows).
+- `roundtrip_auto_all` at sf0.01 (lineitem, 60k rows),
+- `roundtrip_fsst_text` at sf0.1 (documents, 5k wide rows in one
+  590 KB row group).
 
 Each run warms every op once, then times it `--reps` times and records
 the median, the feed it took and a CRC of its output against the input.
@@ -74,6 +76,7 @@ def run(repo: str, work: str, side: str, pair: int, reps: int) -> dict:
     for name, sf, table in (
         ("roundtrip_delta_sorted_sf0.1", "sf0.1", "orders"),
         ("roundtrip_auto_all_sf0.01", "sf0.01", "lineitem"),
+        ("roundtrip_fsst_text_sf0.1", "sf0.1", "documents"),
     ):
         qname = name.rsplit("_", 1)[0]
         sf_dir = os.path.join(TESTDATA, sf)
