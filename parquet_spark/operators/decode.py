@@ -156,6 +156,7 @@ def roundtrip_table(
     enc = _encode_fn(
         columns, block_rows, codecs, None,
         has_bucket=fused is None and BUCKET_COL in df.columns,
+        positions=None if fused is not None else [df.columns.index(c) for c in columns],
     )
     dec = _decode_fn(columns, out_schema, False)
     if fused is not None:

@@ -79,13 +79,6 @@ def check_reserved_columns(columns: list[str]) -> None:
         )
 
 
-def _stats_cols(schema) -> list[str]:
-    return [
-        f.name for f in schema.fields
-        if f.dataType.simpleString() in _STATS_SPARK_TYPES
-    ]
-
-
 def _block_bucket(tbl: pa.Table) -> int:
     """Bucket id of a single-bucket block table. The resume key assumes
     bucket contiguity (sortWithinPartitions upstream + the batch splitter);
@@ -110,7 +103,12 @@ _MANIFEST_PA_SCHEMA = pa.schema([
 ])
 
 
-def _encode_fn(columns: list[str], block_rows: int, codec_overrides: dict | None, compression: str | None, has_bucket: bool, stats_cols: list[str] | None = None, manifest_dir: str | None = None, bloom_cols: list[str] | None = None):
+def _encode_fn(columns: list[str], block_rows: int, codec_overrides: dict | None, compression: str | None, has_bucket: bool, stats_cols: list[str] | None = None, manifest_dir: str | None = None, bloom_cols: list[str] | None = None, positions: list[int] | None = None):
+    # input columns are taken by position (`positions`, default: the first
+    # len(columns)), not by name: Spark resolves names case-insensitively
+    # and drops a no-op Project, so the batches may carry the file's
+    # spelling of a name (`Id` for df column `id`)
+    positions = positions or range(len(columns))
     codec_overrides = codec_overrides or {}
     stats_cols = stats_cols or []
     bloom_cols = bloom_cols or []
@@ -137,8 +135,8 @@ def _encode_fn(columns: list[str], block_rows: int, codec_overrides: dict | None
             stat_arrays = []
             bloom_arrays = []
             metas = {}
-            for col in columns:
-                arr = tbl.column(col).combine_chunks()
+            for pos, col in zip(positions, columns):
+                arr = tbl.column(pos).combine_chunks()
                 if isinstance(arr, pa.ChunkedArray):
                     arr = arr.combine_chunks() if arr.num_chunks != 1 else arr.chunk(0)
                 payload = blk.encode_array(arr, codec=codec_overrides.get(col), compression=compression)
@@ -298,7 +296,10 @@ def encode_table(
             )
     out_ddl = _blocks_out_ddl(columns, type_of, stats_cols, bloom_cols)
     return df.mapInArrow(
-        _encode_fn(columns, block_rows, codecs, compression, has_bucket, stats_cols, manifest_dir, bloom_cols),
+        _encode_fn(
+            columns, block_rows, codecs, compression, has_bucket, stats_cols, manifest_dir, bloom_cols,
+            positions=[df.columns.index(c) for c in columns],
+        ),
         out_ddl,
     )
 
@@ -436,14 +437,15 @@ def dataset_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
         return explicit
     import hashlib
 
+    # imported here: arrow_scan imports this module
+    from parquet_spark.sources.arrow_scan import local_path
+
     entries = []
     for f in sorted(df.inputFiles()):
-        if f.startswith("file:"):
-            local = f[len("file:"):]
-            # Spark renders file URIs with repeated slashes; both spellings
-            # point at the same local path
+        local = local_path(f)
+        if local is not None:
             try:
-                st = os.stat(local if os.path.exists(local) else "/" + local.lstrip("/"))
+                st = os.stat(local)
                 entries.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
                 continue
             except OSError:
@@ -453,7 +455,51 @@ def dataset_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
     return f"fp-{h[:20]}-{len(entries)}"
 
 
-_NARROW_NODES = {"Project", "Filter", "Relation", "SubqueryAlias", "View", "ResolvedHint"}
+# plan nodes that map each input partition to one output partition, row
+# by row, and the leaves whose partitions no byte-based planner sized
+_ROW_LOCAL_NODES = {
+    "Project", "Filter", "Relation", "SubqueryAlias", "View", "ResolvedHint",
+    "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+}
+_UNSIZED_LEAVES = {"LogicalRDD", "Range"}
+
+
+def spark_feed_mode(df: DataFrame, target_partitions: int) -> tuple[str, str]:
+    """write_encoded's bucket_mode='auto' choice for the Spark feed, from
+    the optimized plan alone: one py4j call, no Spark job. Returns (mode,
+    reason). "partition" needs all of:
+
+    - every plan node row-local (`_ROW_LOCAL_NODES`), so the input's
+      partitions are its leaves' partitions;
+    - every leaf a parquet/orc Relation (Spark's planner caps each file
+      split at maxSplitBytes), a LogicalRDD or a Range;
+    - npart >= max(2, min(target_partitions, cores) // 2), the
+      parallelism the salted shuffle would give;
+    - with a LogicalRDD or Range leaf, npart <= target_partitions: nobody
+      sized those partitions, so never more buckets than salting makes.
+
+    Anything else (joins, aggregates, key repartitions, cached relations,
+    no JVM plan to read) is "salted"."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
+        return "salted", "no JVM plan to read"
+    unsized = False
+    for line in plan.splitlines():
+        node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
+        if node == "Relation" and not line.rstrip().endswith((" parquet", " orc")):
+            return "salted", "a relation that is not a parquet/orc file scan"
+        unsized |= node in _UNSIZED_LEAVES
+        if node and node not in _ROW_LOCAL_NODES | _UNSIZED_LEAVES:
+            return "salted", f"{node} in the plan is not row-local"
+    npart = df.rdd.getNumPartitions()
+    want = min(target_partitions, df.sparkSession.sparkContext.defaultParallelism)
+    if npart < max(2, want // 2):
+        return "salted", f"{npart} input partition(s) underuse {want}-way parallelism"
+    if unsized and npart > target_partitions:
+        return "salted", f"{npart} generated partitions exceed target_partitions={target_partitions}"
+    return "partition", f"row-local plan, {npart} input partitions encoded in place"
+
 
 _SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
 
@@ -474,95 +520,6 @@ def _parse_bytes_conf(v: str, default: int) -> int:
         return int(float(num) * _SIZE_UNITS[unit])
     except (ValueError, OverflowError):
         return default
-
-
-def _scan_is_byte_balanced(df: DataFrame) -> bool | None:
-    """Zero-job balance check for bare file-scan DataFrames.
-
-    Spark's split planner chops splittable files (parquet/orc) into pieces
-    of at most maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    totalBytes/defaultParallelism)) and packs them, so every scan
-    partition holds ≤ maxSplitBytes — byte-balance is guaranteed by the
-    planner, no data scan needed. Returns True only when the plan is a
-    pure narrow pipeline over a parquet/orc relation (so scan partitions
-    ARE the df's partitions) AND the packing simulation is balanced and
-    above the fragmentation floor; None in every other case (then the
-    caller falls back to the measured probe job — only the happy verdict
-    short-circuits)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
-        return None
-    splittable = False
-    for line in plan.splitlines():
-        node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-        if not node:
-            continue
-        if node == "Relation":
-            # only splittable columnar formats give the balance guarantee
-            splittable = " parquet" in line or " orc" in line
-            if not splittable:
-                return None
-            continue
-        if node not in _NARROW_NODES:
-            return None
-    if not splittable:
-        return None
-    conf = df.sparkSession.conf
-    max_part = _parse_bytes_conf(conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 << 20)
-    open_cost = _parse_bytes_conf(conf.get("spark.sql.files.openCostInBytes", "4m"), 4 << 20)
-    files = [f for f in df.inputFiles() if f.startswith("file:")]
-    if not files or len(files) != len(df.inputFiles()):
-        return None  # non-local storage: sizes not cheaply known here
-    total = 0
-    try:
-        for f in files:
-            total += os.path.getsize(f[len("file:"):])
-    except OSError:
-        return None
-    if total == 0:
-        return None
-    par = df.sparkSession.sparkContext.defaultParallelism
-    max_split = min(max_part, max(open_cost, (total + len(files) * open_cost) // max(par, 1)))
-    if max_split <= 0 or total // max_split + len(files) > 1_000_000:
-        # an implausible piece count (misparsed conf, pathological input)
-        # must not turn this zero-job static check into a driver stall —
-        # defer to the measured probe instead of simulating millions of
-        # splits
-        return None
-    # replicate the planner's packing: chop each file into ≤max_split
-    # pieces, sort desc, greedy-fill partitions (openCost pads the fill
-    # accounting but not the real bytes)
-    pieces = []
-    try:
-        for f in files:
-            sz = os.path.getsize(f[len("file:"):])
-            while sz > 0:
-                pieces.append(min(sz, max_split))
-                sz -= max_split
-    except OSError:
-        return None
-    pieces.sort(reverse=True)
-    parts: list[float] = []
-    cur = padded = 0.0
-    for p in pieces:
-        if padded + p > max_split and cur > 0:
-            parts.append(cur)
-            cur = padded = 0.0
-        cur += p
-        padded += p + open_cost
-    if cur:
-        parts.append(cur)
-    npart = df.rdd.getNumPartitions()
-    if not parts or len(parts) != npart:
-        return None  # our packing model disagrees with the real planner
-    mean = total / len(parts)
-    # only the happy verdict short-circuits; a static "no" (imbalance, or
-    # partitions under the ~1 MB fragmentation floor) defers to the
-    # measured row-weight probe, which judges with the real weight column
-    if max(parts) <= 2.0 * mean and mean >= open_cost / 4:
-        return True
-    return None
 
 
 def _publish_manifest(pending: str, man_dir: str, clear: bool) -> None:
@@ -629,41 +586,6 @@ def _partition_plan_conf(spark: SparkSession) -> dict:
     }
 
 
-def _partition_balance(df: DataFrame, weight_col: str | None) -> dict | None:
-    """One probe job: per-input-partition weight balance. Returns
-    {n_parts, n_rows, max_w, mean_w} or None when the probe can't run
-    (empty input). Cost is a columnar scan of the weight column with a
-    map-side partial agg — O(partitions) rows ever reach the driver-side
-    final agg, and only ONE row is collected."""
-    from pyspark.sql.utils import AnalysisException
-
-    pid = F.spark_partition_id().alias("__pid")
-    # a plain-name weight column absent from the frame falls back to row
-    # counts without round-tripping an AnalysisException through the JVM
-    # (which logs a scary ERROR even when caught); the try/except below
-    # stays as the backstop for expression-valued weight_col
-    if (weight_col is not None and weight_col.isidentifier()
-            and weight_col.lower() not in {c.lower() for c in df.columns}):
-        weight_col = None
-    try:
-        w = F.sum(F.expr(weight_col)).alias("w") if weight_col else F.count("*").alias("w")
-        per = df.groupBy(pid).agg(w, F.count("*").alias("n"))
-    except AnalysisException:
-        if weight_col is not None:
-            return _partition_balance(df, None)
-        return None
-    row = per.agg(
-        F.max("w").alias("max_w"), F.avg("w").alias("mean_w"),
-        F.sum("n").alias("n_rows"), F.count("*").alias("n_parts"),
-    ).collect()[0]
-    if row["n_parts"] == 0 or not row["mean_w"]:
-        return None
-    return {
-        "n_parts": int(row["n_parts"]), "n_rows": int(row["n_rows"]),
-        "max_w": float(row["max_w"]), "mean_w": float(row["mean_w"]),
-    }
-
-
 def write_encoded(
     df: DataFrame,
     path: str,
@@ -678,7 +600,6 @@ def write_encoded(
     weight_col: str | None = "n_tok",
     cluster_col: str | None = None,
     bucket_mode: str = "auto",
-    balance_threshold: float = 2.0,
     data_dirname: str = "data",
     manifest_dirname: str = "manifest",
     bloom_cols: list[str] | None = None,
@@ -689,20 +610,18 @@ def write_encoded(
     `cluster_col` orders rows within each bucket so blocks carry tight
     min/max ranges on that column (see read_encoded(where=...)).
 
-    Skew management is explicit and measured, not assumed (north rule):
-
-    - bucket_mode="auto" (default) runs a one-job probe of WEIGHT PER INPUT
-      PARTITION. Encode is embarrassingly parallel over rows, so what
-      imbalances tasks is bytes-per-partition — NOT source skew: a Zipfian
-      `source` column is harmless when the scan's byte-based file splits
-      already spread it (Spark splits files at maxPartitionBytes). When
-      max ≤ balance_threshold × mean, encode runs ZERO-SHUFFLE on the
-      input partitions as-is (bucket = spark_partition_id — the same plan
-      shape as a plain parquet write); imbalanced inputs (hot upstream
-      keys, unsplittable files) take the salted shuffle.
-    - bucket_mode="salted" always shuffles on the weighted salted bucket
-      (the resume key is then a pure function of (source, salt_key)).
-    - bucket_mode="partition" forces zero-shuffle.
+    bucket_mode="auto" (default) decides from the plan, with no Spark job
+    before the data write: "arrow" when `arrow_scan.fused_splits` accepts
+    the input (and no `cluster_col`), else `spark_feed_mode`'s choice —
+    "partition" (zero-shuffle, bucket = spark_partition_id: the plan shape
+    of a plain parquet write) for a row-local plan over parquet/orc files,
+    a LogicalRDD or a Range with enough partitions, "salted" (a shuffle
+    onto buckets weighted by `weight_col`) for anything else. Accepted
+    trade-off: no probe measures the rows, so a LogicalRDD source whose
+    partitions are key-skewed encodes in place with one slow task, as
+    Spark's own parquet write of it would. bucket_mode="salted" forces
+    the shuffle (the resume key is then a pure function of (source,
+    salt_key)); bucket_mode="partition" forces zero-shuffle.
 
     Partition-mode resume relies on Spark's deterministic partition
     planning (same input files + same session confs → same splits); the
@@ -761,8 +680,8 @@ def write_encoded(
     arrow_splits: list | None = None
     arrow_plan: dict | None = None
     if resuming:
-        # resume MUST reuse the recorded mode: re-probing could flip the
-        # decision and silently change what a bucket id means
+        # resume MUST reuse the recorded mode: a fresh choice could differ
+        # and silently change what a bucket id means
         chosen = snap.get("bucket_mode", "salted")
         if chosen == "arrow":
             from parquet_spark.sources.arrow_scan import fused_splits
@@ -792,39 +711,19 @@ def write_encoded(
             resuming = False
             chosen = bucket_mode
     if chosen == "auto":
-        chosen = "salted"
-        if cluster_col is None:
-            # the one fused-feed gate (sources/arrow_scan.fused_splits)
-            # decides: a bare local parquet relation or plain-column
-            # projection with enough splits for min(target_partitions,
-            # cores) tasks is read with pyarrow inside the encode tasks —
-            # same kernels, no JVM->Python row transpose, no probe job
-            # (row-range splits are balanced by construction)
-            from parquet_spark.sources.arrow_scan import fused_splits
+        # the one fused-feed gate (sources/arrow_scan.fused_splits) first:
+        # a bare local parquet relation or plain-column projection with
+        # enough splits for min(target_partitions, cores) tasks is read
+        # with pyarrow inside the encode tasks — same kernels, no
+        # JVM->Python row transpose. Otherwise the plan picks the mode.
+        from parquet_spark.sources.arrow_scan import fused_splits
 
-            fused = fused_splits(df, min(target_partitions, par), block_rows)
-            if fused is not None:
-                chosen = "arrow"
-                arrow_splits, arrow_plan = fused
-        if chosen == "salted":
-            # parallelism yardstick: what would the SALTED path actually give?
-            # min(target_partitions, cluster cores) — when the input already
-            # has at least half that, shuffling buys no extra parallelism
-            enough_parts = npart >= max(2, min(target_partitions, par) // 2)
-            scan_ok = _scan_is_byte_balanced(df) if enough_parts else False
-            if scan_ok:
-                # bare splittable scan: the split planner's byte-balance
-                # guarantee holds, no probe job needed
-                chosen = "partition"
-            elif scan_ok is None:
-                # partitioning not reasoned about statically — measure it
-                bal = _partition_balance(df, weight_col)
-                if (
-                    bal is not None
-                    and bal["max_w"] <= balance_threshold * bal["mean_w"]
-                    and bal["n_rows"] / bal["n_parts"] >= block_rows / 4
-                ):
-                    chosen = "partition"
+        fused = None if cluster_col else fused_splits(df, min(target_partitions, par), block_rows)
+        if fused is not None:
+            chosen = "arrow"
+            arrow_splits, arrow_plan = fused
+        else:
+            chosen = spark_feed_mode(df, target_partitions)[0]
 
     if chosen == "arrow":
         salted = None

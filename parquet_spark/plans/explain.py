@@ -131,16 +131,17 @@ def explain_encode(df: DataFrame, sample_rows: int = 16384) -> list[dict]:
 
 
 def explain_partitioning(df: DataFrame, target_partitions: int | None = None) -> str:
-    """One-line prediction of write_encoded's bucket_mode='auto' decision,
-    using only the zero-job static analysis (never runs the probe job)."""
-    from parquet_spark.operators.encode import _scan_is_byte_balanced
+    """One-line account of write_encoded's bucket_mode='auto' choice. It
+    calls the same two functions write_encoded decides with
+    (`arrow_scan.fused_splits`, then `encode.spark_feed_mode`), so the
+    first word is the mode write_encoded records: arrow, partition or
+    salted. Runs no Spark job."""
+    from parquet_spark.operators.encode import spark_feed_mode
+    from parquet_spark.sources import arrow_scan
 
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     tp = target_partitions or max(par * 2, 8)
-    npart = df.rdd.getNumPartitions()
-    from parquet_spark.sources import arrow_scan
-
     fused = arrow_scan.fused_splits(df, min(tp, par))
     if fused is not None:
         return (
@@ -149,20 +150,10 @@ def explain_partitioning(df: DataFrame, target_partitions: int | None = None) ->
             f"{arrow_scan.fused_task_count(spark, fused[0])} tasks, read with "
             f"pyarrow in-task (no JVM row feed, no shuffle)"
         )
-    if npart < max(2, min(tp, par) // 2):
-        return (
-            f"salted shuffle: {npart} input partition(s) underuse "
-            f"{min(tp, par)}-way parallelism"
-        )
-    if _scan_is_byte_balanced(df):
-        return (
-            f"zero-shuffle partition mode: bare splittable scan, "
-            f"{npart} byte-balanced partitions (proven statically, no job)"
-        )
-    return (
-        "runtime probe decides (one weight-per-partition job): "
-        "balanced -> zero-shuffle, imbalanced -> salted shuffle"
-    )
+    mode, reason = spark_feed_mode(df, tp)
+    if mode == "partition":
+        return f"partition mode, zero-shuffle: {reason}"
+    return f"salted shuffle: {reason}"
 
 
 def plan_summary(df: DataFrame, sample_rows: int = 16384) -> str:

@@ -57,6 +57,8 @@ from __future__ import annotations
 import os
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
@@ -109,6 +111,8 @@ def fused_splits(
       the files reproduces exactly;
     - at least max(2, want // 2) splits, enough to occupy the `want`
       tasks the caller would otherwise run;
+    - every column read by pyarrow with the Arrow type of its Spark field
+      (`_read_types_match`);
     - readable footers, and `spark.sql.files.ignoreCorruptFiles` off.
 
     A resume recomputes this plan and compares it for equality — any
@@ -144,9 +148,15 @@ def fused_splits(
     files.sort()
     par = spark.sparkContext.defaultParallelism
     try:
-        raw = _plan_splits_for_files(files, par)
-    except (OSError, ValueError):  # unreadable footer (pyarrow's
-        # ArrowInvalid is a ValueError): the Spark scan reports it
+        # the footers the planner reads: every file's when there are few
+        # files, else only the first file's
+        footers = {f: pq.read_metadata(f) for f in (files if len(files) < par else files[:1])}
+        if not _read_types_match(df.schema, [m.schema.to_arrow_schema() for m in footers.values()]):
+            return None
+        raw = _plan_splits_for_files(files, par, footers)
+    except (OSError, ValueError, NotImplementedError):  # unreadable
+        # footer (pyarrow's ArrowInvalid is a ValueError): the Spark scan
+        # reports it
         return None
     if len(raw) < max(2, want // 2):
         return None
@@ -161,6 +171,42 @@ def fused_splits(
     return splits, plan
 
 
+def _same_type(a: pa.DataType, b: pa.DataType) -> bool:
+    """Arrow type equality up to timestamp timezones, child nullability
+    and list item names (pyarrow reads `element`, Spark says `item`)."""
+    if pa.types.is_timestamp(a) and pa.types.is_timestamp(b):
+        return a.unit == b.unit
+    if a.id != b.id or a.num_fields != b.num_fields:
+        return False
+    if not a.num_fields:
+        return a == b
+    return all(
+        _same_type(a.field(i).type, b.field(i).type)
+        and (not pa.types.is_struct(a) or a.field(i).name == b.field(i).name)
+        for i in range(a.num_fields)
+    )
+
+
+def _read_types_match(spark_schema, arrow_schemas: list[pa.Schema]) -> bool:
+    """Every Spark field's Arrow type (`to_arrow_type`) equals the type
+    pyarrow reads for the file column of that exact name, in every given
+    footer schema. Otherwise the fused feed would hand the kernels other
+    values than the Spark scan does: INT96 timestamps read as ns, unsigned
+    and dictionary-typed columns, names that differ only in case."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    try:
+        want = [(f.name, to_arrow_type(f.dataType)) for f in spark_schema.fields]
+    except TypeError:  # a Spark type without an Arrow mapping
+        return False
+    for schema in arrow_schemas:
+        for name, t in want:
+            i = schema.get_field_index(name)
+            if i < 0 or not _same_type(schema.field(i).type, t):
+                return False
+    return True
+
+
 def plan_arrow_splits(path: str, parallelism: int) -> list[tuple[str, int, int, int]]:
     """(file, row_group, lo, hi) splits. row_group == -1 means the whole
     file (many-files regime: the driver read no footer, the task will).
@@ -171,15 +217,16 @@ def plan_arrow_splits(path: str, parallelism: int) -> list[tuple[str, int, int, 
     return _plan_splits_for_files(files, parallelism)
 
 
-def _plan_splits_for_files(files: list[str], parallelism: int) -> list[tuple[str, int, int, int]]:
-    import pyarrow.parquet as pq
-
+def _plan_splits_for_files(
+    files: list[str], parallelism: int, footers: dict | None = None
+) -> list[tuple[str, int, int, int]]:
+    """`footers`: FileMetaData by file, already read by the caller."""
     if len(files) >= parallelism:
         return [(f, -1, 0, -1) for f in files]
     splits: list[tuple[str, int, int, int]] = []
     rg_meta = []  # (file, rg, n_rows, compressed column-chunk bytes)
     for f in files:
-        meta = pq.ParquetFile(f).metadata
+        meta = footers[f] if footers else pq.ParquetFile(f).metadata
         for rg in range(meta.num_row_groups):
             g = meta.row_group(rg)
             if g.num_rows:  # a row group without rows needs no read

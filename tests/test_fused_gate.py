@@ -1,7 +1,8 @@
 """One gate, `arrow_scan.fused_splits`, chooses between the fused Arrow
 feed and the Spark feed for write_encoded, roundtrip_table and
-explain_partitioning. The three must agree for every input shape, and
-either feed must return the input's rows."""
+explain_partitioning; on the Spark feed, `encode.spark_feed_mode` picks
+partition or salted mode. The callers must agree for every input shape,
+and every feed and mode must return the input's rows."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from parquet_spark.operators.decode import decode_table, read_encoded, roundtrip
 from parquet_spark.operators.encode import read_snapshot, write_encoded
 from parquet_spark.plans import explain_partitioning
 from parquet_spark.sources.arrow_scan import fused_splits, list_parquet_files
+from parquet_spark.sources.synth import sequences_df
 
 N = 4000
 
@@ -61,6 +63,34 @@ def _wide_one_file(d):
     return d
 
 
+def _typed_file(d, table, **write_opts):
+    """One file of 8 row groups: enough splits for the fused feed, were
+    the gate to accept its column types."""
+    os.makedirs(d)
+    pq.write_table(table, os.path.join(d, "t.parquet"), row_group_size=table.num_rows // 8, **write_opts)
+    return d
+
+
+def _int96(d):
+    ts = pa.array([1_000_001 + i * 1_000_003 for i in range(N)], pa.timestamp("us"))
+    return _typed_file(d, pa.table({"k": range(N), "ts": ts}), use_deprecated_int96_timestamps=True)
+
+
+def _unsigned(d):
+    return _typed_file(d, pa.table({
+        "u8": pa.array([i % 256 for i in range(N)], pa.uint8()),
+        "u32": pa.array([i * 1_000_003 % (1 << 32) for i in range(N)], pa.uint32()),
+    }))
+
+
+def _dictionary(d):
+    return _typed_file(d, pa.table({"k": range(N), "s": pa.array([f"w{i % 37}" for i in range(N)]).dictionary_encode()}))
+
+
+def _case_names(d):
+    return _typed_file(d, pa.table({"Id": range(N), "Val": [i * 0.5 for i in range(N)]}))
+
+
 def _zero_rg(d):
     os.makedirs(d)
     for i in range(2):
@@ -90,13 +120,19 @@ SHAPES = {
     ),
     "filtered": (lambda d: _one_file(d, N // 4), lambda df: df.where(F.col("k") % 3 != 0), "spark"),
     "zero_row_groups": (_zero_rg, lambda df: df, "spark"),
+    # pyarrow reads these columns with other types than Spark's fields
+    # (ns timestamps, unsigned and dictionary types) or other names
+    "int96_timestamps": (_int96, lambda df: df, "spark"),
+    "unsigned_ints": (_unsigned, lambda df: df, "spark"),
+    "dictionary_strings": (_dictionary, lambda df: df, "spark"),
+    "case_differing_names": (_case_names, lambda df: df.select("id", "val"), "spark"),
 }
 
 
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_gate_agreement(spark, tmp_path, shape):
-    """explain_partitioning predicts arrow exactly when write_encoded
-    records it; roundtrip_table reads from a Range exactly when
+    """explain_partitioning names the mode write_encoded records (arrow,
+    partition or salted); roundtrip_table reads from a Range exactly when
     fused_splits returns splits; both decode to the input."""
     make, view, want_feed = SHAPES[shape]
     df = view(spark.read.parquet(make(str(tmp_path / "in"))))
@@ -113,7 +149,51 @@ def test_gate_agreement(spark, tmp_path, shape):
     predicted = explain_partitioning(df)
     write_encoded(df, path, resume=False)
     recorded = read_snapshot(path)["bucket_mode"]
-    assert predicted.startswith("arrow") == (recorded == "arrow") == (fused is not None)
+    assert predicted.split()[0] == recorded
+    assert (recorded == "arrow") == (fused is not None)
+    dec = read_encoded(spark, path)
+    assert dec.count() == df.count()
+    assert _crc(dec) == _crc(df)
+
+
+def _seq(spark, n_partitions=4):
+    return sequences_df(spark, 2000, seed=3, n_partitions=n_partitions)
+
+
+# (DataFrame, target_partitions, expected bucket_mode)
+MODES = {
+    "filter_multi_file_scan": (
+        lambda spark, d: spark.read.parquet(_dir4(d)).where(F.col("k") % 3 != 0), 8, "partition"
+    ),
+    "generated": (lambda spark, d: _seq(spark), 8, "partition"),
+    "repartition_by_key": (lambda spark, d: _seq(spark).repartition(8, "source"), 8, "salted"),
+    "join": (
+        lambda spark, d: _seq(spark).join(_seq(spark).select("doc_id", F.lit(1).alias("one")), "doc_id"), 8, "salted"
+    ),
+    "generated_over_target": (lambda spark, d: _seq(spark, 8), 4, "salted"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(MODES))
+def test_spark_feed_mode(spark, tmp_path, shape):
+    """Inputs the fused gate refuses: the plan alone picks partition or
+    salted mode, explain_partitioning names it, a partition-mode write
+    runs one Spark job (the data write, no probe), and either mode
+    decodes to the input."""
+    make, tp, want = MODES[shape]
+    df = make(spark, str(tmp_path / "in"))
+    sc = spark.sparkContext
+    assert fused_splits(df, sc.defaultParallelism) is None
+    assert explain_partitioning(df, target_partitions=tp).split()[0] == want
+    path = str(tmp_path / "tbl")
+    sc.setJobGroup(f"mode-{shape}", "write_encoded")
+    try:
+        write_encoded(df, path, target_partitions=tp, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert read_snapshot(path)["bucket_mode"] == want
+    if want == "partition":
+        assert len(sc.statusTracker().getJobIdsForGroup(f"mode-{shape}")) == 1
     dec = read_encoded(spark, path)
     assert dec.count() == df.count()
     assert _crc(dec) == _crc(df)

@@ -82,9 +82,10 @@ def test_explain_partitioning_modes(spark, tmp_path):
     scan = spark.read.parquet(p)
     line = explain_partitioning(scan, target_partitions=4)
     # bare scan now predicts the Arrow fused feed (r6); never underuse
-    assert "arrow" in line or "zero-shuffle" in line or "probe" in line
+    assert "arrow" in line or "zero-shuffle" in line
     assert "salted shuffle" in explain_partitioning(scan.coalesce(1), target_partitions=64)
-    # a generated (non-scan) df can't be statically analyzed -> probe
+    # a generated df is row-local over a LogicalRDD with 8 <= 8 partitions:
+    # encoded in place, no probe job
     gen = sequences_df(spark, 1000, seed=3, n_partitions=8)
-    assert "probe" in explain_partitioning(gen, target_partitions=8)
+    assert "zero-shuffle" in explain_partitioning(gen, target_partitions=8)
     assert "partitioning:" in plan_summary(scan)

@@ -154,7 +154,8 @@ def test_resume_appends_manifest_incrementally(spark, tmp_path):
 
     path = str(tmp_path / "inc_t")
     df = sequences_df(spark, 4000, seed=12, n_partitions=4)
-    write_encoded(df, path, target_partitions=8, resume=False, fingerprint="fx")
+    # salted: 8 buckets, whatever the auto rule would pick for this input
+    write_encoded(df, path, target_partitions=8, resume=False, fingerprint="fx", bucket_mode="salted")
     man_dir = os.path.join(path, "manifest")
     before = {
         f: os.path.getmtime(os.path.join(man_dir, f))
@@ -182,7 +183,7 @@ def test_resume_appends_manifest_incrementally(spark, tmp_path):
         f: os.path.getmtime(os.path.join(man_dir, f))
         for f in os.listdir(man_dir) if f.endswith(".parquet")
     }
-    res = write_encoded(df, path, target_partitions=8, resume=True, fingerprint="fx")
+    res = write_encoded(df, path, target_partitions=8, resume=True, fingerprint="fx", bucket_mode="salted")
     assert 0 < res["buckets_skipped"] < res["buckets_total"]
     after_files = [f for f in os.listdir(man_dir) if f.endswith(".parquet")]
     # old manifest files untouched (same mtimes), new ones appended
@@ -297,8 +298,8 @@ def test_partition_mode_resume_mismatched_partitions_reencodes(spark, seq_path, 
 
 def test_parse_bytes_conf_two_letter_suffixes():
     """Spark accepts 'kb/mb/gb' size spellings; '128mb' must read as
-    128 MiB, not 128 bytes (the latter turns the static balance check's
-    packing simulation into a driver stall)."""
+    128 MiB, not 128 bytes (the latter makes `arrow_scan.fused_task_count`
+    pack the fused scan into one task per split)."""
     from parquet_spark.operators.encode import _parse_bytes_conf
 
     assert _parse_bytes_conf("134217728", 0) == 128 << 20
@@ -314,27 +315,6 @@ def test_parse_bytes_conf_two_letter_suffixes():
     assert _parse_bytes_conf("", 77) == 77
 
 
-def test_static_balance_check_survives_mb_conf(spark, seq_path):
-    """Integration guard for the '128mb' misparse: with the two-letter
-    spelling set in the session, the zero-job static check must neither
-    stall nor flip its verdict vs the canonical spelling."""
-    from parquet_spark.operators.encode import _scan_is_byte_balanced
-
-    df = spark.read.parquet(seq_path)
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    verdict_canonical = _scan_is_byte_balanced(df)
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "128mb")
-        import time
-
-        t0 = time.perf_counter()
-        verdict = _scan_is_byte_balanced(spark.read.parquet(seq_path))
-        assert time.perf_counter() - t0 < 5.0
-        assert verdict == verdict_canonical
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", before)
-
-
 def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     """Same file names, different bytes → different fingerprint, and a
     resume against the stale table does a full re-encode instead of
@@ -348,14 +328,14 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     src.mkdir()
     f = str(src / "part-0.parquet")
 
-    def make(n):
+    def make(n, dest=f):
         t = pa.table({
             "doc_id": pa.array([f"d{i}" for i in range(n)], pa.string()),
             "tokens": pa.array([[i, i + 1] for i in range(n)], pa.list_(pa.int32())),
             "n_tok": pa.array([2] * n, pa.int32()),
             "source": pa.array(["s0"] * n, pa.string()),
         })
-        pq.write_table(t, f)
+        pq.write_table(t, dest)
 
     make(100)
     df1 = spark.read.parquet(str(src))
@@ -371,6 +351,15 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     s = write_encoded(df2, path, target_partitions=2, resume=True, block_rows=64)
     assert s["buckets_skipped"] == 0  # full re-encode, no stale append
     assert read_encoded(spark, path).count() == 150
+
+    # Spark percent-encodes the space in the file URI; the stat must
+    # still see the file, or only the path would enter the fingerprint
+    spaced = tmp_path / "dir with space"
+    spaced.mkdir()
+    make(100, str(spaced / "part-0.parquet"))
+    fp_space = dataset_fingerprint(spark.read.parquet(str(spaced)))
+    make(150, str(spaced / "part-0.parquet"))
+    assert dataset_fingerprint(spark.read.parquet(str(spaced))) != fp_space
 
 
 def test_partition_mode_resume_rejects_plan_conf_drift(spark, seq_path, tmp_path):

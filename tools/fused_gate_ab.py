@@ -1,16 +1,29 @@
 """Interleaved A/B of the shapes whose feed the fused-feed gate decides.
 
-Times five ops in two checkouts of this repo, one Spark session per run:
+Times nine ops in two checkouts of this repo, one Spark session per run:
 
 - `write_encoded` of a 100k-row, 8-file nested token table,
 - `write_encoded` of a 4k-row, 4-file nested token table,
+- `write_encoded` of a filter over the 100k-row, 8-file table,
+- `write_encoded` of a filter over a 48k-row, 8-file table,
+- `write_encoded` of a filter over a 36k-row, 3-file table whose first
+  file carries 8x the `n_tok` weight of the others at the same bytes,
+- `write_encoded` of a 200k-row, 4-partition `sequences_df` generator,
 - `roundtrip_delta_sorted` at sf0.1 (orders, 150k rows),
 - `roundtrip_auto_all` at sf0.01 (lineitem, 60k rows),
 - `roundtrip_fsst_text` at sf0.1 (documents, 5k wide rows in one
   590 KB row group).
 
+The filters and the generator take the Spark feed, where write_encoded
+picks partition or salted mode. The file sizes put the three filters on
+the three outcomes of the split-packing check that decided before the
+plan-only rule: a verdict of balanced (1.6 MB per partition), no verdict
+with a balanced row probe, and no verdict with a weight-skewed probe
+(partitions under 1 MB).
+
 Each run warms every op once, then times it `--reps` times and records
-the median, the feed it took and a CRC of its output against the input.
+the median, the feed or write mode it took and a CRC of its output
+against the input.
 Runs alternate between the checkouts, and the first side of each pair
 alternates too, so both sides sample the same stretch of host load.
 
@@ -57,11 +70,21 @@ def run(repo: str, work: str, side: str, pair: int, reps: int) -> dict:
     from __spark_entry__ import queries
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.sources.synth import sequences_df
 
     q = queries()
     ops = {}
-    for name in ("write_100k_8files", "write_4k_4files"):
-        src = spark.read.parquet(os.path.join(work, name))
+    sources = {
+        name: spark.read.parquet(os.path.join(work, name)) for name in ("write_100k_8files", "write_4k_4files")
+    }
+    for name, inp in (
+        ("write_filter_100k_8files", "write_100k_8files"),
+        ("write_filter_48k_8files", "write_48k_8files"),
+        ("write_filter_36k_3files_weight_skew", "skew_36k_3files"),
+    ):
+        sources[name] = spark.read.parquet(os.path.join(work, inp)).where("n_tok % 5 != 0")
+    sources["write_gen_200k_4parts"] = sequences_df(spark, 200_000, seed=9, n_partitions=4, mean_tokens=32)
+    for name, src in sources.items():
 
         def write(src=src, name=name):
             out = os.path.join(work, f"out-{side}-{name}-{uuid.uuid4().hex[:8]}")
@@ -117,12 +140,28 @@ def prepare(repo: str, work: str) -> None:
     sys.path.insert(0, repo)
     from pyspark.sql import SparkSession
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_spark.sources.arrow_scan import list_parquet_files
     from parquet_spark.sources.synth import write_sequences
 
     spark = SparkSession.builder.master(f"local[{CPUS}]").config("spark.ui.enabled", "false").getOrCreate()
     write_sequences(spark, os.path.join(work, "write_100k_8files"), 100_000, seed=7, n_partitions=8, mean_tokens=32)
     write_sequences(spark, os.path.join(work, "write_4k_4files"), 4_000, seed=8, n_partitions=4, mean_tokens=32)
+    write_sequences(spark, os.path.join(work, "write_48k_8files"), 48_000, seed=11, n_partitions=8, mean_tokens=32)
+    skew = os.path.join(work, "skew_36k_3files")
+    write_sequences(spark, skew, 36_000, seed=10, n_partitions=3, mean_tokens=32)
     spark.stop()
+    # weight skew without byte skew: the first file's rows claim 8x n_tok
+    first = list_parquet_files(skew)[0]
+    t = pq.read_table(first)
+    i = t.schema.get_field_index("n_tok")
+    heavy = pc.multiply(t.column(i), pa.scalar(8, t.schema.field(i).type))
+    pq.write_table(t.set_column(i, t.schema.field(i), heavy), first)
+    # the Hadoop checksum sidecar no longer matches the rewritten file
+    os.remove(os.path.join(skew, f".{os.path.basename(first)}.crc"))
 
 
 def main() -> None:
@@ -139,7 +178,7 @@ def main() -> None:
     _, parent, change, work, out = args[:5]
     n_pairs = int(args[args.index("--pairs") + 1]) if "--pairs" in args else 10
     os.makedirs(work, exist_ok=True)
-    if not os.path.exists(os.path.join(work, "write_4k_4files")):
+    if not os.path.exists(os.path.join(work, "skew_36k_3files")):
         subprocess.run([sys.executable, SCRIPT, "prepare", change, work], check=True)
     with open(out, "a") as f:
         for pair in range(n_pairs):
