@@ -359,12 +359,28 @@ def encode_array(arr: pa.Array, codec: str | None = None, compression: str | Non
     return header + payload
 
 
+def _read_header(mv: memoryview) -> tuple:
+    """Unpack and check one block header. A payload shorter than the
+    header, or than the body length the header declares, raises
+    ValueError("corrupt block payload: ...")."""
+    if len(mv) < _HEADER.size:
+        raise ValueError(f"corrupt block payload: {len(mv)} bytes, shorter than the {_HEADER.size}-byte header")
+    fields = _HEADER.unpack_from(mv, 0)
+    if fields[0] != MAGIC:
+        raise ValueError("bad block magic")
+    body_len = fields[9]
+    if _HEADER.size + body_len > len(mv):
+        raise ValueError(
+            f"corrupt block payload: header declares a {body_len}-byte body, "
+            f"{len(mv) - _HEADER.size} bytes follow"
+        )
+    return fields
+
+
 def decode_array(buf: bytes | memoryview) -> pa.Array:
     """Decode one block back to an Arrow array (inverse of encode_array)."""
     mv = memoryview(buf)
-    magic, version, codec_id, comp_id, flags, dt_id, child_dt, reserved, n, body_len, raw_len = _HEADER.unpack_from(mv, 0)
-    if magic != MAGIC:
-        raise ValueError("bad block magic")
+    magic, version, codec_id, comp_id, flags, dt_id, child_dt, reserved, n, body_len, raw_len = _read_header(mv)
     codec_name = CODEC_NAMES[codec_id]
     dt_name = _DTYPE_NAMES[dt_id]
     body_mv = mv[_HEADER.size : _HEADER.size + body_len]
@@ -476,9 +492,7 @@ def describe(buf: bytes | memoryview) -> dict:
     """Parse block headers (recursively for lists/strings) without decoding
     values — feeds the manifest's codec/compression lineage columns."""
     mv = memoryview(buf)
-    magic, _v, codec_id, comp_id, flags, dt_id, child_dt, _, n, body_len, raw_len = _HEADER.unpack_from(mv, 0)
-    if magic != MAGIC:
-        raise ValueError("bad block magic")
+    magic, _v, codec_id, comp_id, flags, dt_id, child_dt, _, n, body_len, raw_len = _read_header(mv)
     out = {
         "codec": CODEC_NAMES[codec_id],
         "compression": _COMPRESSION_NAMES[comp_id],

@@ -34,9 +34,9 @@ def _decode_fn(columns: list[str], spark_schema: StructType, verify: bool = Fals
         import zlib
 
         from parquet_spark.codecs import blocks as blk
-        from parquet_spark.util import drop_spark_archive_importers
+        from parquet_spark.util import worker_task_start
 
-        drop_spark_archive_importers()
+        worker_task_start()
         for b in batches:
             if b.num_rows == 0:
                 continue

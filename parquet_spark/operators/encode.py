@@ -118,9 +118,9 @@ def _encode_fn(columns: list[str], block_rows: int, codec_overrides: dict | None
         from pyspark import TaskContext
 
         from parquet_spark.codecs import blocks as blk
-        from parquet_spark.util import drop_spark_archive_importers
+        from parquet_spark.util import worker_task_start
 
-        drop_spark_archive_importers()
+        worker_task_start()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
         attempt = ctx.attemptNumber() if ctx else 0

@@ -20,6 +20,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
+from parquet_spark.util import worker_task_start
+
 MEDIA_SCHEMA = (
     "media_id bigint, payload binary, media_type string, codec string, "
     "width int, height int, n_bytes int"
@@ -102,6 +104,7 @@ def extract_features(df: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     def fn(batches) -> Iterator["pa.RecordBatch"]:
+        worker_task_start()
         for b in batches:
             if b.num_rows == 0:
                 continue
@@ -165,6 +168,7 @@ def frame_sample(df: DataFrame, every_n: int = 7) -> DataFrame:
     import pyarrow as pa
 
     def fn(batches) -> Iterator["pa.RecordBatch"]:
+        worker_task_start()
         for b in batches:
             if b.num_rows == 0:
                 continue

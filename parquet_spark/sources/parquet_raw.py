@@ -1705,6 +1705,9 @@ def export_parquet(df, out_dir: str, compression: str = "snappy", page_rows: int
 
         import pyarrow as _pa
 
+        from parquet_spark.util import worker_task_start
+
+        worker_task_start()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
         tbls = [

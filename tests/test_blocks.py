@@ -329,3 +329,20 @@ def test_map_dict_kicks_in_on_repeated_keys():
     key_codec = d["child"]["child"]["fields"]["key"]["codec"]
     assert key_codec in ("dict", "rle", "fsst"), d["codec"]
     assert len(buf) < arr.nbytes / 4
+
+
+@pytest.mark.parametrize("fn", [blocks.decode_array, blocks.describe])
+def test_corrupt_payload_raises_named_error(fn):
+    """A payload shorter than its header, or than the body its header
+    declares, raises ValueError naming the corruption instead of a raw
+    struct.error or a silently short-sliced body."""
+    buf = blocks.encode_array(pa.array(np.arange(1000, dtype=np.int64)))
+    assert fn(buf) is not None
+    for bad in (b"\xde\xad\xbe\xef", b"", buf[:23]):
+        with pytest.raises(ValueError, match="corrupt block payload: .*shorter than the 24-byte header"):
+            fn(bad)
+    for bad in (buf[:-1], buf[:24], memoryview(buf)[:40]):
+        with pytest.raises(ValueError, match="corrupt block payload: header declares a"):
+            fn(bad)
+    # a longer buffer is not corrupt: nested blocks are read from slices
+    assert fn(buf + b"\0" * 8) is not None

@@ -51,7 +51,7 @@ def test_decode_projection_prunes_scan(spark, tmp_path):
         pq.write_table(tbl.set_column(idx, "tokens", garbage), f)
     proj = read_encoded(spark, path, columns=["n_tok"])
     assert proj.agg(F.sum("n_tok")).collect()[0][0] == want_sum
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="corrupt block payload"):
         read_encoded(spark, path).count()
 
 

@@ -1,11 +1,17 @@
-"""The codec kernels drop the zipimporters of Spark's own archives from a
-Python worker's import cache (`util.drop_spark_archive_importers`), so
-the `importlib.invalidate_caches()` at the start of every later task in
-that worker re-reads no archive directory. Zips under the SparkFiles
-root (`addPyFile`) keep their entries."""
+"""The engine's task bodies start with `util.worker_task_start`:
+
+- they drop the zipimporters of Spark's own archives from a Python
+  worker's import cache (`drop_spark_archive_importers`), so the
+  `importlib.invalidate_caches()` at the start of every later task in
+  that worker re-reads no archive directory; zips under the SparkFiles
+  root (`addPyFile`) keep their entries;
+- they freeze the worker's long-lived heap (`freeze_worker_heap`), so the
+  daemon's `gc.collect()` after every task walks only what the task
+  created."""
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import sys
@@ -18,8 +24,9 @@ import pytest
 from pyspark import SparkFiles
 from pyspark.sql import functions as F
 
+from parquet_spark import util
 from parquet_spark.operators.decode import roundtrip_table
-from parquet_spark.util import drop_spark_archive_importers
+from parquet_spark.util import drop_spark_archive_importers, freeze_worker_heap
 
 
 def _zip_package(path, pkg: str) -> str:
@@ -191,3 +198,105 @@ def test_spark_files_zip_importable_after_kernel(spark, tmp_path):
     assert len(rows) == par
     for r in rows:
         assert r.user_cached and r.outside == [] and r.value == "ab", r
+
+
+@pytest.fixture
+def fresh_heap(monkeypatch):
+    """This process with nothing frozen and no freeze recorded; spies on
+    `gc.freeze`. Yields the list of freeze calls; unfreezes afterwards."""
+    calls = []
+    real = gc.freeze
+    gc.unfreeze()
+    monkeypatch.setattr(util, "_frozen_at_modules", -1)
+    monkeypatch.setattr(gc, "freeze", lambda: calls.append(len(sys.modules)) or real())
+    yield calls
+    gc.unfreeze()
+
+
+def test_freeze_does_nothing_on_driver(monkeypatch, fresh_heap):
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", False)
+
+    freeze_worker_heap()
+
+    assert gc.get_freeze_count() == 0
+    assert fresh_heap == []
+
+
+def test_freeze_once_per_import_state(tmp_path, monkeypatch, fresh_heap):
+    _as_worker(monkeypatch, tmp_path / "userFiles")
+
+    freeze_worker_heap()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0 and len(fresh_heap) == 1
+
+    # no new module: the second call does not re-freeze (a re-freeze
+    # would also move these new containers into the frozen count)
+    keep = [[i] for i in range(1000)]
+    freeze_worker_heap()
+    assert gc.get_freeze_count() == frozen and len(fresh_heap) == 1
+
+    # a new import: the next call freezes again
+    (tmp_path / "wi_freeze_mod.py").write_text("VALUE = 1\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.delitem(sys.modules, "wi_freeze_mod", raising=False)
+    importlib.import_module("wi_freeze_mod")
+    freeze_worker_heap()
+    assert len(fresh_heap) == 2
+    assert gc.get_freeze_count() > frozen
+    del keep
+
+
+def test_cycle_made_after_freeze_is_collected(tmp_path, monkeypatch, fresh_heap):
+    import weakref
+
+    class Node:
+        pass
+
+    _as_worker(monkeypatch, tmp_path / "userFiles")
+    freeze_worker_heap()
+    assert gc.get_freeze_count() > 0
+
+    node = Node()
+    node.self = node
+    ref = weakref.ref(node)
+    del node
+    assert ref() is not None
+    gc.collect()
+    assert ref() is None
+
+
+def test_kernel_workers_freeze_their_heap(spark, tmp_path):
+    n = 4000
+    t = pa.table({"k": pa.array(range(n), pa.int64()), "s": pa.array([f"w{i % 37}" for i in range(n)])})
+    pq.write_table(t, str(tmp_path / "t.parquet"), row_group_size=n // 4)
+    df = spark.read.parquet(str(tmp_path))
+    par = spark.sparkContext.defaultParallelism
+
+    def probe(batches):
+        """Per worker pid: whether a codec kernel ran in this worker, and
+        how many objects its cyclic collector has frozen."""
+        import gc
+        import os
+        import sys
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()],
+            "kernel": ["parquet_spark.codecs.blocks" in sys.modules],
+            "frozen": [gc.get_freeze_count()],
+        })
+
+    def crc(frame):
+        return frame.agg(F.sum(F.crc32(F.concat_ws(",", F.col("k").cast("string"), "s")))).collect()[0][0]
+
+    out = roundtrip_table(df)
+    assert out.count() == n
+    assert crc(out) == crc(df)
+
+    rows = spark.range(0, par, numPartitions=par).mapInArrow(probe, "pid long, kernel boolean, frozen long").collect()
+    kernel_pids = {r.pid: r.frozen for r in rows if r.kernel}
+    assert kernel_pids, rows
+    assert all(frozen > 0 for frozen in kernel_pids.values()), kernel_pids

@@ -11,7 +11,14 @@ Three kinds of record, appended as JSON lines to one file:
   4-row-group file runs the codec kernels in the session's Python
   workers; then a 4-task JVM-only job (the floor) and a 4-task identity
   `mapInArrow` are timed `--reps` times each, the kernel job rerun
-  before every rep. Records the medians.
+  before every rep. Records the medians. Then a 16-task stage of an
+  instrumented identity kernel (defined here, not in the engine; it runs
+  the checkout's engine task start-up) runs `--reps` times, and records
+  per task: the worker CPU (`time.process_time`) from the previous
+  kernel exit in the same worker to this kernel's entry, which holds
+  PySpark's between-task work (the daemon's `gc.collect()`, the next
+  task's set-up), and the wall time from kernel entry to the first input
+  batch.
 
 Usage:
   python tools/task_startup_ab.py perfbench <parent_repo> <change_repo> <out.jsonl> [--pairs 5] [--seed 301]
@@ -99,6 +106,40 @@ def latency_run(repo: str, work: str, side: str, pair: int, reps: int) -> dict:
     def map_in_arrow():
         return spark.range(0, 4, numPartitions=4).mapInArrow(identity, "id long").collect()
 
+    def instrumented(batches):
+        """Identity kernel that times its own task boundary. The worker's
+        last kernel exit is kept on the `sys` module, which outlives
+        tasks in a reused worker."""
+        import os
+        import sys
+        import time
+
+        import pyarrow as pa
+
+        from parquet_spark import util
+        from parquet_spark.codecs import blocks  # noqa: F401  (the kernels' heap)
+
+        cpu_in, wall_in = time.process_time(), time.perf_counter()
+        last = getattr(sys, "_task_startup_ab_exit", None)
+        getattr(util, "worker_task_start", util.drop_spark_archive_importers)()
+        first_batch = None
+        try:
+            for b in batches:
+                if first_batch is None:
+                    first_batch = time.perf_counter() - wall_in
+            yield pa.RecordBatch.from_pydict({
+                "pid": [os.getpid()],
+                "between_cpu_s": [None if last is None else cpu_in - last],
+                "first_batch_s": [first_batch],
+            })
+        finally:
+            sys._task_startup_ab_exit = time.process_time()
+
+    def instrumented_job():
+        return spark.range(0, 16, numPartitions=16).mapInArrow(
+            instrumented, "pid long, between_cpu_s double, first_batch_s double"
+        ).collect()
+
     for op in (kernel_job, jvm_only, map_in_arrow):  # warm-up
         op()
     times = {"jvm_only_s": [], "map_in_arrow_s": []}
@@ -108,9 +149,16 @@ def latency_run(repo: str, work: str, side: str, pair: int, reps: int) -> dict:
             t0 = time.perf_counter()
             op()
             times[key].append(time.perf_counter() - t0)
+    tasks = {"between_cpu_s": [], "first_batch_s": []}
+    instrumented_job()  # warm-up: every worker records a first exit
+    for _ in range(reps):
+        for r in instrumented_job():
+            for key in tasks:
+                if getattr(r, key) is not None:
+                    tasks[key].append(getattr(r, key))
     spark.stop()
     rec = {"kind": "latency", "side": side, "pair": pair, "cpus": CPUS}
-    for key, ts in times.items():
+    for key, ts in {**times, **tasks}.items():
         rec[key] = statistics.median(ts)
         rec[key.replace("_s", "_times_s")] = ts
     return rec
