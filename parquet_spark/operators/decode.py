@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pyarrow as pa
 
@@ -24,10 +25,29 @@ from pyspark.sql.types import StructType
 from parquet_spark.operators.encode import read_snapshot
 
 
+_BATCH_RE = re.compile(r"batch=(\d+)")
+
+
+def _nullable_type(t: pa.DataType) -> pa.DataType:
+    """`t` with every nested field nullable. A null struct's child slots
+    are null too, and pyarrow casts no such array into a non-nullable
+    field; mapInArrow and the Data Source reader accept either."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(t.field(i).name, _nullable_type(t.field(i).type)) for i in range(t.num_fields)])
+    if pa.types.is_map(t):
+        return pa.map_(t.key_type, _nullable_type(t.item_type))
+    if pa.types.is_list(t):
+        return pa.list_(_nullable_type(t.value_type))
+    return t
+
+
 def _decode_fn(columns: list[str], spark_schema: StructType, verify: bool = False):
+    """The decode kernel; it emits Spark's Arrow type of each field with
+    nested fields nullable. Blocks record no timezone, so a `timestamp`
+    decodes as `timestamp[us]` and is cast to `timestamp[us, tz=UTC]`."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    null_types = {f.name: to_arrow_type(f.dataType) for f in spark_schema.fields}
+    types = {f.name: _nullable_type(to_arrow_type(f.dataType)) for f in spark_schema.fields}
 
     def fn(batches):
         import json as _json
@@ -49,7 +69,7 @@ def _decode_fn(columns: list[str], spark_schema: StructType, verify: bool = Fals
                     if not scalar.is_valid:
                         # additive schema evolution: blocks written before
                         # the column existed carry no payload — null-fill
-                        arrays.append(pa.nulls(n_rows, null_types[col]))
+                        arrays.append(pa.nulls(n_rows, types[col]))
                         continue
                     # zero-copy view into the Arrow buffer (as_py() would
                     # memcpy every multi-MB payload before decode)
@@ -63,7 +83,8 @@ def _decode_fn(columns: list[str], spark_schema: StructType, verify: bool = Fals
                                 f"crc32 {got:#010x} != manifest {want:#010x} "
                                 "(corrupt or tampered block payload)"
                             )
-                    arrays.append(blk.decode_array(payload))
+                    a = blk.decode_array(payload)
+                    arrays.append(a if a.type == types[col] else a.cast(types[col]))
                 yield pa.RecordBatch.from_arrays(arrays, names=columns)
 
     return fn
@@ -179,64 +200,80 @@ def roundtrip_table(
     return df.mapInArrow(gen, out_schema)
 
 
+def list_blocks_files(data_dir: str, max_batch: int | None = None) -> tuple:
+    """(filesystem, sorted blocks files) of one generation, via tablefs.
+    Spark's rules: `.parquet` only, no hidden (`_`, `.`) component below
+    `data_dir` (uncommitted `_temporary/` output); with `max_batch`, a
+    file under `batch=N` is kept iff N <= max_batch (`as_of`)."""
+    from parquet_spark import tablefs
+
+    fs, fs_data_dir, _ = tablefs.resolve(data_dir)
+    root = fs_data_dir.rstrip("/") + "/"
+    files = []
+    for p in tablefs.list_files(data_dir):
+        # relative to data_dir: a batch=N or hidden component in the
+        # table's own path must not count
+        rel = p[len(root):] if p.startswith(root) else p
+        if not p.endswith(".parquet") or any(c.startswith(("_", ".")) for c in rel.split("/")):
+            continue
+        m = _BATCH_RE.search(rel)
+        if max_batch is None or m is None or int(m.group(1)) <= int(max_batch):
+            files.append(p)
+    return fs, files
+
+
+def read_blocks(pf, rg: int, lo: int, hi: int, want: list[str]):
+    """The `want` columns of rows [lo, hi) of row group `rg` of the open
+    blocks file `pf` (`arrow_scan._read_split` coordinates). A payload
+    column the file lacks (added to the schema later) reads as null
+    payloads, which `_decode_fn` null-fills."""
+    from parquet_spark.sources.arrow_scan import _read_split
+
+    have = set(pf.schema_arrow.names)
+    missing = [c for c in want if c not in have]
+    for batch in _read_split(pf, rg, lo, hi, [c for c in want if c in have], 16384):
+        for c in missing:
+            batch = batch.append_column(c, pa.nulls(batch.num_rows, pa.binary()))
+        yield batch
+
+
 def _maybe_decode_blocks_arrow(
     spark: SparkSession,
     data_dir: str,
     columns: list[str],
     out_schema: StructType,
     verify: bool,
+    max_batch: int | None = None,
 ) -> DataFrame | None:
-    """Fused pyarrow blocks-scan decode for the bare read case (r6
-    optimization, guide §4.1/§8.4 — the same move as sources.arrow_scan
-    on the encode side): instead of Spark scanning the blocks parquet
-    (multi-MB binary payloads copied parquet → JVM column vector →
-    internal row → Arrow feed), each task reads its own blocks slice with
-    pyarrow straight into Arrow and runs the SAME `_decode_fn` kernels.
-    Measured on the bench's encoded sequences table (300k rows, 32 block
-    files): decode+agg 1.02 s → 0.62 s interleaved min, CRC-identical.
+    """Fused decode of `list_blocks_files(data_dir, max_batch)`: each task
+    reads its blocks slice with `read_blocks` straight into Arrow and runs
+    `_decode_fn`, skipping the parquet → JVM row → Arrow copy of the
+    payloads (bench sequences table, 300k rows: decode+agg 1.02 s →
+    0.62 s). None keeps the Spark scan: under `ignoreCorruptFiles`, for a
+    store that is not local (`fused_scan` opens local paths), and when
+    there are no files or a footer is unreadable (the Spark scan raises)."""
+    from pyarrow import fs as pafs
 
-    Only the shapes this reproduces exactly qualify; anything else
-    returns None and the caller keeps the Spark scan:
-    - local filesystem storage (tablefs URIs fall back),
-    - no hive-style subdirectories under the generation dir,
-    - no `where` pruning / `as_of` batch filtering (the caller gates).
-    Schema evolution is honored per file: payload columns a blocks file
-    does not carry are null-filled, exactly like mergeSchema + the
-    decode's null-scatter. At scale the planning is file-listing only
-    (>= parallelism files ⇒ zero driver footer reads, same rule as the
-    encode-side planner)."""
-    from parquet_spark.sources.arrow_scan import _read_split, fused_scan, ignores_corrupt_files, plan_arrow_splits
+    from parquet_spark.sources.arrow_scan import _plan_splits_for_files, fused_scan, ignores_corrupt_files
 
     if ignores_corrupt_files(spark):
         return None  # only the Spark scan skips unreadable files
-    try:
-        if not os.path.isdir(data_dir):
-            return None
-        if any(os.path.isdir(os.path.join(data_dir, e)) for e in os.listdir(data_dir)):
-            return None  # partition-dir layout: keep Spark's scan
-    except OSError:
+    fs, files = list_blocks_files(data_dir, max_batch)
+    if not files or not isinstance(fs, pafs.LocalFileSystem):
         return None
     try:
-        splits = plan_arrow_splits(data_dir, spark.sparkContext.defaultParallelism)
-    except (OSError, ValueError):  # no or unreadable files (pyarrow's
-        # ArrowInvalid is a ValueError): the Spark scan is always correct
+        splits = _plan_splits_for_files(files, spark.sparkContext.defaultParallelism)
+    except (OSError, ValueError):  # unreadable footer (pyarrow's
+        # ArrowInvalid is a ValueError): the Spark scan reports it
         return None
     want = (["meta"] if verify else []) + ["n_rows"] + list(columns)
-
-    def read(split, pf):
-        have = set(pf.schema_arrow.names)
-        missing = [c for c in want if c not in have]
-        for batch in _read_split(pf, *split[1:], [c for c in want if c in have], 16384):
-            for c in missing:
-                # written before the column existed: null payload →
-                # _decode_fn null-fills the rows
-                batch = batch.append_column(c, pa.nulls(batch.num_rows, pa.binary()))
-            yield batch
-
     # a fragmented table (many tiny block files — the state compact_table
     # exists to fix, and compact_table itself reads through here) packs
     # its splits into tasks by data size like Spark's own scan
-    return fused_scan(spark, splits, read, _decode_fn(list(columns), out_schema, verify), out_schema)
+    return fused_scan(
+        spark, splits, lambda split, pf: read_blocks(pf, *split[1:], want),
+        _decode_fn(list(columns), out_schema, verify), out_schema,
+    )
 
 
 _PRUNE_OPS = {">", ">=", "<", "<=", "=", "==", "!=", "in"}
@@ -362,14 +399,14 @@ def read_encoded(
     if snap is None:
         raise FileNotFoundError(f"no snapshot.json under {path}")
     schema = StructType.fromJson(snap["schema"])
-    if where is None and as_of is None:
-        # bare full read: fuse the blocks scan into the decode mapInArrow
-        # (pyarrow reads the payloads straight into Arrow inside each
-        # task — no JVM row hop for multi-MB binaries). Falls back to the
-        # Spark scan for any shape the fused reader does not reproduce.
+    if where is None:
+        # fused read; `as_of` scopes batch=N dirs like the filter below.
+        # `where` reads keep the Spark scan, into which Catalyst pushes
+        # the block pruning on the _min_/_max_ columns
         cols, out_schema = _projected(schema, columns)
         fused = _maybe_decode_blocks_arrow(
-            spark, os.path.join(path, snap.get("data_dir", "data")), cols, out_schema, verify
+            spark, os.path.join(path, snap.get("data_dir", "data")), cols, out_schema, verify,
+            snap.get("max_batch") if as_of is not None else None,
         )
         if fused is not None:
             return fused

@@ -8,7 +8,9 @@
 
 Built on the Spark 4 Python Data Source API (pyspark.sql.datasource) —
 the idiomatic `spark.read.format(...)` surface over the same storage
-layout and decode kernels as `operators.decode.read_encoded`:
+layout, file listing (`decode.list_blocks_files`), task-side blocks
+reader (`decode.read_blocks`) and decode kernels (`decode._decode_fn`)
+as `operators.decode.read_encoded`:
 
 - one input partition per (block file, row group) — the same parallelism
   grain as the parquet scan in the mapInArrow path, balanced because
@@ -27,13 +29,13 @@ returns full-schema batches); projection-heavy jobs should keep using
 `read_encoded(columns=[...])`, which decodes only the requested payload
 columns. Writes go through `write_encoded`/`append_encoded`/the
 streaming sink — this source is read-only by design (the write path's
-salting/probe/manifest logic needs the richer API).
+feed and bucket-mode choice, salting and side-band manifest need the
+richer API).
 """
 
 from __future__ import annotations
 
 import os
-import re
 from typing import TYPE_CHECKING, Iterable, Iterator
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -52,8 +54,6 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
-
-_BATCH_RE = re.compile(r"batch=(\d+)")
 
 # above this file count, partition planning defers footer reads (and
 # row-group pruning) to the tasks — see EncodedTableReader.partitions()
@@ -122,34 +122,9 @@ class EncodedTableReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         import pyarrow.parquet as pq
 
-        from parquet_spark import tablefs
+        from parquet_spark.operators.decode import list_blocks_files
 
-        fs, fs_data_dir, _ = tablefs.resolve(self.data_dir)
-        root = fs_data_dir.rstrip("/") + "/"
-
-        def rel(p: str) -> str:
-            return p[len(root):] if p.startswith(root) else p
-
-        def visible(p: str) -> bool:
-            # match Spark's listing rule: a hidden COMPONENT anywhere
-            # below data_dir (e.g. batch=3/_temporary/attempt_x/part.pq —
-            # uncommitted task output) excludes the file
-            return not any(c.startswith(("_", ".")) for c in rel(p).split("/"))
-
-        files = sorted(
-            p for p in tablefs.list_files(self.data_dir)
-            if p.endswith(".parquet") and visible(p)
-        )
-        if self.max_batch is not None:
-            # batch id from the path RELATIVE to data_dir — a batch=N
-            # component in the table's own path must not be mistaken
-            keep_b = []
-            for p in files:
-                m = _BATCH_RE.search(rel(p))
-                if m is None or int(m.group(1)) <= int(self.max_batch):
-                    keep_b.append(p)
-            files = keep_b
-
+        fs, files = list_blocks_files(self.data_dir, self.max_batch)
         if not files:
             return []
 
@@ -160,9 +135,10 @@ class EncodedTableReader(DataSourceReader):
         # reads ZERO data-file footers; each task reads its own footer
         # and applies the identical _keep_row_group pruning before any
         # payload IO. A table with hundreds of files already saturates
-        # any executor pool at file granularity. (planner runs in a bare
-        # Python worker without a SparkContext, so the bound is a
-        # constant, not the core count)
+        # any executor pool at file granularity. This planner runs in a
+        # bare Python worker without a SparkContext, so it cannot read
+        # the core count `arrow_scan._plan_splits_for_files` plans by:
+        # the bound is a constant and the grain a row group.
         if len(files) > _MAX_DRIVER_FOOTER_READS:
             return [InputPartition((p, -1)) for p in files]
 
@@ -224,25 +200,17 @@ class EncodedTableReader(DataSourceReader):
 
     # -------------------------------------------------- partition read
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_type
-
         from parquet_spark import tablefs
-        from parquet_spark.operators.decode import _decode_fn
+        from parquet_spark.operators.decode import _decode_fn, read_blocks
 
         if partition is None:  # planner saw zero partitions (all pruned)
             return
 
         path, rg = partition.value
-        fs, _, _ = tablefs.resolve(self.data_dir)
-        pf = pq.ParquetFile(path, filesystem=fs)
-        columns = [f.name for f in self.schema.fields]
-        have = set(pf.schema_arrow.names)
-        want = [c for c in columns if c in have] + ["n_rows"] + (
-            ["meta"] if self.verify else []
-        )
+        pf = pq.ParquetFile(path, filesystem=tablefs.resolve(self.data_dir)[0])
+        rgs = [rg]
         if rg < 0:
             # many-files plan: the driver deferred footer work here.
             # Apply the SAME row-group stats pruning the driver-side
@@ -254,25 +222,11 @@ class EncodedTableReader(DataSourceReader):
                 g for g in range(meta.num_row_groups)
                 if self._keep_row_group(meta.row_group(g), names)
             ]
-            if not rgs:
-                return
-            tbl = pf.read_row_groups(rgs, columns=want)
-        else:
-            tbl = pf.read_row_group(rg, columns=want)
-        n = tbl.num_rows
-        for c in columns:
-            if c not in have:  # additive schema evolution: null payloads
-                tbl = tbl.append_column(c, pa.nulls(n, pa.binary()))
-        expected = {f.name: to_arrow_type(f.dataType) for f in self.schema.fields}
-        # one decode closure per partition, streamed over every batch of
-        # the row group (was rebuilt per batch — r5 review nit)
-        decode = _decode_fn(columns, self.schema, self.verify)
-        for out in decode(tbl.to_batches()):
-            arrays = [
-                a if a.type == expected[c] else a.cast(expected[c])
-                for c, a in zip(columns, out.columns)
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=columns)
+        columns = [f.name for f in self.schema.fields]
+        want = (["meta"] if self.verify else []) + ["n_rows"] + columns
+        yield from _decode_fn(columns, self.schema, self.verify)(
+            b for g in rgs for b in read_blocks(pf, g, 0, -1, want)
+        )
 
 
 def register(spark) -> None:

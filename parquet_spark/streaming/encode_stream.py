@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from parquet_spark.operators.encode import (
     DEFAULT_BLOCK_ROWS,
@@ -181,18 +181,3 @@ class StreamingEncoder:
         )
         self._snapshot_written = True
 
-
-def read_encoded_stream_output(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
-    """Decode everything the stream has committed so far (batch view)."""
-    from parquet_spark.operators.decode import decode_table
-    from parquet_spark.operators.encode import read_snapshot
-    from pyspark.sql.types import StructType
-
-    snap = read_snapshot(path)
-    if snap is None:
-        raise FileNotFoundError(f"no snapshot.json under {path}")
-    schema = StructType.fromJson(snap["schema"])
-    blocks = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(path, snap.get("data_dir", "data"))
-    )
-    return decode_table(blocks, schema, columns)

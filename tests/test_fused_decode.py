@@ -107,10 +107,10 @@ def test_fused_read_projection(spark, tmp_path):
         read_encoded(spark, path, columns=["nope"])
 
 
-def test_batch_layout_falls_back_to_spark_scan(spark, tmp_path):
+def test_batch_layout_reads_fused(spark, tmp_path):
     """append_encoded's batch layout partitions the generation dir into
-    batch=N/ subdirs — a shape the fused reader does not cover, so bare
-    reads of it must fall back to the Spark scan and stay correct."""
+    batch=N/ subdirs; the fused reader lists them too, and null-fills
+    the column the first batch lacks."""
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import append_encoded
 
@@ -124,7 +124,7 @@ def test_batch_layout_falls_back_to_spark_scan(spark, tmp_path):
     append_encoded(d2, path, target_partitions=2)
     back = read_encoded(spark, path)
     plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "Range" not in plan  # partition-dir layout: Spark scan kept
+    assert "Range (" in plan
     assert back.count() == 600
     assert back.where(F.col("score").isNull()).count() == 400
     assert back.agg(F.sum("score")).collect()[0][0] == sum(i * 0.5 for i in range(400, 600))

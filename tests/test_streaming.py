@@ -25,10 +25,8 @@ def _crc(df):
 
 def test_stream_encode_roundtrip(spark, workdir, tmp_path):
     from parquet_spark.sources.synth import sequences_df
-    from parquet_spark.streaming.encode_stream import (
-        StreamingEncoder,
-        read_encoded_stream_output,
-    )
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.streaming.encode_stream import StreamingEncoder
 
     src = sequences_df(spark, 3000, seed=11, n_partitions=4)
     enc = StreamingEncoder(workdir, target_partitions=8)
@@ -39,22 +37,20 @@ def test_stream_encode_roundtrip(spark, workdir, tmp_path):
     for i, b in enumerate(batches):
         enc(b, i)
 
-    out = read_encoded_stream_output(spark, workdir)
+    out = read_encoded(spark, workdir)
     assert out.count() == 3000
     assert _crc(out) == _crc(src)
 
     # replay batch 1 (checkpoint recovery path): no duplication
     enc(batches[1], 1)
-    out2 = read_encoded_stream_output(spark, workdir)
+    out2 = read_encoded(spark, workdir)
     assert out2.count() == 3000
     assert _crc(out2) == _crc(src)
 
 
 def test_stream_with_real_writestream(spark, workdir, tmp_path):
-    from parquet_spark.streaming.encode_stream import (
-        StreamingEncoder,
-        read_encoded_stream_output,
-    )
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.streaming.encode_stream import StreamingEncoder
 
     # rate source → shape into the sequences schema → encode sink
     stream = (
@@ -86,7 +82,7 @@ def test_stream_with_real_writestream(spark, workdir, tmp_path):
     finally:
         q.stop()
     assert enc._snapshot_written, "stream never delivered a non-empty batch"
-    out = read_encoded_stream_output(spark, workdir)
+    out = read_encoded(spark, workdir)
     assert out.count() > 0
     assert out.columns == ["doc_id", "tokens", "n_tok", "source"]
     assert out.filter(F.size("tokens") != 5).count() == 0
@@ -142,21 +138,19 @@ def test_stream_encode_partition_mode(spark, workdir):
     overwrite whole batch dirs, so bucket ids need no cross-run stability
     — round-trip and idempotence must hold exactly as in salted mode."""
     from parquet_spark.sources.synth import sequences_df
-    from parquet_spark.streaming.encode_stream import (
-        StreamingEncoder,
-        read_encoded_stream_output,
-    )
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.streaming.encode_stream import StreamingEncoder
 
     src = sequences_df(spark, 2000, seed=21, n_partitions=4)
     enc = StreamingEncoder(workdir, target_partitions=8, bucket_mode="partition")
     batches = src.randomSplit([1.0, 1.0], seed=9)
     for i, b in enumerate(batches):
         enc(b, i)
-    out = read_encoded_stream_output(spark, workdir)
+    out = read_encoded(spark, workdir)
     assert out.count() == 2000
     assert _crc(out) == _crc(src)
     enc(batches[0], 0)  # replay → no dup
-    assert read_encoded_stream_output(spark, workdir).count() == 2000
+    assert read_encoded(spark, workdir).count() == 2000
 
 
 def test_session_window_boundary_matches_batch_sessionize(spark):
