@@ -7,20 +7,26 @@ files; per-partition decode is one mapInArrow stage; struct re-assembly
 disappears because Arrow list/validity structures ARE the output
 (SURVEY.md §3.2).
 
-Column projection decodes only the requested payload columns — Catalyst
-prunes the untouched binary columns out of the parquet scan entirely.
+Column projection decodes only the requested payload columns: the fused
+read's pyarrow reads and the Spark scan both leave the untouched binary
+columns unread. `where` predicates prune blocks by their stats before any
+payload is read (`block_keep`, the one block filter).
 """
 
 from __future__ import annotations
 
+import datetime
+import functools
 import json
+import operator
 import os
 import re
+import types
 
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 from parquet_spark.operators.encode import read_snapshot
 
@@ -222,19 +228,38 @@ def list_blocks_files(data_dir: str, max_batch: int | None = None) -> tuple:
     return fs, files
 
 
-def read_blocks(pf, rg: int, lo: int, hi: int, want: list[str]):
+def read_blocks(pf, rg: int, lo: int, hi: int, want: list[str], preds: list[tuple] = ()):
     """The `want` columns of rows [lo, hi) of row group `rg` of the open
     blocks file `pf` (`arrow_scan._read_split` coordinates). A payload
     column the file lacks (added to the schema later) reads as null
-    payloads, which `_decode_fn` null-fills."""
+    payloads, which `_decode_fn` null-fills. With `preds`, each row
+    group's stats columns are read first, and only the blocks
+    `block_keep` keeps are read on; a row group with none reads no more."""
+    import pyarrow.compute as pc
+
     from parquet_spark.sources.arrow_scan import _read_split
 
     have = set(pf.schema_arrow.names)
     missing = [c for c in want if c not in have]
-    for batch in _read_split(pf, rg, lo, hi, [c for c in want if c in have], 16384):
-        for c in missing:
-            batch = batch.append_column(c, pa.nulls(batch.num_rows, pa.binary()))
-        yield batch
+    stats_cols = ["n_rows"] + [
+        f"{k}{c}" for c in dict.fromkeys(p[0] for p in preds)
+        for k in ("_min_", "_max_", "_bloom_") if f"{k}{c}" in have
+    ]
+    for g in [rg] if rg >= 0 or not preds else range(pf.num_row_groups):
+        keep = None
+        if preds:
+            stats = pf.read_row_group(g, columns=stats_cols)
+            keep = block_keep(stats.slice(lo, (stats.num_rows if hi < 0 else hi) - lo), preds)
+            if not pc.any(keep).as_py():
+                continue
+            keep = None if pc.all(keep).as_py() else keep
+        off = 0
+        for batch in _read_split(pf, g, lo, hi, [c for c in want if c in have], 16384):
+            if keep is not None:
+                batch, off = batch.filter(keep.slice(off, batch.num_rows)), off + batch.num_rows
+            for c in missing:
+                batch = batch.append_column(c, pa.nulls(batch.num_rows, pa.binary()))
+            yield batch
 
 
 def _maybe_decode_blocks_arrow(
@@ -244,12 +269,14 @@ def _maybe_decode_blocks_arrow(
     out_schema: StructType,
     verify: bool,
     max_batch: int | None = None,
+    preds: list[tuple] = (),
 ) -> DataFrame | None:
     """Fused decode of `list_blocks_files(data_dir, max_batch)`: each task
     reads its blocks slice with `read_blocks` straight into Arrow and runs
     `_decode_fn`, skipping the parquet → JVM row → Arrow copy of the
     payloads (bench sequences table, 300k rows: decode+agg 1.02 s →
-    0.62 s). None keeps the Spark scan: under `ignoreCorruptFiles`, for a
+    0.62 s). `preds` prune row groups in the planner and blocks in the
+    task. None keeps the Spark scan: under `ignoreCorruptFiles`, for a
     store that is not local (`fused_scan` opens local paths), and when
     there are no files or a footer is unreadable (the Spark scan raises)."""
     from pyarrow import fs as pafs
@@ -262,7 +289,7 @@ def _maybe_decode_blocks_arrow(
     if not files or not isinstance(fs, pafs.LocalFileSystem):
         return None
     try:
-        splits = _plan_splits_for_files(files, spark.sparkContext.defaultParallelism)
+        splits = _plan_splits_for_files(files, spark.sparkContext.defaultParallelism, preds=preds)
     except (OSError, ValueError):  # unreadable footer (pyarrow's
         # ArrowInvalid is a ValueError): the Spark scan reports it
         return None
@@ -271,116 +298,203 @@ def _maybe_decode_blocks_arrow(
     # exists to fix, and compact_table itself reads through here) packs
     # its splits into tasks by data size like Spark's own scan
     return fused_scan(
-        spark, splits, lambda split, pf: read_blocks(pf, *split[1:], want),
+        spark, splits, lambda split, pf: read_blocks(pf, *split[1:], want, preds),
         _decode_fn(list(columns), out_schema, verify), out_schema,
     )
 
 
-_PRUNE_OPS = {">", ">=", "<", "<=", "=", "==", "!=", "in"}
+_OP_NAMES = {">": "gt", ">=": "ge", "<": "lt", "<=": "le", "=": "eq", "==": "eq", "!=": "ne"}
+_PRUNE_OPS = {*_OP_NAMES, "in"}
+# what comparing a literal with stats Arrow cannot compare raises
+_INCOMPARABLE = (pa.ArrowNotImplementedError, pa.ArrowInvalid, pa.ArrowTypeError, OverflowError)
 
 
-def _bloom_keep_udf(probes: list[bytes]):
-    """Arrow-batched keep-predicate over the blocks relation's
-    `_bloom_<col>` column: keep a block iff ANY probe may be contained.
-    Runs at METADATA scale (one row per block, after the min/max scan
-    pruning), so a Python kernel here is fine; a missing/null filter
-    keeps the block — pruning is an optimization, never correctness."""
-    import pandas as pd
+def _where_preds(where, schema: StructType) -> list[tuple]:
+    """The `where` contract of read_encoded and maintain.delete_where: one
+    (col, op, value) triple or a list of them, ANDed. `in` candidates are
+    materialized once: block pruning and the row filter both consume
+    them. ValueError for an op outside `_PRUNE_OPS`, KeyError for a
+    column outside `schema`."""
+    if where is None:
+        return []
+    known = set(schema.fieldNames())
+    preds = []
+    for col, op, value in [where] if isinstance(where, tuple) else list(where):
+        if op not in _PRUNE_OPS:
+            raise ValueError(f"where op {op!r} not in {sorted(_PRUNE_OPS)}")
+        if col not in known:
+            raise KeyError(f"where column {col!r} not in encoded table")
+        preds.append((col, op, list(value) if op == "in" else value))
+    return preds
 
-    from pyspark.sql.functions import pandas_udf
 
-    def keep(filt):
-        from parquet_spark.stats import bloom as bl
+def _row_condition(preds: list[tuple]):
+    """The row-level Column of `preds`, ANDed: typed literals, not SQL
+    text, so dates and quoted strings compare as values. NULL wherever SQL
+    says NULL; callers pick how a NULL counts."""
+    from pyspark.sql import functions as F
 
-        return filt.map(
-            lambda f: True if f is None
-            else any(bl.maybe_contains(bytes(f), p) for p in probes)
-        )
+    cond = None
+    for col, op, value in preds:
+        if op == "in":
+            piece = F.col(col).isin(*value) if value else F.lit(False)
+        else:
+            piece = getattr(operator, _OP_NAMES[op])(F.col(col), F.lit(value))
+        cond = piece if cond is None else cond & piece
+    return cond
 
-    # real type objects, not strings: this module's `from __future__ import
-    # annotations` would otherwise defeat pandas_udf's hint inference
-    keep.__annotations__ = {"filt": pd.Series, "return": pd.Series}
-    return pandas_udf(keep, "boolean")
+
+def _range_keep(op: str, vmin, vmax, lits: list, f):
+    """The min/max rule, written once for Spark Columns (`f` = `operator`)
+    and Arrow arrays (`f` = the pyarrow.compute counterparts): may a block
+    with bounds [vmin, vmax] hold a row with (col op lit)? None when an
+    `in` has no candidate left, so no row can match."""
+    if op in ("=", "==", "in"):
+        terms = [f.and_(f.le(vmin, v), f.ge(vmax, v)) for v in lits]
+        return functools.reduce(f.or_, terms) if terms else None
+    if op == "!=":  # only a block pinned to the excluded value is pruned
+        return f.invert(f.and_(f.eq(vmin, lits[0]), f.eq(vmax, lits[0])))
+    # a lower bound needs the block max above it, an upper one the min below
+    return getattr(f, _OP_NAMES[op])(vmax if op[0] == ">" else vmin, lits[0])
+
+
+def block_keep(stats: pa.Table, preds: list[tuple]) -> pa.BooleanArray:
+    """The one block filter: may each row of `stats` — a block's or a row
+    group's `_min_<c>`/`_max_<c>`/`_bloom_<c>` — hold a match of every
+    ANDed (col, op, value) of `preds`? Pruning never decides results, so
+    the unknown keeps: a missing stats column, a null or NaN bound (Spark
+    orders NaN largest), a NULL or NaN literal, a literal Arrow does not
+    compare as Spark does. `in` drops NULL candidates. `=`/`in` also ask
+    `bloom.maybe_contains` when every probe is str or bytes."""
+    import pyarrow.compute as pc
+
+    from parquet_spark.stats import bloom
+
+    names = set(stats.schema.names)
+    keep = pa.array([True] * stats.num_rows, pa.bool_())
+    for col, op, value in preds:
+        vals = [v for v in value if v is not None] if op == "in" else [value]
+        if {f"_min_{col}", f"_max_{col}"} <= names:
+            try:
+                cond = _minmax_keep(
+                    stats.column(f"_min_{col}").combine_chunks(),
+                    stats.column(f"_max_{col}").combine_chunks(), op, vals,
+                )
+            except _INCOMPARABLE:
+                cond = None
+            if cond is not None:
+                keep = pc.and_(keep, cond)
+        probes = [v.encode() if isinstance(v, str) else v for v in vals]
+        if (
+            op in ("=", "==", "in") and f"_bloom_{col}" in names
+            and probes and all(isinstance(p, bytes) for p in probes)
+        ):
+            filters = stats.column(f"_bloom_{col}").to_pylist()
+            keep = pc.and_(keep, pa.array(
+                [f is None or any(bloom.maybe_contains(f, p) for p in probes) for f in filters], pa.bool_()
+            ))
+    return keep
+
+
+def _minmax_keep(vmin: pa.Array, vmax: pa.Array, op: str, vals: list) -> pa.BooleanArray | None:
+    """`_range_keep` over Arrow stats for the non-NULL literals `vals`, or
+    None (keep every row) when a literal does not compare with the stats
+    as Spark compares them."""
+    import pyarrow.compute as pc
+
+    t = vmin.type
+    if pa.types.is_timestamp(t):
+        # Spark compares instants: the literal's epoch µs by PySpark's own
+        # conversion (a naive datetime is local time) against the stats'
+        if not all(isinstance(v, datetime.datetime) for v in vals):
+            return None
+        vals = [TimestampType().toInternal(v) for v in vals]
+        vmin, vmax = (a.cast(pa.timestamp("us", t.tz)).cast(pa.int64()) for a in (vmin, vmax))
+    elif any(v is None or v != v or isinstance(v, datetime.datetime) for v in vals):
+        return None  # NULL or NaN literal; a datetime against a date
+    if pa.types.is_floating(t):
+        vmin, vmax = (pc.if_else(pc.is_nan(a), pa.scalar(None, t), a) for a in (vmin, vmax))
+    f = types.SimpleNamespace(
+        gt=pc.greater, ge=pc.greater_equal, lt=pc.less, le=pc.less_equal, eq=pc.equal,
+        and_=pc.and_, or_=pc.or_, invert=pc.invert,
+    )
+    cond = _range_keep(op, vmin, vmax, [pa.scalar(v) for v in vals], f)
+    unknown = pc.or_(pc.is_null(vmin), pc.is_null(vmax))
+    return unknown if cond is None else pc.or_(pc.fill_null(cond, False), unknown)
+
+
+def row_group_keep(meta, preds: list[tuple]) -> list[bool]:
+    """`block_keep` at row-group grain, from the footer `meta` of a blocks
+    file: one stats row per row group, holding the chunk min of
+    `_min_<c>` and the chunk max of `_max_<c>`. A chunk without usable
+    stats — none, no min/max, or a null block bound among its rows —
+    gives a null bound, which keeps the row group."""
+    n = meta.num_row_groups
+    if not preds:
+        return [True] * n
+    arrow = meta.schema.to_arrow_schema()
+    index = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+    cols = {"n_rows": pa.array([meta.row_group(g).num_rows for g in range(n)], pa.int64())}
+    for name in dict.fromkeys(f"{k}{p[0]}" for p in preds for k in ("_min_", "_max_")):
+        if name in index:
+            chunks = [meta.row_group(g).column(index[name]).statistics for g in range(n)]
+            vals = [getattr(s, name[1:4]) if s is not None and s.has_min_max and s.has_null_count
+                    and s.null_count == 0 else None for s in chunks]
+            try:
+                cols[name] = pa.array(vals, arrow.field(name).type)
+            except _INCOMPARABLE:
+                pass  # a footer value pyarrow cannot type: no bound, keep
+    return block_keep(pa.table(cols), preds).to_pylist()
 
 
 def _block_keep_condition(col: str, op: str, value):
-    """Can a block with [vmin, vmax] contain a row satisfying (col op value)?
-    Blocks without stats (null vmin) are always kept — pruning is an
-    optimization, never a correctness filter.
+    """`_range_keep` as a Spark Column, for reads that keep the Spark scan
+    and for maintain's copy-on-write split.
 
-    The returned Column is NEVER NULL (review finding): a NULL literal
-    among the values (or as the value) makes the comparison NULL under
-    three-valued logic, and callers that split a relation into
-    where(cond) / where(~cond) — delete_where, merge_into — would drop
-    NULL-condition blocks from BOTH sides, silently losing data. NULL
-    coalesces to True: keep the block."""
+    The Column is NEVER NULL: delete_where and merge_into split the blocks
+    into where(cond) / where(~cond), and a NULL condition would drop a
+    block from both sides. A block without stats (null bound) is kept,
+    written as `(cond) OR _min_c IS NULL OR _max_c IS NULL` rather than a
+    coalesce, so Spark pushes it into the parquet scan; a NULL literal (a
+    NULL `in` candidate) drops out in Python before any Column is built."""
     from pyspark.sql import functions as F
 
-    def _nn(c):  # pruning condition contract: NULL => keep
-        return F.coalesce(c, F.lit(True))
-
     vmin, vmax = F.col(f"_min_{col}"), F.col(f"_max_{col}")
-    if op == "in":
-        # keep the block if ANY candidate value falls inside its range.
-        # NULL candidates drop out: `col IN (..., NULL)` can never MATCH a
-        # row under SQL semantics, so they contribute nothing to pruning —
-        # and a NULL literal inside the range check would poison the whole
-        # condition to NULL (the three-valued-logic hazard above)
-        vals = [v for v in value if v is not None]
-        if not vals:
-            return _nn(F.lit(False) | vmin.isNull())
-        if len(vals) > 16:
-            # large candidate sets (merge_into key pruning): a flat array
-            # literal + EXISTS keeps the expression tree depth O(1) —
-            # OR-chains of hundreds of terms overflow Catalyst's stack
-            cond = F.exists(
-                F.array(*[F.lit(v) for v in vals]),
-                lambda k: (vmin <= k) & (vmax >= k),
-            )
-            return _nn(cond | vmin.isNull())
-        conds = [(vmin <= F.lit(v)) & (vmax >= F.lit(v)) for v in vals]
-        while len(conds) > 1:
-            conds = [a | b for a, b in zip(conds[::2], conds[1::2])] + (
-                [conds[-1]] if len(conds) % 2 else []
-            )
-        return _nn(conds[0] | vmin.isNull())
-    lit = F.lit(value)
-    if op == ">":
-        cond = vmax > lit
-    elif op == ">=":
-        cond = vmax >= lit
-    elif op == "<":
-        cond = vmin < lit
-    elif op == "<=":
-        cond = vmin <= lit
-    elif op == "!=":
-        # only an all-equal block pinned to the excluded value can be pruned
-        cond = ~((vmin == lit) & (vmax == lit))
-    else:  # = / ==
-        cond = (vmin <= lit) & (vmax >= lit)
-    return _nn(cond | vmin.isNull())
+    unknown = vmin.isNull() | vmax.isNull()
+    if op != "in" and value is None:
+        return F.lit(True)
+    vals = [v for v in value if v is not None] if op == "in" else [value]
+    if len(vals) > 16:
+        # large candidate sets (merge_into key pruning): a flat array
+        # literal + EXISTS keeps the expression tree depth O(1) —
+        # OR-chains of hundreds of terms overflow Catalyst's stack
+        return F.exists(F.array(*map(F.lit, vals)), lambda k: (vmin <= k) & (vmax >= k)) | unknown
+    cond = _range_keep(op, vmin, vmax, [F.lit(v) for v in vals], operator)
+    return unknown if cond is None else cond | unknown
 
 
 def read_encoded(
     spark: SparkSession,
     path: str,
     columns: list[str] | None = None,
-    where: tuple | None = None,
+    where: tuple | list | None = None,
     verify: bool = False,
     as_of: int | None = None,
 ) -> DataFrame:
     """Open an encoded table (data + snapshot) and return the decoded
-    DataFrame — the engine's `spark.read.parquet` analogue.
+    DataFrame — the engine's `spark.read.parquet` analogue. It is the
+    fused read (Range → MapInArrow, pyarrow reading the blocks inside the
+    decode task) unless `_maybe_decode_blocks_arrow` keeps the Spark scan.
 
-    `where=(column, op, value)` with op in {>, >=, <, <=, =, !=, in}
-    (value is an iterable for `in`) prunes whole blocks by their min/max
-    statistics BEFORE decode — and because the
-    stats are plain typed columns of the blocks parquet, Catalyst pushes
-    the range predicate into the scan (PushedFilters) and parquet
-    row-group stats skip the payload IO entirely, the analogue of the
-    reference's page-statistics metadata (/root/reference/parquet.go:
-    164-169) actually being *consumed*. The exact row-level filter is
-    applied after decode, so results equal decode-then-filter.
+    `where=(column, op, value)`, or a list of such triples ANDed, with op
+    in {>, >=, <, <=, =, !=, in} (value is an iterable for `in`), prunes
+    whole blocks BEFORE decode with `block_keep`, the reference's page
+    statistics consumed where the blocks are read: the planner drops row
+    groups by their footer stats, each task drops blocks by their min/max
+    (and bloom) stats before reading a payload. The Spark scan prunes on
+    min/max with `_block_keep_condition`, pushed into the parquet scan.
+    The row-level filter runs after decode, so results equal
+    decode-then-filter.
 
     `as_of=<sequence>` time-travels to a retained historical snapshot
     (see operators.encode.list_snapshots / maintain.expire_snapshots):
@@ -399,73 +513,29 @@ def read_encoded(
     if snap is None:
         raise FileNotFoundError(f"no snapshot.json under {path}")
     schema = StructType.fromJson(snap["schema"])
-    if where is None:
-        # fused read; `as_of` scopes batch=N dirs like the filter below.
-        # `where` reads keep the Spark scan, into which Catalyst pushes
-        # the block pruning on the _min_/_max_ columns
-        cols, out_schema = _projected(schema, columns)
-        fused = _maybe_decode_blocks_arrow(
-            spark, os.path.join(path, snap.get("data_dir", "data")), cols, out_schema, verify,
-            snap.get("max_batch") if as_of is not None else None,
-        )
-        if fused is not None:
-            return fused
+    preds = _where_preds(where, schema)
+    out_cols = _projected(schema, columns)[0]
+    # the row filter needs every predicate column decoded
+    extra = list(dict.fromkeys(c for c, _op, _v in preds if c not in out_cols))
+    cols, read_schema = _projected(schema, out_cols + extra)
     # the snapshot names the live generation dir — after a compaction
     # commit (rename-less pointer swap) it is not necessarily "data";
-    # mergeSchema unions batch dirs written before a column was added
-    blocks_df = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(path, snap.get("data_dir", "data"))
-    )
-    if as_of is not None and snap.get("max_batch") is not None and "batch" in blocks_df.columns:
-        # batch-layout tables append into the SAME generation dir; the
-        # historical snapshot's high-water mark scopes the time travel to
-        # the batches committed at that sequence
-        blocks_df = blocks_df.where(F.col("batch") <= int(snap["max_batch"]))
-    if where is not None:
-        # one (col, op, value) triple or a list of them (AND semantics) —
-        # every predicate contributes block pruning AND a row-level filter
-        preds = [where] if isinstance(where, tuple) else list(where)
-        # materialize 'in' candidate sets ONCE: both the block-pruning
-        # condition and the row filter consume the value, and a one-shot
-        # iterator drained by pruning would leave the row filter an empty
-        # set (silently zero rows)
-        preds = [
-            (col, op, list(value) if op == "in" else value)
-            for col, op, value in preds
-        ]
-        known = {f.name for f in schema.fields}
-        cols = list(columns or [f.name for f in schema.fields])
-        for col, op, _value in preds:
-            if op not in _PRUNE_OPS:
-                raise ValueError(f"where op {op!r} not in {sorted(_PRUNE_OPS)}")
-            if col not in known:
-                raise KeyError(f"where column {col!r} not in encoded table")
-            if col not in cols:
-                cols.append(col)
-            if f"_min_{col}" in blocks_df.columns:
-                blocks_df = blocks_df.where(_block_keep_condition(col, op, _value))
-            if op in ("=", "==", "in") and f"_bloom_{col}" in blocks_df.columns:
-                probes = list(_value) if op == "in" else [_value]
-                pb = [p.encode() if isinstance(p, str) else p for p in probes]
-                if probes and all(isinstance(p, bytes) for p in pb):
-                    blocks_df = blocks_df.where(
-                        _bloom_keep_udf(pb)(F.col(f"_bloom_{col}"))
-                    )
-        decoded = decode_table(blocks_df, schema, cols, verify=verify)
-        # typed Column comparison, not SQL text: dates/timestamps/strings
-        # with quotes all become proper literals instead of repr() fragments
-        op_fns = {
-            ">": lambda c, v: c > F.lit(v), ">=": lambda c, v: c >= F.lit(v),
-            "<": lambda c, v: c < F.lit(v), "<=": lambda c, v: c <= F.lit(v),
-            "=": lambda c, v: c == F.lit(v), "==": lambda c, v: c == F.lit(v),
-            "!=": lambda c, v: c != F.lit(v),
-            "in": lambda c, v: c.isin(*v) if len(v) else F.lit(False),
-        }
-        out = decoded
+    # `as_of` scopes a batch-layout table to the batches committed then
+    data_dir = os.path.join(path, snap.get("data_dir", "data"))
+    max_batch = snap.get("max_batch") if as_of is not None else None
+    out = _maybe_decode_blocks_arrow(spark, data_dir, cols, read_schema, verify, max_batch, preds)
+    if out is None:
+        # mergeSchema unions batch dirs written before a column was added
+        blocks_df = spark.read.option("mergeSchema", "true").parquet(data_dir)
+        if max_batch is not None and "batch" in blocks_df.columns:
+            blocks_df = blocks_df.where(F.col("batch") <= int(max_batch))
         for col, op, value in preds:
-            out = out.where(op_fns[op](F.col(col), value))
-        return out.select(*(columns or [f.name for f in schema.fields]))
-    return decode_table(blocks_df, schema, columns, verify=verify)
+            if f"_min_{col}" in blocks_df.columns:
+                blocks_df = blocks_df.where(_block_keep_condition(col, op, value))
+        out = decode_table(blocks_df, schema, cols, verify=verify)
+    if preds:
+        out = out.where(_row_condition(preds))
+    return out.drop(*extra) if extra else out
 
 
 def read_manifest(spark: SparkSession, path: str, as_of: int | None = None) -> DataFrame:

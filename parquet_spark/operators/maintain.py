@@ -129,34 +129,15 @@ def delete_where(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from parquet_spark.operators.decode import _block_keep_condition, decode_table
-    from parquet_spark.operators.encode import (
-        encode_table,
-        manifest_from_blocks,
-        write_snapshot,
-    )
+    from parquet_spark.operators.decode import _block_keep_condition, _row_condition, _where_preds, decode_table
 
     snap = read_snapshot(path)
     if snap is None:
         raise FileNotFoundError(f"no snapshot.json under {path}")
     schema = StructType.fromJson(snap["schema"])
-    preds = [where] if isinstance(where, tuple) else list(where)
+    preds = _where_preds(where, schema)
     if not preds:
         raise ValueError("delete_where requires at least one predicate")
-    preds = [(c, op, list(v) if op == "in" else v) for c, op, v in preds]
-    op_fns = {
-        ">": lambda c, v: c > F.lit(v), ">=": lambda c, v: c >= F.lit(v),
-        "<": lambda c, v: c < F.lit(v), "<=": lambda c, v: c <= F.lit(v),
-        "=": lambda c, v: c == F.lit(v), "==": lambda c, v: c == F.lit(v),
-        "!=": lambda c, v: c != F.lit(v),
-        "in": lambda c, v: c.isin(*v) if v else F.lit(False),
-    }
-    known = {f.name for f in schema.fields}
-    for col, op, _v in preds:
-        if op not in op_fns:
-            raise ValueError(f"delete_where op {op!r} not in {sorted(op_fns)}")
-        if col not in known:
-            raise KeyError(f"delete_where column {col!r} not in table")
     blocks = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(path, snap.get("data_dir", "data"))
     )
@@ -164,21 +145,14 @@ def delete_where(
         blocks = blocks.drop("batch")  # generation is a flat rewrite
     # a block MAY hold a match only if every ANDed predicate's stats range
     # admits one; blocks without stats conservatively count as touched
-    may = None
+    may = F.lit(True)
     for col, op, value in preds:
-        c = (
-            _block_keep_condition(col, op, value)
-            if f"_min_{col}" in blocks.columns else F.lit(True)
-        )
-        may = c if may is None else (may & c)
+        if f"_min_{col}" in blocks.columns:
+            may = may & _block_keep_condition(col, op, value)
     touched, untouched = _split_blocks(blocks, may)
     rows = decode_table(touched, schema)
-    cond = None
-    for col, op, value in preds:
-        piece = op_fns[op](F.col(col), value)
-        cond = piece if cond is None else (cond & piece)
     # null-safe survivor set: a NULL predicate evaluation did not MATCH
-    survivors = rows.where(~cond.eqNullSafe(F.lit(True)))
+    survivors = rows.where(~_row_condition(preds).eqNullSafe(F.lit(True)))
     before = blocks.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"), F.count("*").alias("blocks")
     ).collect()[0]

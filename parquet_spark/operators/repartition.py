@@ -149,7 +149,37 @@ def salted_repartition(
     n_buckets = plan[-1][1] + plan[-1][2] if plan else target_partitions
     out = with_salted_bucket(df, plan, source_col, salt_key, bucket_col)
     sort_cols = [bucket_col] + ([cluster_col] if cluster_col else [])
+    # bucket b goes to partition b mod P: hash-partitioning the bucket ids
+    # themselves would collide (Murmur3 of 0..P-1 fills 5 of 8 partitions)
+    n_parts = min(n_buckets, target_partitions)
+    keys = ",".join(map(str, partition_keys(n_parts)))
+    key = F.expr(f"element_at(array({keys}), pmod(`{bucket_col}`, {n_parts}) + 1)")
     return (
-        out.repartition(min(n_buckets, target_partitions), bucket_col).sortWithinPartitions(*sort_cols),
+        out.repartition(n_parts, key).sortWithinPartitions(*sort_cols),
         n_buckets,
     )
+
+
+def murmur3_int(value: int, seed: int = 42) -> int:
+    """Spark's `hash()` of an int column value (Murmur3_x86_32.hashInt)."""
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
+
+    k = rotl((value & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF, 15) * 0x1B873593 & 0xFFFFFFFF
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & 0xFFFFFFFF
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & 0xFFFFFFFF
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def partition_keys(n: int) -> list[int]:
+    """The smallest int whose Spark hash lands on each of `n` hash
+    partitions: `repartition(n, keys[j])` sends its rows to partition j."""
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(murmur3_int(k) % n, k)
+        k += 1
+    return [keys[j] for j in range(n)]

@@ -218,18 +218,23 @@ def plan_arrow_splits(path: str, parallelism: int) -> list[tuple[str, int, int, 
 
 
 def _plan_splits_for_files(
-    files: list[str], parallelism: int, footers: dict | None = None
+    files: list[str], parallelism: int, footers: dict | None = None, preds: list[tuple] = ()
 ) -> list[tuple[str, int, int, int]]:
-    """`footers`: FileMetaData by file, already read by the caller."""
+    """`footers`: FileMetaData by file, already read by the caller.
+    `preds`: `where` triples of a blocks read; a row group whose footer
+    stats exclude a match (`decode.row_group_keep`) plans no split."""
+    from parquet_spark.operators.decode import row_group_keep
+
     if len(files) >= parallelism:
         return [(f, -1, 0, -1) for f in files]
     splits: list[tuple[str, int, int, int]] = []
     rg_meta = []  # (file, rg, n_rows, compressed column-chunk bytes)
     for f in files:
         meta = footers[f] if footers else pq.ParquetFile(f).metadata
+        keep = row_group_keep(meta, preds)
         for rg in range(meta.num_row_groups):
             g = meta.row_group(rg)
-            if g.num_rows:  # a row group without rows needs no read
+            if g.num_rows and keep[rg]:  # a row group without rows needs no read
                 nbytes = sum(g.column(i).total_compressed_size for i in range(g.num_columns))
                 rg_meta.append((f, rg, g.num_rows, nbytes))
     if not rg_meta or len(rg_meta) >= parallelism:

@@ -15,9 +15,10 @@ as `operators.decode.read_encoded`:
 - one input partition per (block file, row group) — the same parallelism
   grain as the parquet scan in the mapInArrow path, balanced because
   encode writes 32 MB row groups;
-- predicate pushdown (`pushFilters`) prunes partitions using the parquet
-  ROW-GROUP STATISTICS of the typed `_min_<col>`/`_max_<col>` stats
-  columns — pure footer metadata, zero data IO for skipped groups. Every
+- predicate pushdown (`pushFilters`) prunes with `read_encoded`'s rule,
+  `decode.block_keep`: planning drops row groups by the footer stats of
+  the typed `_min_<col>`/`_max_<col>` columns (zero data IO), each task
+  drops blocks by their min/max and bloom stats before decoding. Every
   filter is also returned to Spark for exact row-level application, so
   pruning can only skip, never change results;
 - `as_of` time-travel resolves the historical generation + batch
@@ -58,6 +59,12 @@ from pyspark.sql.types import StructType
 # above this file count, partition planning defers footer reads (and
 # row-group pruning) to the tasks — see EncodedTableReader.partitions()
 _MAX_DRIVER_FOOTER_READS = 256
+
+# the pushed filters block pruning understands, as `where` ops
+_PRUNE_FILTERS = {
+    EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
+    LessThan: "<", LessThanOrEqual: "<=", In: "in",
+}
 
 
 class EncodedTableDataSource(DataSource):
@@ -102,27 +109,24 @@ class EncodedTableReader(DataSourceReader):
         self.max_batch = (
             self.snap.get("max_batch") if as_of is not None else None
         )
-        self._pruning: list[Filter] = []
+        self._preds: list[tuple] = []
 
     # -------------------------------------------------- filter pushdown
     def pushFilters(self, filters: list["Filter"]) -> Iterable["Filter"]:
-        """Keep stats-prunable predicates for partition pruning; return
+        """Keep the stats-prunable predicates as `where` triples; return
         EVERY filter so Spark still applies them row-level (pruning is
         IO-skip only — semantics never depend on it)."""
         for f in filters:
-            if (
-                isinstance(f, (EqualTo, GreaterThan, GreaterThanOrEqual,
-                               LessThan, LessThanOrEqual, In))
-                and len(f.attribute) == 1
-            ):
-                self._pruning.append(f)
+            op = _PRUNE_FILTERS.get(type(f))
+            if op and len(f.attribute) == 1:
+                self._preds.append((f.attribute[0], op, f.value))
         return filters
 
     # -------------------------------------------------- partition planning
     def partitions(self) -> list[InputPartition]:
         import pyarrow.parquet as pq
 
-        from parquet_spark.operators.decode import list_blocks_files
+        from parquet_spark.operators.decode import list_blocks_files, row_group_keep
 
         fs, files = list_blocks_files(self.data_dir, self.max_batch)
         if not files:
@@ -132,13 +136,11 @@ class EncodedTableReader(DataSourceReader):
         # reads on the driver are fine for a handful of files but become
         # minutes of serial-ish metadata IO at 10^5 files. Above the
         # threshold, plan ONE partition per file with rg=-1 — the driver
-        # reads ZERO data-file footers; each task reads its own footer
-        # and applies the identical _keep_row_group pruning before any
-        # payload IO. A table with hundreds of files already saturates
-        # any executor pool at file granularity. This planner runs in a
-        # bare Python worker without a SparkContext, so it cannot read
-        # the core count `arrow_scan._plan_splits_for_files` plans by:
-        # the bound is a constant and the grain a row group.
+        # reads ZERO data-file footers, and each task prunes its own
+        # blocks. This planner runs in a bare Python worker without a
+        # SparkContext, so it cannot read the core count
+        # `arrow_scan._plan_splits_for_files` plans by: the bound is a
+        # constant and the grain a row group.
         if len(files) > _MAX_DRIVER_FOOTER_READS:
             return [InputPartition((p, -1)) for p in files]
 
@@ -149,54 +151,12 @@ class EncodedTableReader(DataSourceReader):
 
         def plan(path: str) -> list[InputPartition]:
             meta = pq.read_metadata(path, filesystem=fs)
-            names = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
-            return [
-                InputPartition((path, rg))
-                for rg in range(meta.num_row_groups)
-                if self._keep_row_group(meta.row_group(rg), names)
-            ]
+            keep = row_group_keep(meta, self._preds)
+            return [InputPartition((path, rg)) for rg in range(meta.num_row_groups) if keep[rg]]
 
         with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
             planned = list(ex.map(plan, files))
         return [p for file_parts in planned for p in file_parts]
-
-    def _keep_row_group(self, rg, names: dict) -> bool:
-        """Conservative skip decision from the row group's footer stats of
-        the typed _min_/_max_ stats columns (the same min/max the
-        mapInArrow path pushes into Catalyst). Missing stats => keep."""
-        for f in self._pruning:
-            col = f.attribute[0]
-            imin, imax = names.get(f"_min_{col}"), names.get(f"_max_{col}")
-            if imin is None or imax is None:
-                continue
-            smin, smax = rg.column(imin).statistics, rg.column(imax).statistics
-            if smin is None or smax is None or not smin.has_min_max or not smax.has_min_max:
-                continue
-            lo, hi = smin.min, smax.max  # bounds over the group's blocks
-            if lo != lo or hi != hi:
-                # NaN bound: encode deliberately records vmax=NaN for
-                # NaN-bearing float blocks (Spark orders NaN largest);
-                # every Python comparison with nan is False, which would
-                # read as "prune" — keep instead (review finding)
-                continue
-            try:
-                if isinstance(f, EqualTo) and not (lo <= f.value <= hi):
-                    return False
-                if isinstance(f, In) and f.value and not any(
-                    lo <= v <= hi for v in f.value
-                ):
-                    return False
-                if isinstance(f, GreaterThan) and not (hi > f.value):
-                    return False
-                if isinstance(f, GreaterThanOrEqual) and not (hi >= f.value):
-                    return False
-                if isinstance(f, LessThan) and not (lo < f.value):
-                    return False
-                if isinstance(f, LessThanOrEqual) and not (lo <= f.value):
-                    return False
-            except TypeError:
-                continue  # incomparable literal vs stats type: keep
-        return True
 
     # -------------------------------------------------- partition read
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
@@ -210,23 +170,9 @@ class EncodedTableReader(DataSourceReader):
 
         path, rg = partition.value
         pf = pq.ParquetFile(path, filesystem=tablefs.resolve(self.data_dir)[0])
-        rgs = [rg]
-        if rg < 0:
-            # many-files plan: the driver deferred footer work here.
-            # Apply the SAME row-group stats pruning the driver-side
-            # planner uses, then read the surviving groups — identical
-            # results, zero driver footer IO.
-            meta = pf.metadata
-            names = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
-            rgs = [
-                g for g in range(meta.num_row_groups)
-                if self._keep_row_group(meta.row_group(g), names)
-            ]
         columns = [f.name for f in self.schema.fields]
         want = (["meta"] if self.verify else []) + ["n_rows"] + columns
-        yield from _decode_fn(columns, self.schema, self.verify)(
-            b for g in rgs for b in read_blocks(pf, g, 0, -1, want)
-        )
+        yield from _decode_fn(columns, self.schema, self.verify)(read_blocks(pf, rg, 0, -1, want, self._preds))
 
 
 def register(spark) -> None:

@@ -122,3 +122,26 @@ def test_bloomless_table_unaffected(spark, tmp_path):
     want = df.where("source = 'src0'").count()
     got = read_encoded(spark, path, where=("source", "=", "src0")).count()
     assert got == want > 0
+
+
+def test_bloom_prunes_blocks_inside_the_task(spark, bloom_table):
+    """The task-side block filter (`read_blocks` + `block_keep`, shared by
+    the fused read and the Data Source reader) skips the blocks whose
+    bloom filter excludes the probe, although every block's [min, max]
+    spans it."""
+    from pyspark.sql.datasource import EqualTo
+
+    from parquet_spark.sources.spark_datasource import EncodedTableReader, register
+
+    path, df = bloom_table
+    register(spark)
+    schema = spark.read.format("parquet_spark").load(path).schema
+
+    def rows_read(probe):
+        r = EncodedTableReader({"path": path}, schema)
+        r.pushFilters([EqualTo(("key",), probe)])
+        return sum(b.num_rows for p in r.partitions() for b in r.read(p))
+
+    assert rows_read("k" + "0" * 32) == 0
+    probe = "k" + __import__("hashlib").md5(b"777").hexdigest()
+    assert 0 < rows_read(probe) <= 3 * 1024  # its block, plus any false positives

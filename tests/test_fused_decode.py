@@ -181,9 +181,9 @@ def test_fused_read_verify_detects_tamper(spark, tmp_path):
         read_encoded(spark, path, verify=True).count()
 
 
-def test_where_read_keeps_spark_scan_pruning(spark, tmp_path):
-    """Pruned reads are NOT fused — block min/max pruning rides Catalyst
-    pushdown on the blocks parquet scan."""
+def test_where_read_is_fused(spark, tmp_path):
+    """A `where` read is the fused read: its blocks are pruned inside the
+    decode task, and the row filter runs after the decode."""
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import write_encoded
 
@@ -192,7 +192,7 @@ def test_where_read_keeps_spark_scan_pruning(spark, tmp_path):
     write_encoded(df, path, target_partitions=4, resume=False)
     got = read_encoded(spark, path, where=("k", ">", 1500))
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" in plan or "FileScan" in plan
+    assert "Range (" in plan and "FileScan" not in plan
     assert got.count() == 499
     assert got.agg(F.sum("v")).collect()[0][0] == sum(i * 2 for i in range(1501, 2000))
 

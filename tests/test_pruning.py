@@ -56,16 +56,20 @@ def test_decode_projection_prunes_scan(spark, tmp_path):
 
 
 def test_decode_pruned_read_scan_has_readschema(spark, encoded_table):
-    """Pruned (`where=`) reads keep the Spark blocks scan, where Catalyst
-    column pruning must reach the parquet ReadSchema: only the projected
-    payload column and the stats/filter columns it needs, not the heavy
-    unasked-for payloads."""
+    """Pruned (`where=`) reads that keep the Spark blocks scan (here under
+    ignoreCorruptFiles): Catalyst column pruning must reach the parquet
+    ReadSchema: only the projected payload column and the stats/filter
+    columns it needs, not the heavy unasked-for payloads."""
     from parquet_spark.operators.decode import read_encoded
 
-    proj = read_encoded(
-        spark, encoded_table, columns=["n_tok"], where=("doc_id", ">", -1)
-    )
-    plan = proj._jdf.queryExecution().executedPlan().toString()
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        proj = read_encoded(
+            spark, encoded_table, columns=["n_tok"], where=("doc_id", ">", -1)
+        )
+        plan = proj._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema, plan
     rs = read_schema[0]

@@ -8,6 +8,10 @@ CRC:
 - `decode_table` over Spark's own scan of the generation dir
   (`mergeSchema`, and the `batch <= max_batch` filter for `as_of`);
 - the Data Source reader (`spark.read.format("parquet_spark")`).
+
+For each `where` case, four readers must agree: the fused `where` read,
+the same read on the Spark scan (under `ignoreCorruptFiles`), the bare
+read filtered by Spark, and the Data Source reader with `.where(...)`.
 """
 
 from __future__ import annotations
@@ -91,6 +95,23 @@ def tables(spark, tmp_path_factory):
     ddl = "k long, ts timestamp, tss array<timestamp>, d date, dec decimal(12,2), s struct<a: int not null>"
     write_encoded(spark.createDataFrame(rows, ddl), typed, target_partitions=2, resume=False, block_rows=64)
     out["temporal_decimal_struct"] = (typed, None, False, 300)
+
+    from parquet_spark.sources.synth import sequences_df
+
+    clustered = str(root / "clustered")
+    write_encoded(
+        sequences_df(spark, 3000, seed=21, n_partitions=2), clustered, target_partitions=4,
+        resume=False, block_rows=128, cluster_col="n_tok", bloom_cols=["source"],
+    )
+    out["clustered"] = (clustered, None, False, 3000)
+
+    nan = str(root / "nan")
+    rows = [(i, float(i)) for i in range(200)] + [(200 + i, float("nan")) for i in range(20)]
+    write_encoded(
+        spark.createDataFrame(rows, "doc_id long, x double").repartition(1), nan, target_partitions=1,
+        resume=False, block_rows=32, bucket_mode="partition", cluster_col="doc_id",
+    )
+    out["nan"] = (nan, None, False, 220)
     return out
 
 
@@ -137,3 +158,99 @@ def test_missing_generation_keeps_spark_error(spark, tmp_path):
         spark.read.parquet(data_dir)
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         read_encoded(spark, path)
+
+
+WHERE_CASES = {
+    "cluster_gt": ("clustered", [("n_tok", ">", 400)]),
+    "cluster_in": ("clustered", [("n_tok", "in", [3, 77, 500, None])]),
+    "bloom_eq": ("clustered", [("source", "=", "src3")]),
+    "as_of": ("batches_as_of_first", [("doc_id", "<", 150)]),
+    "column_older_batches_lack": ("batches_evolved", [("score", ">", 250.0)]),
+    "nan_gt": ("nan", [("x", ">", 150.0)]),
+    "nan_lt": ("nan", [("x", "<", 40.0), ("doc_id", "!=", 3)]),
+    "null_literal": ("flat", [("v", "=", None)]),
+    "null_in_candidate": ("flat", [("v", "in", [3, None])]),
+    "verify": ("flat_verify", [("v", ">=", 5), ("doc_id", "<=", 1000)]),
+}
+
+
+def _cond(preds):
+    cond = F.lit(True)
+    for col, op, v in preds:
+        c = F.col(col)
+        piece = {
+            ">": lambda: c > v, ">=": lambda: c >= v, "<": lambda: c < v, "<=": lambda: c <= v,
+            "=": lambda: c == F.lit(v), "!=": lambda: c != v, "in": lambda: c.isin(*v),
+        }[op]()
+        cond = cond & piece
+    return cond
+
+
+@pytest.mark.parametrize("case", list(WHERE_CASES))
+def test_where_readers_agree(spark, tables, case):
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.sources.spark_datasource import register
+
+    table, preds = WHERE_CASES[case]
+    path, as_of, verify, _n = tables[table]
+    fused = read_encoded(spark, path, where=preds, verify=verify, as_of=as_of)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    if case == "null_literal":  # Catalyst folds `v = NULL` to an empty relation
+        assert plan.startswith("LocalTableScan <empty>"), plan
+    else:
+        assert "Range (" in plan and "ArrowEvalPython" not in plan, plan
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        scan = read_encoded(spark, path, where=preds, verify=verify, as_of=as_of)
+        assert "Range (" not in scan._jdf.queryExecution().executedPlan().toString()
+        scan_n, scan_crc = scan.count(), _crc(scan)
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
+    then = read_encoded(spark, path, verify=verify, as_of=as_of).where(_cond(preds))
+
+    register(spark)
+    reader = spark.read.format("parquet_spark").option("verify", str(verify).lower())
+    if as_of is not None:
+        reader = reader.option("as_of", as_of)
+    ds = reader.load(path).where(_cond(preds))
+
+    assert fused.schema == scan.schema == then.schema == ds.schema
+    assert fused.count() == scan_n == then.count() == ds.count()
+    assert _crc(fused) == scan_crc == _crc(then) == _crc(ds)
+    if case != "null_literal":
+        assert scan_n > 0
+
+
+def test_where_read_plans_only_matching_row_groups(spark, tmp_path, monkeypatch):
+    """On a blocks file whose row groups hold disjoint `n_tok` ranges, the
+    fused `where` read plans splits only for the row groups that may
+    match; a predicate beyond the max plans none and reads 0 rows."""
+    import pyarrow.parquet as pq
+
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.sources import arrow_scan
+
+    path = str(tmp_path / "t")
+    df = spark.range(0, 4000).select(F.col("id").alias("doc_id"), F.col("id").alias("n_tok"))
+    write_encoded(df.repartition(1), path, target_partitions=1, resume=False, block_rows=250,
+                  bucket_mode="partition", cluster_col="n_tok")
+    data_dir = os.path.join(path, read_snapshot(path)["data_dir"])
+    files = [os.path.join(data_dir, f) for f in os.listdir(data_dir) if f.endswith(".parquet")]
+    blocks = pq.read_table(files).sort_by("_min_n_tok")
+    for f in files:
+        os.remove(f)
+    pq.write_table(blocks, os.path.join(data_dir, "part-00000.parquet"), row_group_size=4)
+    assert pq.ParquetFile(os.path.join(data_dir, "part-00000.parquet")).metadata.num_row_groups == 4
+
+    planned = []
+    real = arrow_scan.fused_scan
+    monkeypatch.setattr(arrow_scan, "fused_scan", lambda s, splits, *a: planned.append(len(splits)) or real(s, splits, *a))
+    assert read_encoded(spark, path).count() == 4000
+    got = read_encoded(spark, path, where=("n_tok", ">", 3500))
+    assert got.count() == 499
+    empty = read_encoded(spark, path, where=("n_tok", ">", 10_000))
+    assert "Range (" in empty._jdf.queryExecution().executedPlan().toString()
+    assert empty.count() == 0
+    bare, pruned, none = planned
+    assert 0 < pruned < bare and none == 0, planned

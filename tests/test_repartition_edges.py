@@ -84,3 +84,39 @@ def test_empty_dataframe_roundtrip(spark, tmp_path):
     back = read_encoded(spark, path)
     assert back.count() == 0
     assert back.columns == df.columns
+
+
+def test_murmur3_int_matches_spark_hash(spark):
+    from parquet_spark.operators.repartition import murmur3_int
+
+    ints = list(range(-150, 250)) + [2**31 - 1, -(2**31), 123_456_789]
+    got = spark.createDataFrame([(i,) for i in ints], "k int").select("k", F.hash("k").alias("h")).collect()
+    assert {r.k: r.h for r in got} == {i: murmur3_int(i) for i in ints}
+
+
+def test_salted_buckets_fill_every_partition(spark, tmp_path):
+    """Bucket b lands on partition b mod P, so with at least P buckets no
+    partition is empty; hash-partitioning the small bucket ids piled
+    buckets onto a few partitions."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+
+    for p in (2, 4, 8, 16):
+        df = spark.range(0, 400).select(F.col("id").alias("doc_id"), (F.col("id") % p).alias("source"))
+        salted, n_buckets = salted_repartition(df, p, weight_col=None)
+        assert n_buckets >= p
+        per_part = salted.groupBy(F.spark_partition_id().alias("pid")).agg(
+            F.collect_set("__bucket").alias("b")).collect()
+        assert sorted(r.pid for r in per_part) == list(range(p))
+        assert all(b % p == r.pid for r in per_part for b in r.b)
+
+    path = str(tmp_path / "t")
+    spark_df = spark.range(0, 900).select(F.col("id").alias("doc_id"), (F.col("id") % 7).alias("v"))
+    write_encoded(spark_df, path, target_partitions=2, resume=False, block_rows=128)
+    assert read_snapshot(path)["bucket_mode"] == "salted"
+    data_dir = os.path.join(path, read_snapshot(path)["data_dir"])
+    files = [os.path.join(data_dir, f) for f in os.listdir(data_dir) if f.endswith(".parquet")]
+    assert sorted(pq.read_metadata(f).num_rows > 0 for f in files) == [True, True]

@@ -76,16 +76,39 @@ def test_where_equals_decode_then_filter(spark, tmp_path):
     assert g_src == w_src
 
 
+def _pushed_filters(plan: str) -> str:
+    """The `PushedFilters: [...]` list of the plan's scan; Spark cuts a
+    long list short with `...`."""
+    import re
+
+    m = re.search(r"PushedFilters: \[(.*?)(?:\]|\.\.\.)(?:, |$)", plan, re.M)
+    assert m, plan
+    return m.group(1)
+
+
 def test_where_predicate_is_pushed_to_scan(spark, tmp_path):
+    """Reads that keep the Spark scan (here under ignoreCorruptFiles)
+    prune with `_block_keep_condition`, which Spark pushes into the
+    parquet scan of the blocks."""
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.encode import write_encoded
     from parquet_spark.sources.synth import sequences_df
 
     path = str(tmp_path / "t3")
     write_encoded(sequences_df(spark, 2000, seed=7, n_partitions=2), path, target_partitions=4, resume=False)
-    plan = read_encoded(spark, path, where=("n_tok", ">", 100))._jdf.queryExecution().executedPlan().toString()
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert pushed and "_max_n_tok" in pushed[0], plan
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        for where, stats_col in (
+            (("n_tok", ">", 100), "_max_n_tok"),
+            (("n_tok", "in", [5, 50, 500]), "_min_n_tok"),
+            (("source", "=", "src3"), "_min_source"),
+        ):
+            plan = read_encoded(spark, path, where=where)._jdf.queryExecution().executedPlan().toString()
+            assert "Range (" not in plan, plan
+            pushed = _pushed_filters(plan)
+            assert pushed.strip() and stats_col in pushed, (where, plan)
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
 
 
 def test_where_bad_inputs(spark, tmp_path):
@@ -244,3 +267,66 @@ def test_where_in_and_not_equal(spark, tmp_path):
         .select("doc_id").collect()
     )
     assert got_gen == want_in
+
+
+def test_block_keep_matches_column_form(spark):
+    """`block_keep` (Arrow, the fused read and the Data Source reader) and
+    `_block_keep_condition` (Spark, the Spark scan and maintain) keep the
+    same blocks: every op, int/float/string/date stats, null bounds, NULL
+    literals, empty and long `in` lists. On a NaN bound the Arrow rule
+    keeps, so there it keeps at least what the Column keeps."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from parquet_spark.operators.decode import _PRUNE_OPS, _block_keep_condition, block_keep
+
+    d = dt.date
+    nan, inf = float("nan"), float("inf")
+    bounds = {  # column -> (arrow type, Spark type, [(vmin, vmax)] per block)
+        "a": (pa.int32(), "int", [(1, 5), (10, 20), (None, None), (5, 5), (-3, 0), (7, 7)]),
+        "x": (pa.float64(), "double", [(1.0, 2.0), (1.0, nan), (nan, nan), (None, None), (-inf, 0.5), (2.0, 2.0)]),
+        "s": (pa.string(), "string", [("a", "f"), ("m", "p"), (None, None), ("q", "q"), ("", "b"), ("zz", "zzz")]),
+        "d": (pa.date32(), "date", [(d(2020, 1, 1), d(2020, 1, 9)), (d(2021, 5, 1), d(2021, 6, 1)), (None, None),
+                                    (d(2020, 1, 9), d(2020, 1, 9)), (d(1999, 1, 1), d(2000, 1, 1)),
+                                    (d(2020, 3, 1), d(2020, 3, 2))]),
+    }
+    values = {
+        "a": [0, 5, 12, 25, None],
+        "x": [0.5, 1.5, 2.0, 3.0, None],
+        "s": ["a", "c", "n", "zz", None],
+        "d": [d(2020, 1, 5), d(2020, 1, 9), d(2021, 1, 1), None],
+    }
+    n = 6
+    stats = pa.table({
+        f"{k}{c}": pa.array([b[i] for b in blocks], t)
+        for c, (t, _st, blocks) in bounds.items() for i, k in enumerate(("_min_", "_max_"))
+    })
+    cases = []
+    for c, vals in values.items():
+        for op in sorted(_PRUNE_OPS - {"in"}):
+            cases += [(c, op, v) for v in vals]
+        cases += [(c, "in", [v]) for v in vals]
+        cases += [(c, "in", []), (c, "in", [None]), (c, "in", vals), (c, "in", vals[:2] * 9)]
+    cases.append(("a", "in", list(range(100, 130)) + [None, 7]))
+    cases.append(("s", "in", [f"k{i}" for i in range(20)] + ["n"]))
+
+    ddl = ", ".join(f"`{k}{c}` {st}" for c, (_t, st, _b) in bounds.items() for k in ("_min_", "_max_"))
+    sdf = spark.createDataFrame([(i, *stats.slice(i, 1).to_pylist()[0].values()) for i in range(n)], f"i int, {ddl}")
+    rows = sdf.select("i", *[_block_keep_condition(*cs).alias(f"k{j}") for j, cs in enumerate(cases)]).orderBy("i").collect()
+    nan_rows = {i for i, (lo, hi) in enumerate(bounds["x"][2]) if lo != lo or hi != hi}
+    for j, (c, op, v) in enumerate(cases):
+        want = [r[f"k{j}"] for r in rows]
+        got = block_keep(stats, [(c, op, v)]).to_pylist()
+        assert None not in want, (c, op, v, want)
+        for i in range(n):
+            if c == "x" and i in nan_rows:
+                assert got[i] or not want[i], (c, op, v, i, got, want)
+            else:
+                assert got[i] == want[i], (c, op, v, i, got, want)
+    # a stats column the blocks lack keeps every block
+    assert block_keep(stats, [("zz", ">", 1)]).to_pylist() == [True] * n
+    # ANDed predicates
+    both = block_keep(stats, [("a", ">", 4), ("s", "<", "n")]).to_pylist()
+    assert both == [a and s for a, s in zip(block_keep(stats, [("a", ">", 4)]).to_pylist(),
+                                            block_keep(stats, [("s", "<", "n")]).to_pylist())]
