@@ -151,7 +151,8 @@ def roundtrip_table(
     fused-scan encode path).
 
     The feed is chosen here, by `arrow_scan.fused_splits` with `want` =
-    the default parallelism — the gate write_encoded uses too. On fused
+    the default parallelism — the gate write_encoded uses too — from one
+    `arrow_scan.plan_facts` read. On fused
     splits each task reads its slices with pyarrow (no JVM→Python row
     transpose; 1.07 s → 0.74 s on the 6M-row lineitem roundtrip).
     Otherwise the Spark scan feeds the kernels; when it yields fewer
@@ -169,32 +170,31 @@ def roundtrip_table(
         _encode_fn,
         check_reserved_columns,
     )
-    from parquet_spark.sources.arrow_scan import MIN_SPLIT_BYTES, _read_split, fused_scan, fused_splits, local_path
+    from parquet_spark.sources.arrow_scan import MIN_SPLIT_BYTES, _read_split, fused_scan, fused_splits, plan_facts
 
     block_rows = block_rows or DEFAULT_BLOCK_ROWS
-    columns = [c for c in df.columns if c != BUCKET_COL]
+    facts = plan_facts(df)
+    names = facts.schema.fieldNames()
+    columns = [c for c in names if c != BUCKET_COL]
     check_reserved_columns(columns)
-    out_schema = StructType(
-        [next(f for f in df.schema.fields if f.name == c) for c in columns]
-    )
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    fused = fused_splits(df, par, block_rows)
+    out_schema = StructType([f for f in facts.schema.fields if f.name != BUCKET_COL])
+    par = facts.parallelism
+    fused = fused_splits(facts, par, block_rows)
     enc = _encode_fn(
         columns, block_rows, codecs, None,
-        has_bucket=fused is None and BUCKET_COL in df.columns,
-        positions=None if fused is not None else [df.columns.index(c) for c in columns],
+        has_bucket=fused is None and BUCKET_COL in names,
+        positions=None if fused is not None else [names.index(c) for c in columns],
     )
     dec = _decode_fn(columns, out_schema, False)
     if fused is not None:
         return fused_scan(
-            spark, fused[0],
+            facts, fused[0],
             lambda split, pf: _read_split(pf, *split[2:], columns, block_rows),
             lambda feed: dec(enc(feed)), out_schema,
         )
-    if df.rdd.getNumPartitions() < par:
+    if facts.npart < par:
         try:
-            sz = sum(os.path.getsize(p) for p in map(local_path, df.inputFiles()) if p)
+            sz = sum(os.path.getsize(p) for p in facts.paths if p)
         except OSError:
             sz = 0
         if sz >= par * MIN_SPLIT_BYTES:
@@ -281,15 +281,16 @@ def _maybe_decode_blocks_arrow(
     there are no files or a footer is unreadable (the Spark scan raises)."""
     from pyarrow import fs as pafs
 
-    from parquet_spark.sources.arrow_scan import _plan_splits_for_files, fused_scan, ignores_corrupt_files
+    from parquet_spark.sources.arrow_scan import _plan_splits_for_files, fused_scan, session_facts
 
-    if ignores_corrupt_files(spark):
+    facts = session_facts(spark)
+    if facts.ignore_corrupt:
         return None  # only the Spark scan skips unreadable files
     fs, files = list_blocks_files(data_dir, max_batch)
     if not files or not isinstance(fs, pafs.LocalFileSystem):
         return None
     try:
-        splits = _plan_splits_for_files(files, spark.sparkContext.defaultParallelism, preds=preds)
+        splits = _plan_splits_for_files(files, facts.parallelism, preds=preds)
     except (OSError, ValueError):  # unreadable footer (pyarrow's
         # ArrowInvalid is a ValueError): the Spark scan reports it
         return None
@@ -298,7 +299,7 @@ def _maybe_decode_blocks_arrow(
     # exists to fix, and compact_table itself reads through here) packs
     # its splits into tasks by data size like Spark's own scan
     return fused_scan(
-        spark, splits, lambda split, pf: read_blocks(pf, *split[1:], want, preds),
+        facts, splits, lambda split, pf: read_blocks(pf, *split[1:], want, preds),
         _decode_fn(list(columns), out_schema, verify), out_schema,
     )
 
@@ -467,8 +468,21 @@ def _block_keep_condition(col: str, op: str, value):
     if len(vals) > 16:
         # large candidate sets (merge_into key pruning): a flat array
         # literal + EXISTS keeps the expression tree depth O(1) —
-        # OR-chains of hundreds of terms overflow Catalyst's stack
-        return F.exists(F.array(*map(F.lit, vals)), lambda k: (vmin <= k) & (vmax >= k)) | unknown
+        # OR-chains of hundreds of terms overflow Catalyst's stack. Spark
+        # pushes none of EXISTS into the scan, so the candidates'
+        # [min, max] envelope rides along as two pushable conjuncts; the
+        # null-bound test sits inside the lambda, or Catalyst would factor
+        # it out of all three into one unpushable OR.
+        cond = F.exists(F.array(*map(F.lit, vals)), lambda k: (vmin <= k) & (vmax >= k) | unknown)
+        try:
+            # only where Python orders the candidates as Spark does: no
+            # NaN, no timestamp (Spark orders instants, not wall times)
+            if not any(v != v or isinstance(v, datetime.datetime) for v in vals):
+                lo, hi = min(vals), max(vals)
+                return cond & _block_keep_condition(col, ">=", lo) & _block_keep_condition(col, "<=", hi)
+        except TypeError:  # candidates that do not compare in Python
+            pass
+        return cond
     cond = _range_keep(op, vmin, vmax, [F.lit(v) for v in vals], operator)
     return unknown if cond is None else cond | unknown
 

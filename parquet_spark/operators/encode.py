@@ -36,7 +36,6 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from py4j.protocol import Py4JError
 from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -283,18 +282,8 @@ def encode_table(
     has_bucket = BUCKET_COL in df.columns
     columns = columns or [c for c in df.columns if c != BUCKET_COL]
     check_reserved_columns(columns)
-    type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    stats_cols = [c for c in columns if type_of.get(c) in _STATS_SPARK_TYPES]
     bloom_cols = list(bloom_cols or [])
-    for c in bloom_cols:
-        if c not in columns:
-            raise KeyError(f"bloom_cols column {c!r} not in encoded columns")
-        if type_of.get(c) not in ("string", "binary"):
-            raise TypeError(
-                f"bloom_cols column {c!r} must be string/binary (membership "
-                f"filters hash byte values), got {type_of.get(c)}"
-            )
-    out_ddl = _blocks_out_ddl(columns, type_of, stats_cols, bloom_cols)
+    stats_cols, out_ddl = _blocks_layout(df.schema, columns, bloom_cols)
     return df.mapInArrow(
         _encode_fn(
             columns, block_rows, codecs, compression, has_bucket, stats_cols, manifest_dir, bloom_cols,
@@ -304,10 +293,22 @@ def encode_table(
     )
 
 
-def _blocks_out_ddl(columns: list[str], type_of: dict, stats_cols: list[str], bloom_cols: list[str]) -> str:
-    """Schema of the blocks relation — shared by the Spark-feed
-    (encode_table) and Arrow-feed (sources.arrow_scan) encode paths."""
-    return (
+def _blocks_layout(schema, columns: list[str], bloom_cols: list[str]) -> tuple[list[str], str]:
+    """(stats columns, blocks relation DDL) of encoding `columns` of the
+    Spark `schema` — shared by the Spark-feed (encode_table) and
+    Arrow-feed (write_encoded's arrow mode) encode paths, which so refuse
+    the same `bloom_cols`."""
+    type_of = {f.name: f.dataType.simpleString() for f in schema.fields}
+    stats_cols = [c for c in columns if type_of.get(c) in _STATS_SPARK_TYPES]
+    for c in bloom_cols:
+        if c not in columns:
+            raise KeyError(f"bloom_cols column {c!r} not in encoded columns")
+        if type_of.get(c) not in ("string", "binary"):
+            raise TypeError(
+                f"bloom_cols column {c!r} must be string/binary (membership "
+                f"filters hash byte values), got {type_of.get(c)}"
+            )
+    return stats_cols, (
         "part_id int, block_id long, bucket int, n_rows int, meta string, "
         + ", ".join(f"`{c}` binary" for c in columns)
         + "".join(f", `_min_{c}` {type_of[c]}, `_max_{c}` {type_of[c]}" for c in stats_cols)
@@ -425,33 +426,29 @@ def list_snapshots(path: str) -> list[dict]:
     return out
 
 
-def dataset_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
-    """Lineage key for resumability: input files + per-file size/mtime +
-    schema (no data scan). sha256, not crc32 — this key gates whether a
-    resume APPENDS into an existing table, so a collision (or a
-    same-names-different-content file set) silently grafting the wrong
-    lineage must be out of reach at fleet scale. Sizes/mtimes are folded
-    in where the filesystem exposes them cheaply (local paths); remote
-    URIs contribute path-only, which still pins the file *set*."""
+def dataset_fingerprint(facts, explicit: str | None = None) -> str:
+    """Lineage key for resumability, from `arrow_scan.PlanFacts` (no data
+    scan): input files + per-file size/mtime + schema + the plan text
+    without expression ids, so two filters of one file set differ. sha256,
+    not crc32 — this key gates whether a resume APPENDS into an existing
+    table, so a collision silently grafting the wrong lineage must be out
+    of reach at fleet scale. Sizes/mtimes are folded in where the
+    filesystem exposes them cheaply (local paths); remote URIs contribute
+    path-only, which still pins the file *set*."""
     if explicit:
         return explicit
     import hashlib
-
-    # imported here: arrow_scan imports this module
-    from parquet_spark.sources.arrow_scan import local_path
+    import re
 
     entries = []
-    for f in sorted(df.inputFiles()):
-        local = local_path(f)
-        if local is not None:
-            try:
-                st = os.stat(local)
-                entries.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
-                continue
-            except OSError:
-                pass
-        entries.append(f)
-    h = hashlib.sha256(("\n".join(entries) + "\x00" + df.schema.json()).encode()).hexdigest()
+    for f, local in zip(facts.files, facts.paths):
+        try:
+            st = os.stat(local)
+            entries.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
+        except (OSError, TypeError):  # no local path, or no such file
+            entries.append(f)
+    plan = re.sub(r"#\d+L?", "", facts.plan)
+    h = hashlib.sha256("\x00".join(["\n".join(entries), facts.schema.json(), plan]).encode()).hexdigest()
     return f"fp-{h[:20]}-{len(entries)}"
 
 
@@ -464,10 +461,10 @@ _ROW_LOCAL_NODES = {
 _UNSIZED_LEAVES = {"LogicalRDD", "Range"}
 
 
-def spark_feed_mode(df: DataFrame, target_partitions: int) -> tuple[str, str]:
+def spark_feed_mode(facts, target_partitions: int) -> tuple[str, str]:
     """write_encoded's bucket_mode='auto' choice for the Spark feed, from
-    the optimized plan alone: one py4j call, no Spark job. Returns (mode,
-    reason). "partition" needs all of:
+    the plan text of `arrow_scan.PlanFacts` alone: no Spark job. Returns
+    (mode, reason). "partition" needs all of:
 
     - every plan node row-local (`_ROW_LOCAL_NODES`), so the input's
       partitions are its leaves' partitions;
@@ -480,25 +477,41 @@ def spark_feed_mode(df: DataFrame, target_partitions: int) -> tuple[str, str]:
 
     Anything else (joins, aggregates, key repartitions, cached relations,
     no JVM plan to read) is "salted"."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
+    if not facts.plan:
         return "salted", "no JVM plan to read"
     unsized = False
-    for line in plan.splitlines():
+    for line in facts.plan.splitlines():
         node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
         if node == "Relation" and not line.rstrip().endswith((" parquet", " orc")):
             return "salted", "a relation that is not a parquet/orc file scan"
         unsized |= node in _UNSIZED_LEAVES
         if node and node not in _ROW_LOCAL_NODES | _UNSIZED_LEAVES:
             return "salted", f"{node} in the plan is not row-local"
-    npart = df.rdd.getNumPartitions()
-    want = min(target_partitions, df.sparkSession.sparkContext.defaultParallelism)
+    npart = facts.npart
+    want = min(target_partitions, facts.parallelism)
     if npart < max(2, want // 2):
         return "salted", f"{npart} input partition(s) underuse {want}-way parallelism"
     if unsized and npart > target_partitions:
         return "salted", f"{npart} generated partitions exceed target_partitions={target_partitions}"
     return "partition", f"row-local plan, {npart} input partitions encoded in place"
+
+
+def write_mode(
+    facts, target_partitions: int, cluster_col: str | None = None, block_rows: int = DEFAULT_BLOCK_ROWS
+) -> tuple[str, tuple | None, str]:
+    """The one bucket_mode='auto' decision, which write_encoded executes
+    and explain_partitioning prints: (mode, fused, reason). "arrow", with
+    `fused` = `arrow_scan.fused_splits`' (splits, plan), when the fused
+    gate accepts the input for min(target_partitions, cores) tasks and no
+    `cluster_col` has to order the rows; else `spark_feed_mode`'s choice
+    and None."""
+    from parquet_spark.sources.arrow_scan import fused_splits
+
+    fused = None if cluster_col else fused_splits(facts, min(target_partitions, facts.parallelism), block_rows)
+    if fused is not None:
+        return "arrow", fused, f"local parquet relation, {len(fused[0])} row-group/range splits"
+    mode, reason = spark_feed_mode(facts, target_partitions)
+    return mode, None, reason
 
 
 _SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
@@ -611,8 +624,9 @@ def write_encoded(
     min/max ranges on that column (see read_encoded(where=...)).
 
     bucket_mode="auto" (default) decides from the plan, with no Spark job
-    before the data write: "arrow" when `arrow_scan.fused_splits` accepts
-    the input (and no `cluster_col`), else `spark_feed_mode`'s choice —
+    before the data write (`write_mode`): "arrow" when
+    `arrow_scan.fused_splits` accepts the input (and no `cluster_col`),
+    else `spark_feed_mode`'s choice —
     "partition" (zero-shuffle, bucket = spark_partition_id: the plan shape
     of a plain parquet write) for a row-local plan over parquet/orc files,
     a LogicalRDD or a Range with enough partitions, "salted" (a shuffle
@@ -622,6 +636,12 @@ def write_encoded(
     Spark's own parquet write of it would. bucket_mode="salted" forces
     the shuffle (the resume key is then a pure function of (source,
     salt_key)); bucket_mode="partition" forces zero-shuffle.
+
+    The resume key is `fingerprint`, else `dataset_fingerprint` (input
+    files, schema, plan text). Pass `fingerprint=` for content the plan
+    does not show — a LogicalRDD or LocalRelation of other rows, a
+    mapInArrow closure's seed — or a resume of another such input keeps
+    buckets of the first.
 
     Partition-mode resume relies on Spark's deterministic partition
     planning (same input files + same session confs → same splits); the
@@ -637,14 +657,17 @@ def write_encoded(
 
     Returns a summary dict (buckets encoded/skipped, manifest path)."""
     from parquet_spark import tablefs
+    from parquet_spark.sources.arrow_scan import _read_split, fused_scan, fused_splits, plan_facts
 
     if bucket_mode not in ("auto", "salted", "partition"):
         raise ValueError(f"bucket_mode {bucket_mode!r} not in ('auto', 'salted', 'partition')")
     spark = df.sparkSession
-    fp = dataset_fingerprint(df, fingerprint)
-    columns = [c for c in df.columns]
+    facts = plan_facts(df)
+    fp = dataset_fingerprint(facts, fingerprint)
+    columns = facts.schema.fieldNames()
+    bloom_cols = list(bloom_cols or [])
     if target_partitions is None:
-        target_partitions = max(spark.sparkContext.defaultParallelism * 2, 8)
+        target_partitions = max(facts.parallelism * 2, 8)
 
     cur = read_snapshot(path)  # generation allocation must see the table
     snap = cur if resume else None  # resume logic must NOT (resume=False)
@@ -674,34 +697,23 @@ def write_encoded(
     man_dir = os.path.join(path, manifest_dirname)
     resuming = bool(snap and snap.get("fingerprint") == fp and tablefs.exists(data_dir))
 
-    npart = df.rdd.getNumPartitions()
-    par = spark.sparkContext.defaultParallelism
     chosen = bucket_mode
-    arrow_splits: list | None = None
-    arrow_plan: dict | None = None
+    fused = None
     if resuming:
         # resume MUST reuse the recorded mode: a fresh choice could differ
         # and silently change what a bucket id means
         chosen = snap.get("bucket_mode", "salted")
         if chosen == "arrow":
-            from parquet_spark.sources.arrow_scan import fused_splits
-
             # want=0: any plan of >= 2 splits; a recorded plan has that many
-            fused = fused_splits(df, 0, block_rows)
-            if fused is not None:
-                arrow_splits, arrow_plan = fused
-            if (
-                fused is None
-                or snap.get("partition_plan") != arrow_plan
-                or snap.get("n_buckets") != len(arrow_splits)
-            ):
+            fused = fused_splits(facts, 0, block_rows)
+            if fused is None or snap.get("partition_plan") != fused[1] or snap.get("n_buckets") != len(fused[0]):
                 # split plan drifted (core count, block size, file set) —
                 # recorded bucket ids don't describe this plan; re-encode
                 resuming = False
                 chosen = bucket_mode
-                arrow_splits = arrow_plan = None
+                fused = None
         elif chosen == "partition" and (
-            npart != snap.get("n_buckets")
+            facts.npart != snap.get("n_buckets")
             or snap.get("partition_plan") != _partition_plan_conf(spark)
         ):
             # partition planning changed (different partition count OR
@@ -711,28 +723,17 @@ def write_encoded(
             resuming = False
             chosen = bucket_mode
     if chosen == "auto":
-        # the one fused-feed gate (sources/arrow_scan.fused_splits) first:
-        # a bare local parquet relation or plain-column projection with
-        # enough splits for min(target_partitions, cores) tasks is read
-        # with pyarrow inside the encode tasks — same kernels, no
-        # JVM->Python row transpose. Otherwise the plan picks the mode.
-        from parquet_spark.sources.arrow_scan import fused_splits
-
-        fused = None if cluster_col else fused_splits(df, min(target_partitions, par), block_rows)
-        if fused is not None:
-            chosen = "arrow"
-            arrow_splits, arrow_plan = fused
-        else:
-            chosen = spark_feed_mode(df, target_partitions)[0]
+        chosen, fused, _reason = write_mode(facts, target_partitions, cluster_col, block_rows)
 
     if chosen == "arrow":
         salted = None
+        arrow_splits, arrow_plan = fused
         n_buckets = len(arrow_splits)
     elif chosen == "partition":
         salted = df.withColumn(BUCKET_COL, F.spark_partition_id())
         if cluster_col:
             salted = salted.sortWithinPartitions(cluster_col)
-        n_buckets = max(npart, 1)
+        n_buckets = max(facts.npart, 1)
     else:
         salted, n_buckets = salted_repartition(
             df, target_partitions, source_col=source_col, salt_key=salt_key,
@@ -795,17 +796,18 @@ def write_encoded(
         pending = os.path.join(man_dir, f"_pending-{uuid.uuid4().hex[:8]}")
         tablefs.mkdirs(pending)
         if chosen == "arrow":
-            from parquet_spark.sources.arrow_scan import encode_splits_arrow
+            # fused scan+encode: each task reads its splits with pyarrow and
+            # tags their rows with the split's bucket; a task that packs
+            # several splits closes a block at every bucket change, so the
+            # blocks do not depend on the task count
+            stats_cols, out_ddl = _blocks_layout(facts.schema, columns, bloom_cols)
 
-            type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-            stats_cols = [c for c in columns if type_of.get(c) in _STATS_SPARK_TYPES]
-            blocks = encode_splits_arrow(
-                spark, arrow_splits, columns,
-                _blocks_out_ddl(columns, type_of, stats_cols, list(bloom_cols or [])),
-                block_rows=block_rows, codecs=codecs, compression=compression,
-                stats_cols=stats_cols, manifest_dir=pending,
-                bloom_cols=list(bloom_cols or []),
-            )
+            def read(split, pf):
+                for batch in _read_split(pf, *split[2:], columns, block_rows):
+                    yield batch.append_column(BUCKET_COL, pa.array([split[0]] * batch.num_rows, pa.int32()))
+
+            enc = _encode_fn(columns, block_rows, codecs, compression, True, stats_cols, pending, bloom_cols)
+            blocks = fused_scan(facts, arrow_splits, read, enc, out_ddl)
         else:
             blocks = encode_table(
                 salted, columns=columns, block_rows=block_rows, codecs=codecs,
@@ -834,13 +836,13 @@ def write_encoded(
         if not fresh.isEmpty():
             manifest_from_blocks(fresh).write.mode("append").parquet(man_dir)
     write_snapshot(
-        path, df.schema.json(), columns, fp,
+        path, facts.schema.json(), columns, fp,
         {
             "n_buckets": n_buckets, "block_rows": block_rows, "bucket_mode": chosen,
             "target_partitions": target_partitions,
             "partition_plan": arrow_plan if chosen == "arrow" else _partition_plan_conf(spark),
             "data_dir": data_dirname, "manifest_dir": manifest_dirname,
-            "bloom_cols": list(bloom_cols or []),
+            "bloom_cols": bloom_cols,
         },
     )
     return {"fingerprint": fp, "buckets_total": n_buckets, "buckets_skipped": skipped, "path": path}

@@ -130,27 +130,23 @@ def explain_encode(df: DataFrame, sample_rows: int = 16384) -> list[dict]:
     return out
 
 
-def explain_partitioning(df: DataFrame, target_partitions: int | None = None) -> str:
-    """One-line account of write_encoded's bucket_mode='auto' choice. It
-    calls the same two functions write_encoded decides with
-    (`arrow_scan.fused_splits`, then `encode.spark_feed_mode`), so the
-    first word is the mode write_encoded records: arrow, partition or
-    salted. Runs no Spark job."""
-    from parquet_spark.operators.encode import spark_feed_mode
-    from parquet_spark.sources import arrow_scan
+def explain_partitioning(
+    df: DataFrame, target_partitions: int | None = None, cluster_col: str | None = None
+) -> str:
+    """One-line account of write_encoded's bucket_mode='auto' choice: it
+    formats `encode.write_mode`, the function write_encoded decides with,
+    so the first word is the mode write_encoded records: arrow, partition
+    or salted. Runs no Spark job."""
+    from parquet_spark.operators.encode import write_mode
+    from parquet_spark.sources.arrow_scan import fused_task_count, plan_facts
 
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    tp = target_partitions or max(par * 2, 8)
-    fused = arrow_scan.fused_splits(df, min(tp, par))
+    facts = plan_facts(df)
+    mode, fused, reason = write_mode(facts, target_partitions or max(facts.parallelism * 2, 8), cluster_col)
     if fused is not None:
         return (
-            f"arrow fused scan+encode: local parquet relation, "
-            f"{len(fused[0])} row-group/range splits in "
-            f"{arrow_scan.fused_task_count(spark, fused[0])} tasks, read with "
-            f"pyarrow in-task (no JVM row feed, no shuffle)"
+            f"arrow fused scan+encode: {reason} in {fused_task_count(facts, fused[0])} tasks, "
+            f"read with pyarrow in-task (no JVM row feed, no shuffle)"
         )
-    mode, reason = spark_feed_mode(df, tp)
     if mode == "partition":
         return f"partition mode, zero-shuffle: {reason}"
     return f"salted shuffle: {reason}"

@@ -23,13 +23,13 @@ min, same session).
 Scale behaviour (the rules are size-derived, not tuned to local[32]):
 
 - **one gate**: `fused_splits` decides for every caller (write_encoded,
-  decode.roundtrip_table, explain_partitioning). The fused feed runs
-  when df is a bare local parquet relation or a plain-column projection
-  of one, and the split plan below yields at least max(2, want // 2)
-  splits (`want` = the tasks the caller would run). The split count
-  comes from the footers the planner reads anyway; there is no row
-  threshold. With `spark.sql.files.ignoreCorruptFiles` on, the Spark
-  scan always runs, because only it skips unreadable files.
+  decode.roundtrip_table, explain_partitioning) from the plan string and
+  the footers, read once per op (`PlanFacts`). The fused feed runs when
+  df is a bare local parquet relation or a plain-column projection of
+  one, and the split plan below yields at least max(2, want // 2) splits
+  (`want` = the tasks the caller would run); there is no row threshold.
+  With `spark.sql.files.ignoreCorruptFiles` on, the Spark scan always
+  runs, because only it skips unreadable files.
 - **many files** (>= default parallelism): one split per file and the
   driver reads NO footers — planning is file listing only, the same
   metadata Spark's own planner needs. The 100 TB case lands here.
@@ -54,6 +54,8 @@ Scale behaviour (the rules are size-derived, not tuned to local[32]):
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
 from urllib.parse import unquote, urlparse
 
@@ -61,8 +63,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn, _parse_bytes_conf
+from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _parse_bytes_conf
 
 # The least input worth a split of its own, per core: a range sub-split
 # holds at least this much of its row group's compressed bytes, and
@@ -92,81 +95,118 @@ def local_path(uri: str) -> str | None:
     return unquote(parts.path) if parts.scheme == "file" else None
 
 
-def ignores_corrupt_files(spark: SparkSession) -> bool:
-    """`spark.sql.files.ignoreCorruptFiles` is on: only the Spark scan
-    skips unreadable files, so no fused read may run."""
-    return spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false").lower() == "true"
+@dataclasses.dataclass(frozen=True)
+class PlanFacts:
+    """What one op reads of its session and input DataFrame, each fact
+    once (`session_facts`, `plan_facts`). The rules that decide the op
+    read this record and ask the JVM nothing more. `npart` and
+    `file_splits` are computed on first use and kept."""
+
+    spark: SparkSession
+    parallelism: int  # defaultParallelism
+    ignore_corrupt: bool  # spark.sql.files.ignoreCorruptFiles
+    max_partition_bytes: int  # spark.sql.files.maxPartitionBytes
+    df: DataFrame | None = None
+    plan: str = ""  # optimized plan text; "" when there is no JVM plan
+    files: tuple[str, ...] = ()  # sorted inputFiles() URIs
+    paths: tuple[str | None, ...] = ()  # their local paths (`local_path`)
+    schema: StructType | None = None
+
+    @functools.cached_property
+    def npart(self) -> int:
+        """The input's partition count: a Spark-feed fact only."""
+        return self.df.rdd.getNumPartitions()
+
+    @functools.cached_property
+    def file_splits(self) -> list[tuple[str, int, int, int]] | None:
+        """The fused gate's split plan [(file, rg, lo, hi)], or None for
+        the Spark feed; `fused_splits` lists the conditions."""
+        nodes = [line.lstrip(" +-:") for line in self.plan.splitlines()]
+        # every projection item that is not a plain attribute is an Alias
+        # and prints " AS "; a truncated list hides its items
+        if len(nodes) == 2 and nodes[0].startswith("Project [") and not any(
+            s in nodes[0] for s in (" AS ", " more fields]")
+        ):
+            nodes = nodes[1:]
+        if len(nodes) != 1 or not nodes[0].startswith("Relation ") or not nodes[0].endswith(" parquet"):
+            return None
+        cols = self.schema.fieldNames()
+        if self.ignore_corrupt or not cols or len(set(cols)) != len(cols) or not self.paths:
+            return None
+        if None in self.paths or not all(map(os.path.exists, self.paths)):
+            return None
+        files = sorted(self.paths)
+        try:
+            # the footers the planner reads: every file's when there are
+            # few files, else only the first file's
+            few = files if len(files) < self.parallelism else files[:1]
+            footers = {f: pq.read_metadata(f) for f in few}
+            if not _read_types_match(self.schema, [m.schema.to_arrow_schema() for m in footers.values()]):
+                return None
+            return _plan_splits_for_files(files, self.parallelism, footers)
+        except (OSError, ValueError, NotImplementedError):  # unreadable
+            # footer (pyarrow's ArrowInvalid is a ValueError): the Spark
+            # scan reports it
+            return None
+
+
+def session_facts(spark: SparkSession) -> PlanFacts:
+    """The session's share of `PlanFacts`, for an op without an input
+    DataFrame (the blocks read)."""
+    conf = spark.conf
+    return PlanFacts(
+        spark, spark.sparkContext.defaultParallelism,
+        conf.get("spark.sql.files.ignoreCorruptFiles", "false").lower() == "true",
+        _parse_bytes_conf(conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 << 20),
+    )
+
+
+def plan_facts(df: DataFrame) -> PlanFacts:
+    """`PlanFacts` of one op over `df`: one plan-text read, one
+    `inputFiles()`, the session's facts and the schema."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
+        plan = ""
+    files = tuple(sorted(df.inputFiles()))
+    return dataclasses.replace(
+        session_facts(df.sparkSession), df=df, plan=plan, files=files,
+        paths=tuple(map(local_path, files)), schema=df.schema,
+    )
 
 
 def fused_splits(
-    df: DataFrame, want: int, block_rows: int = DEFAULT_BLOCK_ROWS
+    facts: PlanFacts, want: int, block_rows: int = DEFAULT_BLOCK_ROWS
 ) -> tuple[list[tuple[int, str, int, int, int]], dict] | None:
     """The one fused-feed gate. Returns the bucketed split plan
     [(bucket, file, rg, lo, hi)] and the plan-identity dict the snapshot
-    records, or None for the Spark feed. The fused feed needs:
+    records, or None for the Spark feed. It decides from the plan string
+    and the footers (`facts.file_splits`); the fused feed needs:
 
-    - an optimized plan that is a bare local parquet relation or a
-      projection of its plain data columns (distinct; no alias, computed,
-      partition or metadata column) — the only shapes a pyarrow read of
-      the files reproduces exactly;
+    - an optimized plan that is one local parquet `Relation`, optionally
+      under one `Project` of plain columns (no ` AS `: no alias or
+      computed column), with distinct column names — the only shapes a
+      pyarrow read of the files reproduces exactly;
+    - every column read by pyarrow with the Arrow type of its Spark field
+      (`_read_types_match`); a partition or metadata column is in no
+      footer, so it refuses too;
     - at least max(2, want // 2) splits, enough to occupy the `want`
       tasks the caller would otherwise run;
-    - every column read by pyarrow with the Arrow type of its Spark field
-      (`_read_types_match`);
     - readable footers, and `spark.sql.files.ignoreCorruptFiles` off.
 
     A resume recomputes this plan and compares it for equality — any
     drift (file set, core count, block size) invalidates recorded bucket
     ids and forces a full re-encode, like partition-mode conf drift."""
-    spark = df.sparkSession
-    if ignores_corrupt_files(spark):
-        return None
-    try:
-        node = df._jdf.queryExecution().optimizedPlan()
-        if node.getClass().getSimpleName() == "Project":
-            proj = node.projectList()
-            if any(proj.apply(i).getClass().getSimpleName() != "AttributeReference" for i in range(proj.size())):
-                return None
-            node = node.child()
-        if node.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        rel = node.relation()
-        if (
-            rel.getClass().getSimpleName() != "HadoopFsRelation"
-            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
-        ):
-            return None
-        data_cols = set(rel.dataSchema().fieldNames())
-    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
-        return None
-    cols = df.columns
-    if not cols or len(set(cols)) != len(cols) or not set(cols) <= data_cols:
-        return None
-    files = [local_path(f) for f in df.inputFiles()]
-    if not files or None in files or not all(os.path.exists(f) for f in files):
-        return None
-    files.sort()
-    par = spark.sparkContext.defaultParallelism
-    try:
-        # the footers the planner reads: every file's when there are few
-        # files, else only the first file's
-        footers = {f: pq.read_metadata(f) for f in (files if len(files) < par else files[:1])}
-        if not _read_types_match(df.schema, [m.schema.to_arrow_schema() for m in footers.values()]):
-            return None
-        raw = _plan_splits_for_files(files, par, footers)
-    except (OSError, ValueError, NotImplementedError):  # unreadable
-        # footer (pyarrow's ArrowInvalid is a ValueError): the Spark scan
-        # reports it
-        return None
-    if len(raw) < max(2, want // 2):
+    raw = facts.file_splits
+    if raw is None or len(raw) < max(2, want // 2):
         return None
     splits = [(i, f, rg, lo, hi) for i, (f, rg, lo, hi) in enumerate(raw)]
     plan = {
         "mode": "arrow",
         "n_splits": len(splits),
-        "parallelism": int(par),
+        "parallelism": int(facts.parallelism),
         "block_rows": int(block_rows),
-        "n_files": len(files),
+        "n_files": len(facts.files),
     }
     return splits, plan
 
@@ -268,20 +308,16 @@ def _read_split(pf, rg: int, lo: int, hi: int, cols: list[str], batch_rows: int)
             break
 
 
-def fused_task_count(spark: SparkSession, splits: list[tuple]) -> int:
+def fused_task_count(facts: PlanFacts, splits: list[tuple]) -> int:
     """Tasks the fused scan packs `splits` into — Spark's own small-file
     rule: about `spark.sql.files.maxPartitionBytes` of input per task,
     never fewer tasks than the default parallelism, never more than
     splits. Splits end in (file, rg, lo, hi); each file counts once."""
-    max_part = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"), 128 << 20
-    )
     input_bytes = sum(os.path.getsize(f) for f in {s[-4] for s in splits})
-    par = spark.sparkContext.defaultParallelism
-    return max(1, min(len(splits), max(par, input_bytes // max(max_part, 1))))
+    return max(1, min(len(splits), max(facts.parallelism, input_bytes // max(facts.max_partition_bytes, 1))))
 
 
-def fused_scan(spark: SparkSession, splits: list[tuple], read, kernel, out_schema) -> DataFrame:
+def fused_scan(facts: PlanFacts, splits: list[tuple], read, kernel, out_schema) -> DataFrame:
     """The one task skeleton of every fused-scan operator. The split list
     ships as a broadcast and the tasks as a JVM-native Range of split ids
     (a parallelize()d Python RDD would add a second Python hop per task),
@@ -290,8 +326,8 @@ def fused_scan(spark: SparkSession, splits: list[tuple], read, kernel, out_schem
     one ParquetFile per file (splits are file-ordered), feeds
     `read(split, pf)` batches for its splits to `kernel`, and yields
     the kernel's output batches."""
-    bc = spark.sparkContext.broadcast(list(splits))
-    sdf = spark.range(0, len(splits), numPartitions=fused_task_count(spark, splits))
+    bc = facts.spark.sparkContext.broadcast(list(splits))
+    sdf = facts.spark.range(0, len(splits), numPartitions=fused_task_count(facts, splits))
 
     def gen(batches):
         import pyarrow.parquet as pq
@@ -310,39 +346,3 @@ def fused_scan(spark: SparkSession, splits: list[tuple], read, kernel, out_schem
 
     return sdf.mapInArrow(gen, out_schema)
 
-
-def encode_splits_arrow(
-    spark: SparkSession,
-    splits: list[tuple[int, str, int, int, int]],
-    columns: list[str],
-    out_ddl: str,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    codecs: dict | None = None,
-    compression: str | None = None,
-    stats_cols: list[str] | None = None,
-    manifest_dir: str | None = None,
-    bloom_cols: list[str] | None = None,
-) -> DataFrame:
-    """Write-path fused scan+encode over pre-planned bucketed splits
-    [(bucket, file, rg, lo, hi)]: each task reads its slices with pyarrow,
-    tags the rows with each split's bucket id, and runs the standard
-    encode kernels — stats columns and side-band manifest included, so
-    the blocks relation is exactly what `encode_table` would produce for
-    write_encoded's partition mode, minus the JVM row feed. A task that
-    packs several splits still closes a block at every bucket change, so
-    block contents do not depend on the task count."""
-    from parquet_spark.operators.encode import BUCKET_COL
-
-    cols = list(columns)
-    enc = _encode_fn(
-        cols, block_rows, codecs, compression, has_bucket=True,
-        stats_cols=stats_cols, manifest_dir=manifest_dir, bloom_cols=bloom_cols,
-    )
-
-    def read(split, pf):
-        import pyarrow as pa
-
-        for batch in _read_split(pf, *split[2:], cols, block_rows):
-            yield batch.append_column(BUCKET_COL, pa.array([split[0]] * batch.num_rows, pa.int32()))
-
-    return fused_scan(spark, splits, read, enc, out_ddl)

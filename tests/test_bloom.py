@@ -102,11 +102,14 @@ def test_bloom_requires_string_or_binary(spark, tmp_path):
     from parquet_spark.sources.synth import sequences_df
 
     df = sequences_df(spark, 200, seed=3, n_partitions=1)
-    with pytest.raises(TypeError, match="bloom"):
-        write_encoded(
-            df, str(tmp_path / "b"), target_partitions=1, resume=False,
-            bloom_cols=["n_tok"],
-        )
+    # the same rows as parquet files take the fused (arrow) feed
+    df.repartition(4).write.parquet(str(tmp_path / "src"))
+    for inp in (df, spark.read.parquet(str(tmp_path / "src"))):
+        with pytest.raises(TypeError, match="bloom"):
+            write_encoded(
+                inp, str(tmp_path / "b"), target_partitions=1, resume=False,
+                bloom_cols=["n_tok"],
+            )
 
 
 def test_bloomless_table_unaffected(spark, tmp_path):

@@ -1,11 +1,13 @@
 """One gate, `arrow_scan.fused_splits`, chooses between the fused Arrow
 feed and the Spark feed for write_encoded, roundtrip_table and
 explain_partitioning; on the Spark feed, `encode.spark_feed_mode` picks
-partition or salted mode. The callers must agree for every input shape,
-and every feed and mode must return the input's rows."""
+partition or salted mode. Both decide from one `arrow_scan.plan_facts`
+read per op. The callers must agree for every input shape, and every
+feed and mode must return the input's rows."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import numpy as np
@@ -17,7 +19,7 @@ from pyspark.sql import functions as F
 from parquet_spark.operators.decode import decode_table, read_encoded, roundtrip_table
 from parquet_spark.operators.encode import read_snapshot, write_encoded
 from parquet_spark.plans import explain_partitioning
-from parquet_spark.sources.arrow_scan import fused_splits, list_parquet_files
+from parquet_spark.sources.arrow_scan import fused_splits, list_parquet_files, plan_facts
 from parquet_spark.sources.synth import sequences_df
 
 N = 4000
@@ -91,6 +93,20 @@ def _case_names(d):
     return _typed_file(d, pa.table({"Id": range(N), "Val": [i * 0.5 for i in range(N)]}))
 
 
+def _hive(d):
+    """Two hive partitions, p=0 and p=1: the partition column is in no
+    footer."""
+    for p in range(2):
+        _typed_file(os.path.join(d, f"p={p}"), _table(p * N // 2, (p + 1) * N // 2))
+    return d
+
+
+def _wide_alias(d):
+    """30 columns: the optimized plan prints a Project of more than 25
+    items truncated, which hides an alias past the 25th."""
+    return _typed_file(d, pa.table({f"c{i}": range(i, N + i) for i in range(30)}))
+
+
 def _zero_rg(d):
     os.makedirs(d)
     for i in range(2):
@@ -119,6 +135,13 @@ SHAPES = {
         lambda d: _one_file(d, N // 4), lambda df: df.select("k", (F.col("v") * 2).alias("v")), "spark"
     ),
     "filtered": (lambda d: _one_file(d, N // 4), lambda df: df.where(F.col("k") % 3 != 0), "spark"),
+    # the gate reads the plan string; the footers refuse what it cannot see
+    "hive_partitioned": (_hive, lambda df: df, "spark"),
+    "hive_partitioned_data_columns": (_hive, lambda df: df.select("k", "s", "v"), "fused"),
+    "metadata_column": (lambda d: _one_file(d, N // 4), lambda df: df.select("*", "_metadata"), "spark"),
+    "wide_projection_alias_past_25": (
+        _wide_alias, lambda df: df.select(*[f"c{i}" for i in range(28)], F.col("c29").alias("c28")), "spark"
+    ),
     "zero_row_groups": (_zero_rg, lambda df: df, "spark"),
     # pyarrow reads these columns with other types than Spark's fields
     # (ns timestamps, unsigned and dictionary types) or other names
@@ -137,7 +160,7 @@ def test_gate_agreement(spark, tmp_path, shape):
     make, view, want_feed = SHAPES[shape]
     df = view(spark.read.parquet(make(str(tmp_path / "in"))))
     par = spark.sparkContext.defaultParallelism
-    fused = fused_splits(df, par)
+    fused = fused_splits(plan_facts(df), par)
     assert (fused is not None) == (want_feed == "fused")
 
     rt = roundtrip_table(df)
@@ -183,7 +206,7 @@ def test_spark_feed_mode(spark, tmp_path, shape):
     make, tp, want = MODES[shape]
     df = make(spark, str(tmp_path / "in"))
     sc = spark.sparkContext
-    assert fused_splits(df, sc.defaultParallelism) is None
+    assert fused_splits(plan_facts(df), sc.defaultParallelism) is None
     assert explain_partitioning(df, target_partitions=tp).split()[0] == want
     path = str(tmp_path / "tbl")
     sc.setJobGroup(f"mode-{shape}", "write_encoded")
@@ -225,7 +248,7 @@ def test_ignore_corrupt_input_file(spark, tmp_path, ignore_corrupt):
     d = _dir4(str(tmp_path / "in"))
     _truncate(list_parquet_files(d)[-1])
     df = spark.read.parquet(d)
-    assert fused_splits(df, spark.sparkContext.defaultParallelism) is None
+    assert fused_splits(plan_facts(df), spark.sparkContext.defaultParallelism) is None
     intact = N * 3 // 4
     assert df.count() == intact
 
@@ -262,3 +285,62 @@ def test_ignore_corrupt_blocks_file(spark, tmp_path):
         assert _crc(got) == _crc(decode_table(blocks, df.schema))
     finally:
         spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
+
+
+def test_cluster_col_agreement(spark, tmp_path):
+    """A clustered write sorts rows within buckets, which the fused read
+    does not: a bare parquet input takes the Spark feed, and
+    explain_partitioning names the mode write_encoded records."""
+    df = spark.read.parquet(_dir4(str(tmp_path / "in")))
+    predicted = explain_partitioning(df, cluster_col="k")
+    assert explain_partitioning(df).split()[0] == "arrow"
+    path = str(tmp_path / "tbl")
+    write_encoded(df, path, resume=False, cluster_col="k")
+    assert predicted.split()[0] == read_snapshot(path)["bucket_mode"] != "arrow"
+    assert _crc(read_encoded(spark, path)) == _crc(df)
+
+
+@contextlib.contextmanager
+def _py4j_commands(spark):
+    """The py4j commands sent while the block runs (a spy on the gateway
+    client's `send_command`)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+    client.send_command = lambda command, *a, **k: sent.append(command) or send(command, *a, **k)
+    try:
+        yield sent
+    finally:
+        client.send_command = send
+
+
+def test_explain_reads_each_fact_once(spark, tmp_path):
+    """explain_partitioning on one file of 8 row groups reads its plan
+    facts once (plan text, inputFiles(), session confs): as many py4j
+    round trips bare as projected, and at most 16."""
+    d = _typed_file(str(tmp_path / "in"), _table(0, N))
+    counts = []
+    for view in (lambda df: df, lambda df: df.select("v", "k")):
+        df = view(spark.read.parquet(d))
+        explain_partitioning(df)  # warm-up
+        with _py4j_commands(spark) as sent:
+            line = explain_partitioning(df)
+        assert line.startswith("arrow fused"), line
+        counts.append(len(sent))
+    assert counts[0] == counts[1] <= 16, counts
+
+
+def test_write_reads_input_files_once(spark, tmp_path):
+    """One write_encoded calls inputFiles() once. The arrow path never
+    asks for the input's partition count; the Spark feed asks once."""
+    d = _dir4(str(tmp_path / "in"))
+    for view, mode, npart_reads in (
+        (lambda df: df, "arrow", 0),
+        (lambda df: df.where(F.col("k") % 3 != 0), "partition", 1),
+    ):
+        df = view(spark.read.parquet(d))
+        path = str(tmp_path / f"tbl-{mode}")
+        with _py4j_commands(spark) as sent:
+            write_encoded(df, path, target_partitions=8, resume=False)
+        assert read_snapshot(path)["bucket_mode"] == mode
+        assert sum("\ninputFiles\n" in c for c in sent) == 1
+        assert sum("\njavaToPython\n" in c for c in sent) == npart_reads

@@ -242,8 +242,8 @@ def test_flat_rewrite_is_copy_on_write(spark, tmp_path):
     from parquet_spark.operators.encode import read_snapshot, write_encoded
 
     path = str(tmp_path / "cow")
-    # explicit fingerprints: range() frames have no input files, so the
-    # derived fingerprint would collide and take the resume path instead
+    # explicit fingerprints name the two inputs; the derived ones differ
+    # too, because the Range bounds are in the plan text they hash
     df1 = spark.range(0, 500).select(F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v"))
     write_encoded(df1, path, target_partitions=2, fingerprint="v1")
     s1 = read_snapshot(path)["sequence"]

@@ -323,6 +323,7 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_spark.operators.encode import dataset_fingerprint, read_snapshot, write_encoded
+    from parquet_spark.sources.arrow_scan import plan_facts
 
     src = tmp_path / "src"
     src.mkdir()
@@ -339,14 +340,18 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
 
     make(100)
     df1 = spark.read.parquet(str(src))
-    fp1 = dataset_fingerprint(df1)
+    fp1 = dataset_fingerprint(plan_facts(df1))
     path = str(tmp_path / "enc_fp")
-    write_encoded(df1, path, target_partitions=2, resume=True, block_rows=64)
+    s = write_encoded(df1, path, target_partitions=2, resume=True, block_rows=64)
     assert read_snapshot(path)["fingerprint"] == fp1
+    # the same input built again has the same fingerprint, so it resumes
+    again = spark.read.parquet(str(src))
+    assert dataset_fingerprint(plan_facts(again)) == fp1
+    assert write_encoded(again, path, target_partitions=2, block_rows=64)["buckets_skipped"] == s["buckets_total"]
 
     make(150)  # same name, different content/size
     df2 = spark.read.parquet(str(src))
-    fp2 = dataset_fingerprint(df2)
+    fp2 = dataset_fingerprint(plan_facts(df2))
     assert fp2 != fp1
     s = write_encoded(df2, path, target_partitions=2, resume=True, block_rows=64)
     assert s["buckets_skipped"] == 0  # full re-encode, no stale append
@@ -357,9 +362,39 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     spaced = tmp_path / "dir with space"
     spaced.mkdir()
     make(100, str(spaced / "part-0.parquet"))
-    fp_space = dataset_fingerprint(spark.read.parquet(str(spaced)))
+    fp_space = dataset_fingerprint(plan_facts(spark.read.parquet(str(spaced))))
     make(150, str(spaced / "part-0.parquet"))
-    assert dataset_fingerprint(spark.read.parquet(str(spaced))) != fp_space
+    assert dataset_fingerprint(plan_facts(spark.read.parquet(str(spaced)))) != fp_space
+
+
+@pytest.mark.parametrize("inputs", ["filters_of_one_file_set", "ranges"])
+def test_derived_fingerprint_tells_plans_apart(spark, tmp_path, inputs):
+    """Two inputs with the same files and schema differ in their plan
+    text: a default resume=True write of the second encodes the second's
+    rows, where a fingerprint of files and schema alone resumed into the
+    first's buckets."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(8):
+        pq.write_table(pa.table({"a": pa.array(range(i * 500, (i + 1) * 500), pa.int64())}), str(src / f"p{i}.parquet"))
+    first, second = {
+        "filters_of_one_file_set": lambda: (
+            spark.read.parquet(str(src)).where("a < 1000"), spark.read.parquet(str(src)).where("a >= 1000")
+        ),
+        "ranges": lambda: (spark.range(0, 100), spark.range(0, 5000)),
+    }[inputs]()
+    path = str(tmp_path / "tbl")
+    write_encoded(first, path, target_partitions=4, block_rows=256)
+    s = write_encoded(second, path, target_partitions=4, block_rows=256)
+    assert s["buckets_skipped"] == 0
+    got = read_encoded(spark, path)
+    crc = F.sum(F.crc32(F.col(second.columns[0]).cast("string")))
+    assert got.count() == second.count()
+    assert got.agg(crc).collect() == second.agg(crc).collect()
 
 
 def test_partition_mode_resume_rejects_plan_conf_drift(spark, seq_path, tmp_path):

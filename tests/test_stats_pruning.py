@@ -101,6 +101,8 @@ def test_where_predicate_is_pushed_to_scan(spark, tmp_path):
         for where, stats_col in (
             (("n_tok", ">", 100), "_max_n_tok"),
             (("n_tok", "in", [5, 50, 500]), "_min_n_tok"),
+            # more than 16 candidates: EXISTS plus the pushable envelope
+            (("n_tok", "in", list(range(20))), "_min_n_tok"),
             (("source", "=", "src3"), "_min_source"),
         ):
             plan = read_encoded(spark, path, where=where)._jdf.queryExecution().executedPlan().toString()
