@@ -273,7 +273,7 @@ def _q_roundtrip_pruned_read(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="psq-pruned-") + "/t"
     write_encoded(
         df, path, target_partitions=8, block_rows=2048, resume=False,
-        source_col="o_orderkey % 4", salt_key="o_orderkey", weight_col=None,
+        source_col="o_orderkey % 4", salt_key="o_orderkey",
         cluster_col="o_totalprice",
     )
     return read_encoded(spark, path, where=("o_totalprice", ">", 150000.0))
@@ -446,7 +446,7 @@ def _q_roundtrip_bloom_pruned(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="psq-bloom-") + "/t"
     write_encoded(
         df, path, target_partitions=4, block_rows=64, resume=False,
-        source_col="source", salt_key="doc_id", weight_col="n_chars",
+        source_col="source", salt_key="doc_id",
         bloom_cols=["key"],
     )
     probe = "d" + hashlib.md5(b"42").hexdigest()

@@ -39,10 +39,19 @@ import pyarrow as pa
 from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from parquet_spark.operators.repartition import salted_repartition
+from parquet_spark.operators.repartition import BUCKET_COL, salt_rule, salted_repartition
 
-BUCKET_COL = "__bucket"
 DEFAULT_BLOCK_ROWS = 16384
+
+# parquet row-group size of every blocks writer (write_encoded, the
+# streaming sink, maintain's copy-on-write commit); Spark's default is
+# 128 MB. Block rows carry multi-MB binary payload cells, and N concurrent
+# tasks each buffering a 128 MB row group on one heap cause humongous-
+# object churn and full-GC stalls at high core counts (measured: 32-core
+# encode of a 4.8M-row table spent more time in GC pauses than in work).
+# Smaller row groups also give FINER row-group stats pruning on the
+# _min_/_max_ columns — strictly better for reads.
+BLOCKS_ROW_GROUP_BYTES = 32 << 20
 
 MANIFEST_DDL = (
     "bucket int, part_id int, block_id long, column string, codec string, "
@@ -428,8 +437,10 @@ def list_snapshots(path: str) -> list[dict]:
 
 def dataset_fingerprint(facts, explicit: str | None = None) -> str:
     """Lineage key for resumability, from `arrow_scan.PlanFacts` (no data
-    scan): input files + per-file size/mtime + schema + the plan text
-    without expression ids, so two filters of one file set differ. sha256,
+    scan): input files + per-file size/mtime + schema + the plan text and
+    plan JSON without expression ids, so two filters of one file set
+    differ, and so do two projections that differ only past the 25th item
+    `toString()` prints. sha256,
     not crc32 — this key gates whether a resume APPENDS into an existing
     table, so a collision silently grafting the wrong lineage must be out
     of reach at fleet scale. Sizes/mtimes are folded in where the
@@ -448,7 +459,9 @@ def dataset_fingerprint(facts, explicit: str | None = None) -> str:
         except (OSError, TypeError):  # no local path, or no such file
             entries.append(f)
     plan = re.sub(r"#\d+L?", "", facts.plan)
-    h = hashlib.sha256("\x00".join(["\n".join(entries), facts.schema.json(), plan]).encode()).hexdigest()
+    h = hashlib.sha256(
+        "\x00".join(["\n".join(entries), facts.schema.json(), plan, facts.plan_json]).encode()
+    ).hexdigest()
     return f"fp-{h[:20]}-{len(entries)}"
 
 
@@ -629,13 +642,18 @@ def write_encoded(
     else `spark_feed_mode`'s choice —
     "partition" (zero-shuffle, bucket = spark_partition_id: the plan shape
     of a plain parquet write) for a row-local plan over parquet/orc files,
-    a LogicalRDD or a Range with enough partitions, "salted" (a shuffle
-    onto buckets weighted by `weight_col`) for anything else. Accepted
-    trade-off: no probe measures the rows, so a LogicalRDD source whose
-    partitions are key-skewed encodes in place with one slow task, as
-    Spark's own parquet write of it would. bucket_mode="salted" forces
+    a LogicalRDD or a Range with enough partitions, "salted"
+    (`repartition.salted_repartition`: a hash shuffle by (source_col,
+    salt_key) onto exactly `target_partitions` buckets) for anything else.
+    Accepted trade-off: no probe measures the rows, so a LogicalRDD source
+    whose partitions are key-skewed encodes in place with one slow task,
+    as Spark's own parquet write of it would. bucket_mode="salted" forces
     the shuffle (the resume key is then a pure function of (source,
-    salt_key)); bucket_mode="partition" forces zero-shuffle.
+    salt_key, target_partitions), which the snapshot records as its salt
+    rule; a salted resume under another rule re-encodes into a fresh
+    generation); bucket_mode="partition" forces zero-shuffle.
+    `weight_col` is accepted and ignored: salted buckets are no longer
+    weighted per source.
 
     The resume key is `fingerprint`, else `dataset_fingerprint` (input
     files, schema, plan text). Pass `fingerprint=` for content the plan
@@ -699,6 +717,7 @@ def write_encoded(
 
     chosen = bucket_mode
     fused = None
+    rule = salt_rule(target_partitions, source_col, salt_key)
     if resuming:
         # resume MUST reuse the recorded mode: a fresh choice could differ
         # and silently change what a bucket id means
@@ -722,6 +741,12 @@ def write_encoded(
             # recorded bucket ids are meaningless; re-encode from scratch
             resuming = False
             chosen = bucket_mode
+        elif chosen == "salted" and snap.get("salt_rule") != rule:
+            # salted bucket ids are a function of the salt rule; under
+            # another rule (another target_partitions or key, or a table
+            # written before the rule was recorded) the recorded ids mean
+            # something else — re-encode
+            resuming = False
     if chosen == "auto":
         chosen, fused, _reason = write_mode(facts, target_partitions, cluster_col, block_rows)
 
@@ -735,27 +760,12 @@ def write_encoded(
             salted = salted.sortWithinPartitions(cluster_col)
         n_buckets = max(facts.npart, 1)
     else:
-        salted, n_buckets = salted_repartition(
-            df, target_partitions, source_col=source_col, salt_key=salt_key,
-            weight_col=weight_col, cluster_col=cluster_col,
-        )
-
-    if resuming and chosen == "salted":
-        # salted bucket ids are a deterministic function of (rows, salted
-        # plan); the plan is recomputed each run, so resume is only sound
-        # when the recomputed plan matches the recorded one. A mismatch
-        # (e.g. the data was compacted with a different target_partitions)
-        # means recorded bucket ids don't correspond to this plan — full
-        # re-encode. Older snapshots without the fields pass (legacy).
-        want_n, want_t = snap.get("n_buckets"), snap.get("target_partitions")
-        if (want_n is not None and want_n != n_buckets) or (
-            want_t is not None and want_t != target_partitions
-        ):
-            resuming = False
+        salted = salted_repartition(df, target_partitions, source_col, salt_key, cluster_col)
+        n_buckets = target_partitions
 
     if snap is not None and not resuming and cur is not None:
-        # a resume invalidated mid-flight (partition-plan drift above, or
-        # the salted-plan mismatch just checked) had already aimed at the
+        # a resume invalidated mid-flight (split- or partition-plan drift,
+        # or a salt-rule mismatch, all above) had already aimed at the
         # LIVE generation dirs; overwriting them in place would tear the
         # live snapshot on a crash and break every retained sequence that
         # references the generation — re-point at a fresh generation and
@@ -813,14 +823,7 @@ def write_encoded(
                 salted, columns=columns, block_rows=block_rows, codecs=codecs,
                 compression=compression, manifest_dir=pending, bloom_cols=bloom_cols,
             )
-        # 32 MB parquet row groups (default 128 MB): block rows carry
-        # multi-MB binary payload cells, and N concurrent tasks each
-        # buffering a 128 MB row group on one heap causes humongous-object
-        # churn and full-GC stalls at high core counts (measured: 32-core
-        # encode of a 4.8M-row table spent more time in GC pauses than in
-        # work). Smaller row groups also give FINER row-group stats
-        # pruning on the _min_/_max_ columns — strictly better for reads.
-        blocks.write.option("parquet.block.size", 32 << 20).mode(mode).parquet(data_dir)
+        blocks.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).mode(mode).parquet(data_dir)
         _publish_manifest(pending, man_dir, clear=(mode == "overwrite"))
 
     if mode == "append" and tablefs.exists(man_dir):
@@ -843,6 +846,7 @@ def write_encoded(
             "partition_plan": arrow_plan if chosen == "arrow" else _partition_plan_conf(spark),
             "data_dir": data_dirname, "manifest_dir": manifest_dirname,
             "bloom_cols": bloom_cols,
+            **({"salt_rule": rule} if chosen == "salted" else {}),
         },
     )
     return {"fingerprint": fp, "buckets_total": n_buckets, "buckets_skipped": skipped, "path": path}
@@ -856,7 +860,6 @@ def append_encoded(
     codecs: dict | None = None,
     source_col: str = "source",
     salt_key: str = "doc_id",
-    weight_col: str | None = "n_tok",
 ) -> dict:
     """Batch append: encode `df` as a new immutable batch directory
     (`data/batch=<n>`) next to the existing ones — the same layout and
@@ -891,9 +894,8 @@ def append_encoded(
         next_id = max(ids, default=-1) + 1
     enc = StreamingEncoder(
         path, target_partitions=target_partitions, block_rows=block_rows,
-        codecs=codecs, source_col=source_col, salt_key=salt_key, weight_col=weight_col,
+        codecs=codecs, source_col=source_col, salt_key=salt_key,
         data_dirname=data_dirname, manifest_dirname=manifest_dirname,
     )
-    enc._snapshot_written = tablefs.exists(_snapshot_path(path))
     enc(df, next_id)
     return {"path": path, "batch_id": next_id}

@@ -208,6 +208,7 @@ def _commit_cow(
     from pyspark.sql import functions as F
 
     from parquet_spark.operators.encode import (
+        BLOCKS_ROW_GROUP_BYTES,
         encode_table,
         manifest_from_blocks,
         write_snapshot,
@@ -222,7 +223,7 @@ def _commit_cow(
     data_dirname, manifest_dirname = f"data-{gen}", f"manifest-{gen}"
     data_dir = os.path.join(path, data_dirname)
     union = untouched.unionByName(new_blocks, allowMissingColumns=True)
-    union.write.option("parquet.block.size", 32 << 20).parquet(data_dir)
+    union.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).parquet(data_dir)
     written = spark.read.option("mergeSchema", "true").parquet(data_dir)
     manifest_from_blocks(
         written.select("bucket", "part_id", "block_id", "meta")

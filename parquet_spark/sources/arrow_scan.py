@@ -57,6 +57,7 @@ from __future__ import annotations
 import dataclasses
 import functools
 import os
+import re
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -99,8 +100,8 @@ def local_path(uri: str) -> str | None:
 class PlanFacts:
     """What one op reads of its session and input DataFrame, each fact
     once (`session_facts`, `plan_facts`). The rules that decide the op
-    read this record and ask the JVM nothing more. `npart` and
-    `file_splits` are computed on first use and kept."""
+    read this record and ask the JVM nothing more. `npart`, `plan_json`
+    and `file_splits` are computed on first use and kept."""
 
     spark: SparkSession
     parallelism: int  # defaultParallelism
@@ -116,6 +117,18 @@ class PlanFacts:
     def npart(self) -> int:
         """The input's partition count: a Spark-feed fact only."""
         return self.df.rdd.getNumPartitions()
+
+    @functools.cached_property
+    def plan_json(self) -> str:
+        """The optimized plan's JSON without its expression-id objects
+        (`exprId`, `resultId`), "" when there is no JVM plan: a fingerprint
+        fact only. `plan` cuts lists past maxToStringFields to `... N more
+        fields]`; the JSON lists every item."""
+        try:
+            js = self.df._jdf.queryExecution().optimizedPlan().toJSON()
+        except (Py4JError, AttributeError):  # no input DataFrame or no JVM plan
+            return ""
+        return re.sub(r'\{"product-class":"org\.apache\.spark\.sql\.catalyst\.expressions\.ExprId"[^{}]*\}', "", js)
 
     @functools.cached_property
     def file_splits(self) -> list[tuple[str, int, int, int]] | None:

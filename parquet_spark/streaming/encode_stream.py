@@ -9,31 +9,36 @@ the idiomatic Structured Streaming pattern for sinks Spark doesn't ship
 
 Each micro-batch appends:
   data/batch=<id>/      encoded blocks (one parquet dir per micro-batch)
-  manifest/batch=<id>/  per-(bucket, block, column) metrics
+  manifest/batch=<id>/  per-(bucket, block, column) metrics, written side-
+                        band by the encode tasks as in write_encoded
 with exactly-once semantics delegated to the checkpoint: a replayed batch
-id overwrites its own directory instead of duplicating (idempotent sink,
-the standard foreachBatch recipe).
+id overwrites its own directories instead of duplicating (idempotent
+sink, the standard foreachBatch recipe).
 
-At cluster scale the stream's salted repartition reuses a bucket plan
-computed once per `plan_refresh_batches` micro-batches (a plan per batch
-would re-aggregate the stream constantly; source skew drifts slowly).
+A salted micro-batch takes write_encoded's salted repartition
+(`repartition.salted_repartition`): no job of its own, and exactly
+`target_partitions` buckets, one per encode task.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
+from parquet_spark import tablefs
 from parquet_spark.operators.encode import (
+    BLOCKS_ROW_GROUP_BYTES,
+    BUCKET_COL,
     DEFAULT_BLOCK_ROWS,
+    _publish_manifest,
     encode_table,
-    manifest_from_blocks,
+    read_snapshot,
     write_snapshot,
 )
-from parquet_spark.operators.repartition import plan_salted_buckets, with_salted_bucket
-
-BUCKET_COL = "__bucket"
+from parquet_spark.operators.repartition import salted_repartition
 
 
 class StreamingEncoder:
@@ -53,8 +58,6 @@ class StreamingEncoder:
         codecs: dict | None = None,
         source_col: str = "source",
         salt_key: str = "doc_id",
-        weight_col: str | None = "n_tok",
-        plan_refresh_batches: int = 10,
         bucket_mode: str = "salted",
         data_dirname: str = "data",
         manifest_dirname: str = "manifest",
@@ -71,10 +74,7 @@ class StreamingEncoder:
         self.codecs = codecs
         self.source_col = source_col
         self.salt_key = salt_key
-        self.weight_col = weight_col
-        self.plan_refresh_batches = plan_refresh_batches
         self.bucket_mode = bucket_mode
-        self._plan = None
         self._snapshot_written = False
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -84,13 +84,11 @@ class StreamingEncoder:
         # stream swaps the snapshot to a generation this encoder does not
         # know; silently writing (and snapshotting) the stale dirname
         # would resurrect rewritten-away data — refuse loudly instead
-        from parquet_spark.operators.encode import read_snapshot as _rs
-
-        live = _rs(self.path)
-        if live is not None and live.get("data_dir", "data") != self.data_dirname:
+        prev = read_snapshot(self.path) or {}
+        if prev and prev.get("data_dir", "data") != self.data_dirname:
             raise RuntimeError(
                 f"table {self.path} was rewritten under this stream (live "
-                f"generation {live.get('data_dir')!r} != sink's "
+                f"generation {prev.get('data_dir')!r} != sink's "
                 f"{self.data_dirname!r}); restart the stream against the "
                 "current snapshot"
             )
@@ -105,30 +103,19 @@ class StreamingEncoder:
             # default salted mode.
             salted = batch_df.withColumn(BUCKET_COL, F.spark_partition_id())
         else:
-            if self._plan is None or (batch_id % self.plan_refresh_batches) == 0:
-                self._plan = plan_salted_buckets(
-                    batch_df, self.target_partitions, self.source_col, self.weight_col
-                )
-            salted = with_salted_bucket(
-                batch_df, self._plan, self.source_col, self.salt_key, BUCKET_COL
-            )
-            n_buckets = self._plan[-1][1] + self._plan[-1][2] if self._plan else self.target_partitions
-            salted = salted.repartition(
-                min(n_buckets, self.target_partitions), BUCKET_COL
-            ).sortWithinPartitions(BUCKET_COL)
-        blocks = encode_table(
-            salted, columns=columns, block_rows=self.block_rows, codecs=self.codecs
-        )
-        # idempotent per-batch dirs: a checkpoint replay overwrites, never dups
+            salted = salted_repartition(batch_df, self.target_partitions, self.source_col, self.salt_key)
+        # idempotent per-batch dirs: a checkpoint replay overwrites, never
+        # dups — the data write in overwrite mode, the manifest publish by
+        # clearing the batch's manifest dir
         data_dir = os.path.join(self.path, self.data_dirname, f"batch={batch_id}")
-        blocks.write.mode("overwrite").parquet(data_dir)
-        spark = batch_df.sparkSession
-        data_df = spark.read.parquet(data_dir)
-        manifest_from_blocks(
-            data_df.select("bucket", "part_id", "block_id", "meta")
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            os.path.join(self.path, self.manifest_dirname, f"batch={batch_id}")
+        man_dir = os.path.join(self.path, self.manifest_dirname, f"batch={batch_id}")
+        pending = os.path.join(man_dir, f"_pending-{uuid.uuid4().hex[:8]}")
+        tablefs.mkdirs(pending)
+        blocks = encode_table(
+            salted, columns=columns, block_rows=self.block_rows, codecs=self.codecs, manifest_dir=pending
         )
+        blocks.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).mode("overwrite").parquet(data_dir)
+        _publish_manifest(pending, man_dir, clear=True)
         # snapshot per committed batch: the sequence log is what makes
         # read_encoded(as_of=...) meaningful on batch/streaming tables.
         # max_batch is monotone even across checkpoint replays (a replayed
@@ -137,15 +124,8 @@ class StreamingEncoder:
         # the previous snapshot's fields and this batch's — a column an
         # earlier batch wrote stays readable (new blocks null-fill it) and
         # a column this batch adds null-fills the older blocks.
-        from pyspark.sql.types import StructType
-
-        from parquet_spark.operators.encode import read_snapshot
-
-        prev = read_snapshot(self.path) or {}
         schema = batch_df.schema
         if prev.get("schema"):
-            from pyspark.sql.types import StructField
-
             old = StructType.fromJson(prev["schema"])
             by_new = {f.name: f for f in schema.fields}
             merged = []

@@ -96,18 +96,17 @@ def test_encode_is_single_shuffle(spark):
     from parquet_spark.sources.synth import sequences_df
 
     df = sequences_df(spark, 2000, seed=9, n_partitions=2)
-    salted, _ = salted_repartition(df, 4)
+    salted = salted_repartition(df, 4)
     blocks = encode_table(salted)
     plan = blocks._jdf.queryExecution().executedPlan().toString()
-    # exactly one Exchange moving the data (the salted repartition); the
-    # broadcast of the tiny bucket plan must be a BroadcastExchange, not a
-    # second data shuffle
+    # exactly one Exchange moving the data (the salted repartition), and
+    # no join: the bucket is the partition id, not a looked-up plan
     n_exchange = sum(
         1 for ln in plan.splitlines()
         if "Exchange hashpartitioning" in ln or "Exchange rangepartitioning" in ln
     )
     assert n_exchange == 1, plan
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan
 
 
 def test_pipeline_joins_broadcast_small_side(spark):

@@ -11,7 +11,7 @@ import pytest
 
 from parquet_spark.operators.decode import read_encoded, read_manifest
 from parquet_spark.operators.encode import write_encoded
-from parquet_spark.operators.repartition import plan_salted_buckets, with_salted_bucket
+from parquet_spark.operators.repartition import salted_repartition
 from parquet_spark.sources.synth import sequences_df, write_sequences
 
 N_ROWS = 4000
@@ -68,14 +68,14 @@ def test_projection_reads_single_column(spark, seq_path, tmp_path):
 
 def test_salted_buckets_balance_and_determinism(spark, seq_path):
     df = spark.read.parquet(seq_path)
-    plan = plan_salted_buckets(df, 16)
-    total_buckets = plan[-1][1] + plan[-1][2]
-    assert total_buckets >= 16
-    b1 = with_salted_bucket(df, plan).groupBy("__bucket").count().orderBy("__bucket").collect()
-    b2 = with_salted_bucket(df, plan).groupBy("__bucket").count().orderBy("__bucket").collect()
+    b1 = salted_repartition(df, 16).groupBy("__bucket").count().orderBy("__bucket").collect()
+    b2 = salted_repartition(df, 16).groupBy("__bucket").count().orderBy("__bucket").collect()
     assert b1 == b2  # deterministic
+    # exactly 16 buckets, none far above the mean
+    assert [r["__bucket"] for r in b1] == list(range(16))
+    assert max(r["count"] for r in b1) <= 1.5 * N_ROWS / 16
     # hot source (zipf head ~27% of rows) must be spread over several buckets
-    hot = with_salted_bucket(df.filter("source = 'src0'"), plan).select("__bucket").distinct().count()
+    hot = salted_repartition(df.filter("source = 'src0'"), 16).select("__bucket").distinct().count()
     assert hot >= 3
 
 
@@ -367,12 +367,45 @@ def test_fingerprint_sensitive_to_content_change(spark, tmp_path):
     assert dataset_fingerprint(plan_facts(spark.read.parquet(str(spaced)))) != fp_space
 
 
-@pytest.mark.parametrize("inputs", ["filters_of_one_file_set", "ranges"])
+def _wide_projections(spark, path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    pq.write_table(pa.table({f"c{i}": pa.array(range(i, i + 100), pa.int64()) for i in range(30)}), path)
+    wide = spark.read.parquet(path)
+    first = wide.select(*[f"c{i}" for i in range(29)])
+    assert " more fields]" in first._jdf.queryExecution().optimizedPlan().toString()
+    return first, wide.select(*[f"c{i}" for i in range(28)], F.col("c29").alias("c28"))
+
+
+def test_derived_fingerprint_is_stable_across_builds(spark, tmp_path):
+    """The same input built twice keeps one fingerprint, whatever its
+    leaf: the plan JSON's expression ids (`exprId`, a Python UDF's
+    `resultId`) are stripped as the plan text's are."""
+    from parquet_spark.operators.encode import dataset_fingerprint
+    from parquet_spark.sources.arrow_scan import plan_facts
+
+    src = str(tmp_path / "wide.parquet")
+    _wide_projections(spark, src)
+    lookup = lambda: spark.createDataFrame([("src0", 1), ("src1", 2)], "source string, rank int")  # noqa: E731
+    for build in (
+        lambda: spark.read.parquet(src).selectExpr(*[f"c{i}" for i in range(28)], "c29 AS c28"),
+        lambda: sequences_df(spark, 100, seed=1, n_partitions=2),
+        lookup,
+        lambda: sequences_df(spark, 100, seed=1, n_partitions=2).join(lookup(), "source"),
+    ):
+        assert dataset_fingerprint(plan_facts(build())) == dataset_fingerprint(plan_facts(build()))
+
+
+@pytest.mark.parametrize("inputs", ["filters_of_one_file_set", "ranges", "projections_past_25_fields"])
 def test_derived_fingerprint_tells_plans_apart(spark, tmp_path, inputs):
-    """Two inputs with the same files and schema differ in their plan
-    text: a default resume=True write of the second encodes the second's
-    rows, where a fingerprint of files and schema alone resumed into the
-    first's buckets."""
+    """Two inputs with the same files and schema differ in their plan: a
+    default resume=True write of the second encodes the second's rows,
+    where a fingerprint of files and schema alone resumed into the
+    first's buckets. The plan text cuts lists past 25 fields, so two
+    projections of one 30-column file that differ only in their 29th
+    item print the same; the plan JSON tells them apart."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -386,13 +419,14 @@ def test_derived_fingerprint_tells_plans_apart(spark, tmp_path, inputs):
             spark.read.parquet(str(src)).where("a < 1000"), spark.read.parquet(str(src)).where("a >= 1000")
         ),
         "ranges": lambda: (spark.range(0, 100), spark.range(0, 5000)),
+        "projections_past_25_fields": lambda: _wide_projections(spark, str(tmp_path / "wide.parquet")),
     }[inputs]()
     path = str(tmp_path / "tbl")
     write_encoded(first, path, target_partitions=4, block_rows=256)
     s = write_encoded(second, path, target_partitions=4, block_rows=256)
     assert s["buckets_skipped"] == 0
     got = read_encoded(spark, path)
-    crc = F.sum(F.crc32(F.col(second.columns[0]).cast("string")))
+    crc = F.sum(F.crc32(F.col(second.columns[-1]).cast("string")))
     assert got.count() == second.count()
     assert got.agg(crc).collect() == second.agg(crc).collect()
 
@@ -575,3 +609,61 @@ def test_partition_plan_conf_keys_and_error_propagation(spark):
     assert unset["maxPartitionBytes"] == "<unset>"
     with pytest.raises(RuntimeError, match="conf backend down"):
         _partition_plan_conf(_Session(RuntimeError("conf backend down")))
+
+
+def test_salted_resume_without_salt_rule_reencodes(spark, tmp_path):
+    """A salted table whose snapshot lacks the hash rule (the per-source
+    weighted plan wrote such tables, and its bucket ids meant something
+    else) re-encodes into a fresh generation instead of keeping buckets;
+    under the recorded rule every bucket is kept."""
+    import json
+
+    from parquet_spark.operators.encode import read_snapshot
+
+    df = sequences_df(spark, 3000, seed=5, n_partitions=4, mean_tokens=16)
+    path = str(tmp_path / "legacy")
+    write_encoded(df, path, target_partitions=4, fingerprint="lg1", resume=False, bucket_mode="salted")
+    assert write_encoded(df, path, target_partitions=4, fingerprint="lg1", bucket_mode="salted")["buckets_skipped"] == 4
+    snap = read_snapshot(path)
+    assert snap["salt_rule"] == {"rule": "hash", "source_col": "source", "salt_key": "doc_id", "partitions": 4}
+    del snap["salt_rule"]
+    with open(os.path.join(path, "snapshot.json"), "w") as f:
+        json.dump(snap, f)
+
+    s = write_encoded(df, path, target_partitions=4, fingerprint="lg1", bucket_mode="salted")
+    assert s["buckets_skipped"] == 0
+    new = read_snapshot(path)
+    assert new["data_dir"] != snap["data_dir"] and new["salt_rule"]["partitions"] == 4
+    back = read_encoded(spark, path, columns=["doc_id"])
+    assert back.count() == 3000 and back.distinct().count() == 3000
+    assert read_encoded(spark, path, as_of=snap["sequence"]).count() == 3000
+
+
+def test_salted_write_runs_no_job_before_its_data_write(spark, tmp_path, monkeypatch):
+    """A salted write is one Spark job: the hash shuffle runs inside the
+    data write, with no weight aggregation or other job before it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from parquet_spark.operators.encode import read_snapshot
+
+    sc = spark.sparkContext
+    group = f"salted-write-{os.getpid()}"
+    jobs_at_write = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        jobs_at_write.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    lookup = spark.createDataFrame([(f"src{i}", i) for i in range(20)], "source string, rank int")
+    df = sequences_df(spark, 2000, seed=3, n_partitions=4, mean_tokens=16).join(lookup, "source")
+    path = str(tmp_path / "one_job")
+    sc.setJobGroup(group, "salted write")
+    try:
+        write_encoded(df, path, target_partitions=4, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert read_snapshot(path)["bucket_mode"] == "salted"
+    assert jobs_at_write[0] == 0
+    assert sc.statusTracker().getJobIdsForGroup(group)

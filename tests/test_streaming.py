@@ -25,7 +25,7 @@ def _crc(df):
 
 def test_stream_encode_roundtrip(spark, workdir, tmp_path):
     from parquet_spark.sources.synth import sequences_df
-    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.decode import read_encoded, read_manifest
     from parquet_spark.streaming.encode_stream import StreamingEncoder
 
     src = sequences_df(spark, 3000, seed=11, n_partitions=4)
@@ -41,11 +41,20 @@ def test_stream_encode_roundtrip(spark, workdir, tmp_path):
     assert out.count() == 3000
     assert _crc(out) == _crc(src)
 
-    # replay batch 1 (checkpoint recovery path): no duplication
+    def manifest_rows():
+        man = read_manifest(spark, workdir).where("column = 'doc_id'")
+        assert "batch_id" not in man.columns and "batch" in man.columns
+        return man.agg(F.sum("n_values")).collect()[0][0]
+
+    assert manifest_rows() == 3000
+
+    # replay batch 1 (checkpoint recovery path): no duplication, in the
+    # data and in the side-band manifest
     enc(batches[1], 1)
     out2 = read_encoded(spark, workdir)
     assert out2.count() == 3000
     assert _crc(out2) == _crc(src)
+    assert manifest_rows() == 3000
 
 
 def test_stream_with_real_writestream(spark, workdir, tmp_path):

@@ -1,6 +1,6 @@
 """Interleaved A/B of the shapes whose feed the fused-feed gate decides.
 
-Times nine ops in two checkouts of this repo, one Spark session per run:
+Times ten ops in two checkouts of this repo, one Spark session per run:
 
 - `write_encoded` of a 100k-row, 8-file nested token table,
 - `write_encoded` of a 4k-row, 4-file nested token table,
@@ -9,17 +9,19 @@ Times nine ops in two checkouts of this repo, one Spark session per run:
 - `write_encoded` of a filter over a 36k-row, 3-file table whose first
   file carries 8x the `n_tok` weight of the others at the same bytes,
 - `write_encoded` of a 200k-row, 4-partition `sequences_df` generator,
+- `write_encoded` of that generator joined to a 20-row source lookup, at
+  `target_partitions=8`: the join takes salted mode,
 - `roundtrip_delta_sorted` at sf0.1 (orders, 150k rows),
 - `roundtrip_auto_all` at sf0.01 (lineitem, 60k rows),
 - `roundtrip_fsst_text` at sf0.1 (documents, 5k wide rows in one
   590 KB row group).
 
-The filters and the generator take the Spark feed, where write_encoded
-picks partition or salted mode. The file sizes put the three filters on
-the three outcomes of the split-packing check that decided before the
-plan-only rule: a verdict of balanced (1.6 MB per partition), no verdict
-with a balanced row probe, and no verdict with a weight-skewed probe
-(partitions under 1 MB).
+The filters, the generator and the join take the Spark feed, where
+write_encoded picks partition or salted mode. The file sizes put the
+three filters on the three outcomes of the split-packing check that
+decided before the plan-only rule: a verdict of balanced (1.6 MB per
+partition), no verdict with a balanced row probe, and no verdict with a
+weight-skewed probe (partitions under 1 MB).
 
 Each run warms every op once, then times it `--reps` times and records
 the median, the feed or write mode it took and a CRC of its output
@@ -84,11 +86,14 @@ def run(repo: str, work: str, side: str, pair: int, reps: int) -> dict:
     ):
         sources[name] = spark.read.parquet(os.path.join(work, inp)).where("n_tok % 5 != 0")
     sources["write_gen_200k_4parts"] = sequences_df(spark, 200_000, seed=9, n_partitions=4, mean_tokens=32)
+    lookup = spark.createDataFrame([(f"src{i}", i) for i in range(20)], "source string, src_rank int")
+    sources["write_join_200k_salted"] = sources["write_gen_200k_4parts"].join(lookup, "source")
+    write_args = {"write_join_200k_salted": {"target_partitions": 8}}
     for name, src in sources.items():
 
         def write(src=src, name=name):
             out = os.path.join(work, f"out-{side}-{name}-{uuid.uuid4().hex[:8]}")
-            write_encoded(src, out, resume=False)
+            write_encoded(src, out, resume=False, **write_args.get(name, {}))
             return out
 
         def check(out, src=src):
