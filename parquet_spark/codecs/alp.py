@@ -66,10 +66,5 @@ def encode(vals: np.ndarray, e: int, int_codec: str, int_body: bytes, codec_ids:
     return struct.pack("<BB", e, codec_ids[int_codec]) + int_body
 
 
-def parse_header(buf) -> tuple[int, int]:
-    e, codec_id = struct.unpack_from("<BB", buf, 0)
-    return e, codec_id
-
-
 def reconstruct(ints: np.ndarray, e: int, dtype) -> np.ndarray:
     return (ints.astype(np.float64) / (10.0**e)).astype(dtype, copy=False)

@@ -18,7 +18,7 @@ Body layout:
     token stream: code byte (< 255) | 0xFF escape + literal byte
 
 Tokens work in uint16 space during encode: 0..255 literals, 256+k = merge
-code k, 0xFFFE tombstone (deferred compaction).
+code k, 0xFFFE tombstone (deferred compaction), 0xFFFF segment separator.
 
 Table construction keeps dense pair counts (key a*512+b) across its merge
 steps: each merge subtracts and re-adds only the pairs that overlap its
@@ -26,10 +26,24 @@ matches, and the counts are rebuilt only after a compaction. Pairs whose
 joined symbol would exceed 8 bytes are pushed below zero as their codes
 appear, so `argmax` picks the same most frequent pair, with the same
 smallest-(a, b) tie-break, as a full recount each step would. Tables and
-encoded bytes are unchanged by this (tests/test_fsst_golden.py). The
-encoder's replay over the whole buffer is left as is: per-token position
-lists, a uint32-view pair search and a single-compare pass all measured
-level or slower.
+encoded bytes are unchanged by this (tests/test_fsst_golden.py).
+
+The encoder replays the table's merge script once per distinct segment
+of the buffer, not over the whole buffer. A byte boundary x|y is a cut
+when the bigram xy lies inside no symbol the replay makes. No token the
+replay creates spans a cut, no merged pair straddles one (its joined
+symbol would contain xy), and the `a == b` chain rule and tombstones stay
+inside their segment, so the whole-buffer replay is the concatenation of
+the per-segment replays. The one rule that reads whole-buffer counts,
+compaction after a merge that replaced more than 1/32 of the tokens, is
+evaluated with each segment's multiplicity as its weight, so compactions
+happen at the same steps. The distinct segments (Arrow dictionary_encode
+over a zero-copy binary view, one chunk per 64 KB so no temporary grows
+with the buffer) are replayed joined by separators, encoded once each,
+and gathered back in order (Arrow take). When they are not shorter than
+half the buffer (few cuts: sequential ids, 2-letter alphabets), the same
+loop runs over the whole buffer with unit weights. Either way the bytes
+are those of the whole-buffer replay (tests/test_fsst_golden.py).
 """
 
 from __future__ import annotations
@@ -37,21 +51,15 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 ESCAPE = 255
 TOMB = np.uint16(0xFFFE)
+SEP = np.uint16(0xFFFF)  # ends each distinct segment in the replay array
 MAX_SYMBOL_LEN = 8
 _CODES = 512  # token space of build_table: 256 literals + up to 254 merges
 _OVER_LONG = 1 << 40  # subtracted from pair counts that may never merge
-
-
-def _merge_pass(tok: np.ndarray, a: int, b: int, code: int) -> tuple[np.ndarray, int]:
-    """Replace non-overlapping left-greedy occurrences of (a,b) with code.
-    Returns (tok with second elements tombstoned, replacements made)."""
-    idx = _match_positions(tok, a, b)
-    tok[idx] = code
-    tok[idx + 1] = TOMB
-    return tok, int(idx.size)
+_CHUNK = 1 << 16  # bytes per pass of the cut search
 
 
 def _match_positions(tok: np.ndarray, a: int, b: int) -> np.ndarray:
@@ -205,62 +213,127 @@ def _table_sample(data: np.ndarray, total: int, chunk: int = 4096) -> np.ndarray
     return np.concatenate([data[s : s + chunk] for s in starts])
 
 
+def _replay_script(symbols: list[bytes]) -> list[tuple[int, int, bytes]]:
+    """The merges the replay makes, in order, as (a, b, symbol); merge k
+    gets work code 256 + k. A symbol with no split into known expansions
+    is skipped and never appears in the encoded stream."""
+    script: list[tuple[int, int, bytes]] = []
+    work_code_of: dict[bytes, int] = {}
+    for s in symbols:
+        # pairs were built left+right, so s = exp_a + exp_b for some known exp_a
+        for cut in range(1, len(s)):
+            ea, eb = s[:cut], s[cut:]
+            a = work_code_of.get(ea, ea[0] if len(ea) == 1 else None)
+            b = work_code_of.get(eb, eb[0] if len(eb) == 1 else None)
+            if a is not None and b is not None:
+                work_code_of[s] = 256 + len(script)
+                script.append((a, b, s))
+                break
+    return script
+
+
+def _segments(data: np.ndarray, script: list[tuple[int, int, bytes]]) -> pa.ChunkedArray:
+    """The segments between cuts, which no replayed token spans, as a
+    zero-copy binary view of `data`: one chunk per 64 KB of it, so no
+    temporary grows with the buffer."""
+    # a bigram x|y is keyed by the little-endian uint16 read at x
+    is_cut = np.ones(1 << 16, dtype=bool)
+    is_cut[[x | y << 8 for _a, _b, s in script for x, y in zip(s, s[1:])]] = False
+    n, buf = len(data), pa.py_buffer(data)
+    chunks, start = [], 0
+    for lo in range(0, n - 1, _CHUNK):
+        m = min(_CHUNK, n - 1 - lo)  # boundaries after bytes lo .. lo+m-1
+        bigrams = np.ndarray((m,), "<u2", data, lo, (1,))  # overlapping view
+        cuts = np.flatnonzero(is_cut.take(bigrams))
+        if cuts.size:
+            off = np.empty(cuts.size + 1, np.int32)
+            off[0] = start
+            np.add(cuts, lo + 1, out=off[1:], casting="unsafe")
+            chunks.append(pa.Array.from_buffers(pa.binary(), cuts.size, [None, pa.py_buffer(off), buf]))
+            start = int(off[-1])
+    off = np.array([start, n], np.int32)
+    chunks.append(pa.Array.from_buffers(pa.binary(), 1, [None, pa.py_buffer(off), buf]))
+    return pa.chunked_array(chunks, pa.binary())
+
+
+def _replay(tok: np.ndarray, weight: np.ndarray | None, n: int, script: list[tuple[int, int, bytes]]) -> np.ndarray:
+    """Run the merge script over `tok`; returns it compacted. `weight`
+    holds each position's multiplicity in the whole buffer of `n` bytes
+    (None: `tok` is the whole buffer), so the compaction rule sees
+    whole-buffer counts."""
+    pending = 0  # whole-buffer tombstones since the last compaction
+    for code, (a, b, _s) in enumerate(script, 256):
+        idx = _match_positions(tok, a, b)
+        tok[idx] = code
+        tok[idx + 1] = TOMB
+        n_rep = idx.size if weight is None else int(weight[idx].sum())
+        pending += n_rep
+        if n_rep > n // 32:  # heavy merge: compact so chains keep merging
+            keep = tok != TOMB
+            tok = tok[keep]
+            weight = None if weight is None else weight[keep]
+            n -= pending
+            pending = 0
+    return _compact(tok)
+
+
 def encode(data: np.ndarray, symbols: list[bytes] | None = None, sample_bytes: int = 1 << 16) -> bytes:
     """Encode a uint8 buffer. Builds the table on a strided sample unless
-    one is supplied. Fully vectorized (numpy passes over the whole buffer)."""
+    one is supplied. Fully vectorized (numpy passes over the distinct
+    segments, or over the whole buffer when few bytes repeat)."""
     data = np.ascontiguousarray(data, dtype=np.uint8)
     if symbols is None:
         symbols = build_table(_table_sample(data, sample_bytes))
     table = SymbolTable(symbols)
+    script = _replay_script(symbols)
+    n = len(data)
 
-    # replay the merge script over the full buffer
-    tok = data.astype(np.uint16)
-    exp_of_work: dict[int, bytes] = {}
-    work_code_of: dict[bytes, int] = {}
-    next_code = 256
-    for s in symbols:
-        if len(s) < 2:
-            continue
-        # find constituents: longest split into known expansions (pairs were
-        # built left+right, so s = exp_a + exp_b for some known exp_a)
-        a = b = None
-        for cut in range(1, len(s)):
-            ea, eb = s[:cut], s[cut:]
-            ca = work_code_of.get(ea, ea[0] if len(ea) == 1 else None)
-            cb = work_code_of.get(eb, eb[0] if len(eb) == 1 else None)
-            if ca is not None and cb is not None:
-                a, b = ca, cb
-                break
-        if a is None:
-            continue
-        tok, n_rep = _merge_pass(tok, a, b, next_code)
-        exp_of_work[next_code] = s
-        work_code_of[s] = next_code
-        next_code += 1
-        if n_rep > len(tok) // 32:
-            tok = _compact(tok)
-    tok = _compact(tok)
+    segs = None  # dictionary-encoded segments, when replaying them pays
+    if 2 <= n < 1 << 30:  # < 2**30: the gathered output fits int32 offsets
+        segs = _segments(data, script).dictionary_encode()
+        dist = segs.chunk(0).dictionary
+        d_off = np.frombuffer(dist.buffers()[1], np.int32, len(dist) + 1)
+        if 2 * (int(d_off[-1]) + len(dist)) >= n:
+            segs = None
+    if segs is None:
+        tok = _replay(data.astype(np.uint16), None, n, script)
+    else:
+        mult = np.zeros(len(dist), np.int64)
+        for chunk in segs.chunks:
+            mult += np.bincount(np.frombuffer(chunk.indices.buffers()[1], np.int32, len(chunk)), minlength=len(dist))
+        dist_bytes = np.frombuffer(dist.buffers()[2], np.uint8, int(d_off[-1]))
+        tok = np.insert(dist_bytes.astype(np.uint16), d_off[1:], SEP)
+        tok = _replay(tok, np.repeat(mult, np.diff(d_off) + 1), n, script)
+        is_sep = tok == SEP
+        seg_end = np.flatnonzero(is_sep) - np.arange(len(mult))  # token ends
+        tok = tok[~is_sep]
 
-    # map work tokens -> serialized bytes
-    lut = np.full(0x10000, -1, dtype=np.int32)  # -1 => escape literal
+    # map work tokens -> code bytes; a literal outside the table maps to
+    # ESCAPE, and its byte is inserted after it
+    lut = np.full(0x10000, ESCAPE, dtype=np.uint8)
     for s, code in table.code_of.items():
         if len(s) == 1:
             lut[s[0]] = code
-    for wcode, s in exp_of_work.items():
+    for wcode, (_a, _b, s) in enumerate(script, 256):
         lut[wcode] = table.code_of[s]
-    mapped = lut[tok]
-    is_esc = mapped < 0
-    out_lens = np.where(is_esc, 2, 1).astype(np.int64)
-    starts = np.zeros(len(tok), dtype=np.int64)
-    np.cumsum(out_lens[:-1], out=starts[1:])
-    total = int(starts[-1] + out_lens[-1]) if len(tok) else 0
-    stream = np.empty(total, dtype=np.uint8)
-    stream[starts[~is_esc]] = mapped[~is_esc].astype(np.uint8)
-    esc_starts = starts[is_esc]
-    stream[esc_starts] = ESCAPE
-    stream[esc_starts + 1] = tok[is_esc].astype(np.uint8)  # escaped are literals <256
+    stream = lut[tok]
+    esc = np.flatnonzero(stream == ESCAPE)
+    stream = np.insert(stream, esc + 1, tok[esc].astype(np.uint8))
+    total = len(stream)
 
-    return table.serialize() + struct.pack("<I", total) + stream.tobytes()
+    parts = [stream]
+    if segs is not None:
+        # each distinct segment's code bytes, gathered in buffer order
+        enc_off = np.concatenate(([0], seg_end))
+        enc_off = (enc_off + np.searchsorted(esc, enc_off)).astype(np.int32)
+        enc = pa.Array.from_buffers(pa.binary(), len(mult), [None, pa.py_buffer(enc_off), pa.py_buffer(stream)])
+        parts = []
+        for chunk in segs.chunks:
+            got = enc.take(chunk.indices)
+            end = np.frombuffer(got.buffers()[1], np.int32, len(got) + 1)[-1]
+            parts.append(memoryview(got.buffers()[2])[:end])
+        total = sum(len(p) for p in parts)
+    return b"".join((table.serialize(), struct.pack("<I", total), *parts))
 
 
 def decode(buf: bytes | memoryview, out_bytes: int) -> np.ndarray:

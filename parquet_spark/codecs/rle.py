@@ -110,31 +110,41 @@ def encode(vals: np.ndarray, width: int) -> bytes:
 def decode(buf: bytes | memoryview, n: int, width: int) -> tuple[np.ndarray, int]:
     """Decode ``n`` values; returns (uint64 array, bytes consumed incl. the
     4-byte length prefix). Reads both this encoder's and the reference
-    encoder's output (rle.go:159-230)."""
+    encoder's output (rle.go:159-230). Every bit-packed region is a whole
+    number of bytes, so their byte slices joined form one packed stream:
+    one unpack() per stream, then the RLE runs are filled in around it."""
     mv = memoryview(buf)
     (length,) = struct.unpack_from("<i", mv, 0)
     payload = bytes(mv[4 : 4 + length])
-    pos = 0
-    parts: list[np.ndarray] = []
-    got = 0
+    vbytes = (width + 7) // 8
+    pos = got = 0
+    counts: list[int] = []
+    run_vals: list[int] = []  # an RLE run's value; 0 for a bit-packed region
+    is_bp: list[bool] = []
+    packed: list[bytes] = []
     while pos < len(payload) and got < n:
         header, pos = leb128_decode(payload, pos)
         if header & 1:
-            groups = header >> 1
-            nbytes = bitpack.packed_size(groups * 8, width)
-            vals = bitpack.unpack(payload[pos : pos + nbytes], groups * 8, width)
+            count = (header >> 1) * 8
+            nbytes = bitpack.packed_size(count, width)
+            packed.append(payload[pos : pos + nbytes])
+            run_vals.append(0)
             pos += nbytes
         else:
             count = header >> 1
-            vbytes = (width + 7) // 8
-            value = int.from_bytes(payload[pos : pos + vbytes], "little")
+            run_vals.append(int.from_bytes(payload[pos : pos + vbytes], "little"))
             pos += vbytes
-            vals = np.full(count, value, dtype=np.uint64)
-        parts.append(vals)
-        got += len(vals)
+        is_bp.append(bool(header & 1))
+        counts.append(count)
+        got += count
     if got < n:
         raise ValueError(f"RLE stream exhausted: wanted {n} values, got {got}")
-    if not parts:
-        return np.zeros(0, dtype=np.uint64), length + 4
-    out = parts[0] if len(parts) == 1 else np.concatenate(parts)
-    return out[:n], length + 4
+    n_bp = sum(c for c, bp in zip(counts, is_bp) if bp)
+    # a region cut short by the end of the payload reads as zeros
+    stream = b"".join(packed).ljust(bitpack.packed_size(n_bp, width), b"\0")
+    vals = bitpack.unpack(stream, n_bp, width)
+    if n_bp < got:
+        runs = np.repeat(np.array(run_vals, dtype=np.uint64), counts)
+        runs[np.repeat(is_bp, counts)] = vals
+        vals = runs
+    return vals[:n], length + 4

@@ -260,16 +260,6 @@ def _bigram_hashes(words, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return hb_all[mask], np.maximum(counts - 1, 0)
 
 
-def _minhash_sig(shingle_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n_shingles,) uint64 -> (MINHASH_N,) uint64 signature, fully
-    vectorized: one (n_shingles × n_hashes) broadcastted permutation."""
-    if len(shingle_hashes) == 0:
-        return np.full(len(a), np.uint64(_MERSENNE))
-    x = shingle_hashes[:, None] % np.uint64(_MERSENNE)
-    perm = (x * a[None, :] + b[None, :]) % np.uint64(_MERSENNE)
-    return perm.min(axis=0)
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """id → banded MinHash signature rows (id, band, bucket). Signature
     computation is a vectorized pandas UDF (Arrow batches); band bucketing

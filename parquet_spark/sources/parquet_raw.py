@@ -444,17 +444,6 @@ def _write_statistics(w: TCWriter, fid: int, mm, null_count: int, phys: int,
     w.struct_end()
 
 
-def _def_levels(arr: pa.Array) -> bytes:
-    """RLE hybrid stream (4-byte length prefix included — rle.encode emits
-    exactly parquet's definition-level framing) at bit width 1."""
-    valid = np.zeros(len(arr), dtype=np.uint64)
-    if arr.null_count == 0:
-        valid[:] = 1
-    else:
-        valid[~np.asarray(arr.is_null())] = 1
-    return rle.encode(valid, 1)
-
-
 def _list_levels(arr: pa.ListArray, outer_optional: bool, elem_optional: bool):
     """Dremel shredding of a one-level list column (the write side of
     /root/reference/fields.go:232-271 and dremel/write_repeated.go:104-127,

@@ -128,6 +128,15 @@ GOLDEN = {
 }
 
 
+def _merge_pass(tok, a, b, code):
+    """Replace the left-greedy (a, b) matches with code, tombstoning each
+    match's second element. Returns (tok, replacements made)."""
+    idx = fsst._match_positions(tok, a, b)
+    tok[idx] = code
+    tok[idx + 1] = fsst.TOMB
+    return tok, int(idx.size)
+
+
 def _build_table_recount(sample, max_merges=160, min_count=4):
     """Reference: `build_table` recounting every pair with np.unique at
     every merge step, as it did before it kept incremental counts."""
@@ -153,7 +162,7 @@ def _build_table_recount(sample, max_merges=160, min_count=4):
         expansions[next_code] = sym
         merges.append(sym)
         sym_len[next_code] = len(sym)
-        tok, n_rep = fsst._merge_pass(tok, a, b, next_code)
+        tok, n_rep = _merge_pass(tok, a, b, next_code)
         dirty = True
         next_code += 1
         if n_rep > len(tok) // 32:
@@ -198,3 +207,160 @@ def test_fsst_tables_and_bytes_frozen(name):
     data = _u8(CORPORA[name])
     assert fsst.decode(fsst.encode(data), len(data)).tobytes() == CORPORA[name]
     assert _digest(name) == GOLDEN[name]
+
+
+def _encode_whole_buffer(data, symbols):
+    """Reference: `encode`'s replay as it was before it replayed distinct
+    segments, one merge pass over the whole buffer per script step."""
+    table = fsst.SymbolTable(symbols)
+    tok = data.astype(np.uint16)
+    exp_of_work, work_code_of, next_code = {}, {}, 256
+    for s in symbols:
+        if len(s) < 2:
+            continue
+        a = b = None
+        for cut in range(1, len(s)):
+            ea, eb = s[:cut], s[cut:]
+            ca = work_code_of.get(ea, ea[0] if len(ea) == 1 else None)
+            cb = work_code_of.get(eb, eb[0] if len(eb) == 1 else None)
+            if ca is not None and cb is not None:
+                a, b = ca, cb
+                break
+        if a is None:
+            continue
+        tok, n_rep = _merge_pass(tok, a, b, next_code)
+        exp_of_work[next_code] = s
+        work_code_of[s] = next_code
+        next_code += 1
+        if n_rep > len(tok) // 32:
+            tok = fsst._compact(tok)
+    tok = fsst._compact(tok)
+    lut = np.full(0x10000, -1, dtype=np.int32)  # -1 => escape literal
+    for s, code in table.code_of.items():
+        if len(s) == 1:
+            lut[s[0]] = code
+    for wcode, s in exp_of_work.items():
+        lut[wcode] = table.code_of[s]
+    mapped = lut[tok]
+    is_esc = mapped < 0
+    out_lens = np.where(is_esc, 2, 1).astype(np.int64)
+    starts = np.zeros(len(tok), dtype=np.int64)
+    np.cumsum(out_lens[:-1], out=starts[1:])
+    total = int(starts[-1] + out_lens[-1]) if len(tok) else 0
+    stream = np.empty(total, dtype=np.uint8)
+    stream[starts[~is_esc]] = mapped[~is_esc].astype(np.uint8)
+    stream[starts[is_esc]] = fsst.ESCAPE
+    stream[starts[is_esc] + 1] = tok[is_esc].astype(np.uint8)
+    return table.serialize() + total.to_bytes(4, "little") + stream.tobytes()
+
+
+def _n_segments(data, symbols):
+    return len(fsst._segments(data, fsst._replay_script(symbols)))
+
+
+def _check(data, symbols=None):
+    data = _u8(data) if isinstance(data, bytes) else data
+    symbols = fsst.build_table(fsst._table_sample(data, 1 << 16)) if symbols is None else symbols
+    buf = fsst.encode(data, symbols)
+    assert buf == _encode_whole_buffer(data, symbols)
+    assert fsst.decode(buf, len(data)).tobytes() == data.tobytes()
+    return symbols
+
+
+def test_replay_one_segment():
+    """No cut: every bigram of a 2-letter alphabet lies in a symbol."""
+    data = CORPORA["alphabet_2"]
+    syms = _check(data)
+    assert _n_segments(_u8(data), syms) == 1
+
+
+def test_replay_every_boundary_a_cut():
+    """Random bytes under a table of bytes they never hold: all cuts."""
+    rng = np.random.default_rng(1)
+    data = rng.integers(0, 128, 20000, dtype=np.uint8)
+    syms = [b"\xf0\xf1", b"\xf0\xf1\xf2", b"\xf3\xf3"] + [bytes([i]) for i in range(40)]
+    _check(data, syms)
+    assert _n_segments(data, syms) == len(data)
+    # random bytes under their own table: nearly every boundary is a cut
+    syms = _check(data)
+    assert _n_segments(data, syms) > 0.9 * len(data)
+
+
+def test_replay_skips_unsplittable_symbols():
+    """A prebuilt table whose symbols have no split into known ones: the
+    replay skips them, and their bigrams do not join segments."""
+    data = (b"xyz-" * 3000) + b"ab" * 500
+    syms = [b"xyz", b"yz-", b"ab", b"abab", b"z-x"]
+    assert [s for _a, _b, s in fsst._replay_script(syms)] == [b"ab", b"abab"]
+    _check(data, syms)
+    assert _n_segments(_u8(data), syms) == 4 * 3000 + 1
+
+
+def test_replay_run_chains_next_to_cuts():
+    """`a == b` chains of odd and even length, cut off on both sides."""
+    rng = np.random.default_rng(2)
+    lens = rng.integers(1, 14, 3000)
+    seps = rng.integers(0, 50, 3000).astype(np.uint8) + 150
+    data = b"".join(b"a" * int(k) + bytes([s]) for k, s in zip(lens, seps))
+    for syms in (None, [b"aa", b"aaaa", b"aaaaaaaa", b"aaa"]):
+        syms = _check(data, syms)
+        assert fsst._replay_script(syms)[0][:2] == (97, 97)
+        assert 1000 < _n_segments(_u8(data), syms) < len(data) // 2
+
+
+def _unit_weight_encode(monkeypatch, data, syms):
+    """`encode` with the segments' multiplicities ignored: the compaction
+    rule then reads the distinct segments' own counts."""
+    real = fsst._replay
+
+    def unit(tok, weight, n, script):
+        return real(tok, None if weight is None else np.ones_like(weight), len(tok), script)
+
+    monkeypatch.setattr(fsst, "_replay", unit)
+    try:
+        return fsst.encode(_u8(data), syms)
+    finally:
+        monkeypatch.setattr(fsst, "_replay", real)
+
+
+def test_replay_weighted_compaction(monkeypatch):
+    """Corpora where the whole buffer compacts at a step where the distinct
+    segments alone would not, and the other way round. A tombstone left
+    in place keeps `xc` from merging, so the step shows in the bytes."""
+    rng = np.random.default_rng(3)
+    syms = [b"ab", b"abc"] + [bytes([i]) for i in range(97, 100)]
+    noise = (rng.integers(0, 60, 20000) + 160).astype(np.uint8)
+    # 1000 repeats of one segment fire the rule, one distinct copy does not
+    often = b"".join(bytes([x]) + (b"abc" if i % 20 == 0 else b"") for i, x in enumerate(noise))
+    # one "abc" among 4 repeated segments: the distinct array is tiny
+    once = b"abc" + bytes((rng.integers(0, 4, 5000) + 160).astype(np.uint8))
+    for data in (often, once):
+        _check(data, syms)
+        assert _unit_weight_encode(monkeypatch, data, syms) != _encode_whole_buffer(_u8(data), syms)
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_replay_matches_whole_buffer(seed):
+    """Random corpora of each kind, tables built or prebuilt from a third
+    of the data: the segment replay writes the whole-buffer bytes."""
+    rng = np.random.default_rng(100 + seed)
+    words = [bytes(rng.integers(97, 123, rng.integers(1, 9))) for _ in range(300)]
+    for kind in range(6):
+        n = int(rng.integers(0, 40000))
+        if kind == 0:
+            data = b" ".join(words[i] for i in rng.zipf(1.3, n // 5 + 1) % 300)[:n]
+        elif kind == 1:
+            data = bytes(97 + rng.integers(0, int(rng.integers(1, 6)), n).astype(np.uint8))
+        elif kind == 2:
+            data = rng.integers(0, 256, n).astype(np.uint8).tobytes()
+        elif kind == 3:
+            first = int(rng.integers(0, 10**6))
+            data = b"".join(b"id-%d," % i for i in range(first, first + n // 4 + 1))[:n]
+        elif kind == 4:
+            k = n // 6 + 1
+            data = bytes(np.repeat(rng.integers(97, 100, k), rng.integers(1, 12, k)).astype(np.uint8))[:n]
+        else:
+            data = b"".join(words[i] + bytes([int(rng.integers(33, 48))]) for i in rng.integers(0, 40, n // 4 + 1))[:n]
+        arr = _u8(data)
+        _check(arr)
+        _check(arr, fsst.build_table(arr[: len(arr) // 3].copy(), min_count=int(rng.integers(1, 5))))

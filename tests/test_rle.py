@@ -107,3 +107,56 @@ def test_empty():
     buf = rle.encode(np.array([], dtype=np.uint64), 3)
     out, consumed = rle.decode(buf, 0, 3)
     assert len(out) == 0 and consumed == 4
+
+
+def _decode_per_region(buf, n, width):
+    """Reference: the decoder as it was before it joined the bit-packed
+    regions, one unpack() per region."""
+    from parquet_spark.codecs import bitpack
+    from parquet_spark.util import leb128_decode
+
+    length = int.from_bytes(bytes(buf[:4]), "little", signed=True)
+    payload = bytes(buf[4 : 4 + length])
+    pos, got, parts = 0, 0, []
+    while pos < len(payload) and got < n:
+        header, pos = leb128_decode(payload, pos)
+        if header & 1:
+            nbytes = bitpack.packed_size((header >> 1) * 8, width)
+            vals = bitpack.unpack(payload[pos : pos + nbytes], (header >> 1) * 8, width)
+            pos += nbytes
+        else:
+            vbytes = (width + 7) // 8
+            vals = np.full(header >> 1, int.from_bytes(payload[pos : pos + vbytes], "little"), dtype=np.uint64)
+            pos += vbytes
+        parts.append(vals)
+        got += len(vals)
+    if got < n:
+        raise ValueError("exhausted")
+    out = np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint64)
+    return out[:n], length + 4
+
+
+def test_decode_matches_per_region_decoder():
+    """500 random streams of both encoders, mixing runs and bit-packed
+    regions at every width, decoded whole and as a prefix: the same
+    values, dtype and bytes consumed as one unpack() per region."""
+    rng = np.random.default_rng(11)
+    for case in range(500):
+        width = int(rng.integers(0, 5)) if case % 2 else int(rng.integers(0, 33))
+        hi = (1 << width) - 1
+        chunks = []
+        for _ in range(int(rng.integers(0, 40))):
+            k = int(rng.integers(1, 60))
+            if rng.random() < 0.5:
+                chunks.append(np.full(k, int(rng.integers(0, hi + 1)), dtype=np.uint64))
+            else:
+                chunks.append(rng.integers(0, hi + 1, k, dtype=np.uint64))
+        vals = np.concatenate(chunks) if chunks else np.zeros(0, dtype=np.uint64)
+        buf = rle_ref.encode_ref(vals, width) if case % 2 else rle.encode(vals, width)
+        for n in (len(vals), int(rng.integers(0, len(vals) + 1))):
+            got, consumed = rle.decode(buf, n, width)
+            want, want_consumed = _decode_per_region(memoryview(buf), n, width)
+            assert got.dtype == want.dtype == np.uint64
+            np.testing.assert_array_equal(got, want)
+            assert consumed == want_consumed == len(buf)
+        np.testing.assert_array_equal(rle.decode(buf, len(vals), width)[0], vals)

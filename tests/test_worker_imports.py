@@ -229,11 +229,12 @@ def test_freeze_once_per_import_state(tmp_path, monkeypatch, fresh_heap):
     frozen = gc.get_freeze_count()
     assert frozen > 0 and len(fresh_heap) == 1
 
-    # no new module: the second call does not re-freeze (a re-freeze
-    # would also move these new containers into the frozen count)
+    # no new module: the second call does not re-freeze. Counted through
+    # the gc.freeze spy: the freeze count itself may fall in between, when
+    # another thread of this process frees a frozen object
     keep = [[i] for i in range(1000)]
     freeze_worker_heap()
-    assert gc.get_freeze_count() == frozen and len(fresh_heap) == 1
+    assert len(fresh_heap) == 1
 
     # a new import: the next call freezes again
     (tmp_path / "wi_freeze_mod.py").write_text("VALUE = 1\n")
