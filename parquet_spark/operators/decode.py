@@ -28,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
 
-from parquet_spark.operators.encode import read_snapshot
+from parquet_spark.operators.encode import MANIFEST_DDL, _blocks_layout, read_snapshot
 
 
 _BATCH_RE = re.compile(r"batch=(\d+)")
@@ -115,17 +115,13 @@ def decode_table(
     verify: bool = False,
 ) -> DataFrame:
     """Blocks DataFrame → original rows. `schema` is the original table
-    schema (from snapshot.json); projection via `columns`. `verify=True`
+    schema (from snapshot.json); projection via `columns`. `blocks_df`
+    carries every projected payload column: `blocks_relation` types it
+    from the snapshot, so a column older blocks lack reads as null and
+    decodes as nulls. `verify=True`
     checks each payload's crc32 against the block's recorded checksum
     before decoding (integrity gate for untrusted storage)."""
-    from pyspark.sql import functions as F
-
     columns, out_schema = _projected(schema, columns)
-    # schema-evolved tables: a column the snapshot knows but NO retained
-    # block carries (or that older batches lack) decodes as nulls
-    for c in columns:
-        if c not in blocks_df.columns:
-            blocks_df = blocks_df.withColumn(c, F.lit(None).cast("binary"))
     proj = blocks_df.select(*((["meta"] if verify else []) + ["n_rows"] + list(columns)))
     return proj.mapInArrow(_decode_fn(list(columns), out_schema, verify), out_schema)
 
@@ -226,6 +222,30 @@ def list_blocks_files(data_dir: str, max_batch: int | None = None) -> tuple:
         if max_batch is None or m is None or int(m.group(1)) <= int(max_batch):
             files.append(p)
     return fs, files
+
+
+def blocks_ddl(snap: dict) -> str:
+    """The blocks relation DDL of the generation `snap` describes, built
+    from its schema, columns and bloom_cols by `encode._blocks_layout`,
+    the rule the writers typed the files with: no file is opened to learn
+    it. A column older files lack reads as null, so an evolved payload
+    decodes as nulls and a missing stats bound keeps the block."""
+    return _blocks_layout(StructType.fromJson(snap["schema"]), snap["columns"], snap.get("bloom_cols") or [])[1]
+
+
+def blocks_relation(spark: SparkSession, path: str, snap: dict, max_batch: int | None = None) -> DataFrame:
+    """The blocks relation of the generation `snap` names under `path`,
+    typed by `blocks_ddl` (no schema-inference job). With `max_batch`, a
+    batch-layout table keeps the `batch=N` dirs with N <= max_batch
+    (`as_of`); the `batch` partition column is then dropped."""
+    from pyspark.sql import functions as F
+
+    blocks = spark.read.schema(blocks_ddl(snap)).parquet(os.path.join(path, snap.get("data_dir", "data")))
+    if "batch" not in blocks.columns or "batch" in snap["columns"]:
+        return blocks
+    if max_batch is not None:
+        blocks = blocks.where(F.col("batch") <= int(max_batch))
+    return blocks.drop("batch")
 
 
 def read_blocks(pf, rg: int, lo: int, hi: int, want: list[str], preds: list[tuple] = ()):
@@ -498,7 +518,10 @@ def read_encoded(
     """Open an encoded table (data + snapshot) and return the decoded
     DataFrame — the engine's `spark.read.parquet` analogue. It is the
     fused read (Range → MapInArrow, pyarrow reading the blocks inside the
-    decode task) unless `_maybe_decode_blocks_arrow` keeps the Spark scan.
+    decode task) unless `_maybe_decode_blocks_arrow` keeps the Spark scan,
+    which reads `blocks_relation`. Either path takes the table's schema
+    from the snapshot and runs no schema-inference job; a column that
+    older blocks lack decodes as nulls.
 
     `where=(column, op, value)`, or a list of such triples ANDed, with op
     in {>, >=, <, <=, =, !=, in} (value is an iterable for `in`), prunes
@@ -514,8 +537,6 @@ def read_encoded(
     (see operators.encode.list_snapshots / maintain.expire_snapshots):
     the read plan resolves that snapshot's generation dirs, so the data
     it sees is exactly the committed state at that sequence."""
-    from pyspark.sql import functions as F
-
     snap = read_snapshot(path, as_of=as_of)
     if snap is None:
         # a crash between compact_table's two swap renames parks the
@@ -539,10 +560,7 @@ def read_encoded(
     max_batch = snap.get("max_batch") if as_of is not None else None
     out = _maybe_decode_blocks_arrow(spark, data_dir, cols, read_schema, verify, max_batch, preds)
     if out is None:
-        # mergeSchema unions batch dirs written before a column was added
-        blocks_df = spark.read.option("mergeSchema", "true").parquet(data_dir)
-        if max_batch is not None and "batch" in blocks_df.columns:
-            blocks_df = blocks_df.where(F.col("batch") <= int(max_batch))
+        blocks_df = blocks_relation(spark, path, snap, max_batch)
         for col, op, value in preds:
             if f"_min_{col}" in blocks_df.columns:
                 blocks_df = blocks_df.where(_block_keep_condition(col, op, value))
@@ -558,11 +576,8 @@ def read_manifest(spark: SparkSession, path: str, as_of: int | None = None) -> D
     snap = read_snapshot(path, as_of=as_of) or {}
     man_dir = os.path.join(path, snap.get("manifest_dir", "manifest"))
     try:
-        return spark.read.parquet(man_dir)
+        return spark.read.schema(MANIFEST_DDL).parquet(man_dir)
     except AnalysisException:
-        # an empty table writes no manifest parts (missing dir / no files
-        # to infer a schema from); surface an empty relation with the
-        # manifest schema instead. Real IO/corruption errors still raise.
-        from parquet_spark.operators.encode import MANIFEST_DDL
-
+        # a table without a manifest dir (none committed yet) reads as an
+        # empty manifest; real IO/corruption errors still raise
         return spark.createDataFrame([], MANIFEST_DDL)

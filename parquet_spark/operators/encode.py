@@ -779,9 +779,9 @@ def write_encoded(
     if resuming:
         # completed buckets come from the DATA dir (the source of truth —
         # a crash between the data and manifest writes must not cause a
-        # re-encode and duplicate rows); the scan is meta-only, so Catalyst
-        # prunes every payload column out of the parquet read
-        done = spark.read.parquet(data_dir).select("bucket").distinct()
+        # re-encode and duplicate rows); the explicit-schema scan reads the
+        # bucket column alone and infers no schema
+        done = spark.read.schema("bucket int").parquet(data_dir).distinct()
         if chosen == "arrow":
             # split list is driver-side: filter completed bucket ids out
             # directly (bounded by the split count) instead of anti-joining

@@ -21,13 +21,14 @@ written by older engine versions.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
 from pyspark.sql import SparkSession
 
 from parquet_spark import tablefs
-from parquet_spark.operators.decode import read_encoded
+from parquet_spark.operators.decode import blocks_relation, read_encoded
 from parquet_spark.operators.encode import (
     DEFAULT_BLOCK_ROWS,
     read_snapshot,
@@ -44,7 +45,7 @@ def fragmentation(spark: SparkSession, path: str, block_rows: int | None = None)
         raise FileNotFoundError(f"no snapshot.json under {path}")
     target = block_rows or snap.get("block_rows", DEFAULT_BLOCK_ROWS)
     agg = (
-        spark.read.parquet(os.path.join(path, snap.get("data_dir", "data")))
+        blocks_relation(spark, path, snap)
         .agg(F.count("*").alias("n_blocks"), F.sum("n_rows").alias("n_rows"))
         .collect()[0]
     )
@@ -138,11 +139,8 @@ def delete_where(
     preds = _where_preds(where, schema)
     if not preds:
         raise ValueError("delete_where requires at least one predicate")
-    blocks = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(path, snap.get("data_dir", "data"))
-    )
-    if "batch" in blocks.columns:  # batch-layout partition col: the new
-        blocks = blocks.drop("batch")  # generation is a flat rewrite
+    # a batch-layout table flattens: the new generation is a flat rewrite
+    blocks = blocks_relation(spark, path, snap)
     # a block MAY hold a match only if every ANDed predicate's stats range
     # admits one; blocks without stats conservatively count as touched
     may = F.lit(True)
@@ -220,39 +218,21 @@ def _commit_cow(
         new_rows, columns=columns, block_rows=block_rows, bloom_cols=bloom_cols
     )
     gen = uuid.uuid4().hex[:8]
-    data_dirname, manifest_dirname = f"data-{gen}", f"manifest-{gen}"
-    data_dir = os.path.join(path, data_dirname)
+    extra = {"block_rows": block_rows, "data_dir": f"data-{gen}",
+             "manifest_dir": f"manifest-{gen}", "bloom_cols": bloom_cols}
     union = untouched.unionByName(new_blocks, allowMissingColumns=True)
-    union.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).parquet(data_dir)
-    written = spark.read.option("mergeSchema", "true").parquet(data_dir)
+    union.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).parquet(os.path.join(path, extra["data_dir"]))
+    written = blocks_relation(spark, path, {**extra, "schema": json.loads(schema_json), "columns": columns})
     manifest_from_blocks(
         written.select("bucket", "part_id", "block_id", "meta")
-    ).write.parquet(os.path.join(path, manifest_dirname))
+    ).write.parquet(os.path.join(path, extra["manifest_dir"]))
     stats = written.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"), F.count("*").alias("blocks")
     ).collect()[0]
     n_copied = int(untouched.count())
     fp = snap.get("fingerprint") if keep_fingerprint and snap.get("fingerprint") else f"{fingerprint_prefix}-{gen}"
-    write_snapshot(
-        path,
-        schema_json,
-        columns,
-        fp,
-        {"block_rows": block_rows, "data_dir": data_dirname,
-         "manifest_dir": manifest_dirname, "bloom_cols": bloom_cols},
-    )
+    write_snapshot(path, schema_json, columns, fp, extra)
     return stats, n_copied
-
-
-def _table_rows(spark: SparkSession, path: str, snap: dict) -> int:
-    """Row count at metadata cost: sum the blocks relation's n_rows column
-    (column-pruned scan), never a payload decode."""
-    from pyspark.sql import functions as F
-
-    b = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(path, snap.get("data_dir", "data"))
-    )
-    return int(b.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).collect()[0][0])
 
 
 def merge_into(
@@ -303,7 +283,10 @@ def merge_into(
     # Persist once; released after the commit.
     updates = updates.persist()
     try:
-        n_before = _table_rows(spark, path, snap)
+        # flattens a batch layout, as delete_where does
+        blocks = blocks_relation(spark, path, snap)
+        # row count at metadata cost: a column-pruned sum, no payload decode
+        n_before = int(blocks.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).collect()[0][0])
         # ONE metadata job instead of three (dup-check, count, min/max):
         # per-key counts then a single fused aggregate
         meta = (
@@ -323,11 +306,6 @@ def merge_into(
             )
         n_updates = int(meta["n"] or 0)
 
-        blocks = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(path, snap.get("data_dir", "data"))
-        )
-        if "batch" in blocks.columns:  # flatten batch layout, as delete_where does
-            blocks = blocks.drop("batch")
         if f"_min_{key_col}" in blocks.columns:
             lo, hi = meta["lo"], meta["hi"]
             may = _block_keep_condition(key_col, ">=", lo) & _block_keep_condition(
@@ -454,11 +432,7 @@ def compact_table(
         from parquet_spark.operators.decode import decode_table
 
         schema = StructType.fromJson(snap["schema"])
-        blocks = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(path, snap.get("data_dir", "data"))
-        )
-        if "batch" in blocks.columns:  # flatten batch layout, like delete
-            blocks = blocks.drop("batch")
+        blocks = blocks_relation(spark, path, snap)  # flattens, like delete
         frag_cond = F.col("n_rows") < int(target * copy_fill_ratio)
         # exhaustive split (NULL n_rows → repack side, which fails loudly
         # in decode rather than silently dropping the block)

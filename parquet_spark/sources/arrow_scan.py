@@ -62,7 +62,8 @@ from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from py4j.protocol import Py4JError
+from py4j.java_gateway import JavaMember
+from py4j.protocol import STATIC_PREFIX, Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -174,6 +175,17 @@ def session_facts(spark: SparkSession) -> PlanFacts:
     )
 
 
+def _input_files(df: DataFrame) -> tuple[str, ...]:
+    """`df.inputFiles()`, sorted, in 3 py4j round trips whatever the file
+    count. PySpark's own call converts the Java array one element at a
+    time, 2 round trips a file; here the JVM wraps the array as a Scala
+    Seq (a static member called without reflection lookups) and joins it
+    with NUL, which no path holds."""
+    wrap = JavaMember("genericWrapArray", None, STATIC_PREFIX + "scala.runtime.ScalaRunTime", df._jdf._gateway_client)
+    joined = wrap(df._jdf.inputFiles()).mkString("\u0000")
+    return tuple(sorted(joined.split("\u0000"))) if joined else ()
+
+
 def plan_facts(df: DataFrame) -> PlanFacts:
     """`PlanFacts` of one op over `df`: one plan-text read, one
     `inputFiles()`, the session's facts and the schema."""
@@ -181,7 +193,7 @@ def plan_facts(df: DataFrame) -> PlanFacts:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
         plan = ""
-    files = tuple(sorted(df.inputFiles()))
+    files = _input_files(df)
     return dataclasses.replace(
         session_facts(df.sparkSession), df=df, plan=plan, files=files,
         paths=tuple(map(local_path, files)), schema=df.schema,

@@ -22,10 +22,13 @@ Semantics and limits (documented, enforced where cheap):
 - Exactly-once per file: offsets are file names tracked in the query's
   `checkpointLocation` — standard file-source semantics, aligned with
   the table's append-only batch layout.
-- Additive schema evolution works: the blocks schema is the union read
-  at start (mergeSchema), older files null-fill absent payload columns
-  in the parquet scan, and `decode_table`'s null-fill path turns those
-  into typed null rows.
+- The blocks schema comes from the snapshot (`decode.blocks_ddl`), not
+  from the files, so a fresh table whose data dir holds no batch yet
+  opens as a stream before its first batch lands, and the stream starts
+  without a schema-inference job. Additive schema evolution works
+  without a restart for every column the snapshot names at start: a
+  file written before a column existed reads it as null, and
+  `decode_table` decodes it as typed null rows.
 """
 
 from __future__ import annotations
@@ -34,9 +37,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-from pyspark.sql.utils import AnalysisException
 
-from parquet_spark.operators.decode import decode_table
+from parquet_spark.operators.decode import blocks_ddl, decode_table
 from parquet_spark.operators.encode import read_snapshot
 
 
@@ -62,37 +64,7 @@ def read_encoded_stream(
         raise FileNotFoundError(f"no snapshot.json under {path}")
     schema = StructType.fromJson(snap["schema"])
     data_dir = os.path.join(path, snap.get("data_dir", "data"))
-    # one-time static prepass: the on-disk blocks schema (union across
-    # batches — mergeSchema — so evolved columns exist in the stream)
-    try:
-        blocks_schema = (
-            spark.read.option("mergeSchema", "true").parquet(data_dir).schema
-        )
-    except AnalysisException:
-        # fresh table: a snapshot exists but no batch has committed files
-        # yet — derive the blocks schema from the snapshot so a consumer
-        # can start tailing before the first batch lands (r5 ADVICE
-        # finding). Payload columns are binary; stats sidecars appear in
-        # later files and merge in via mergeSchema on restart.
-        from pyspark.sql.types import (
-            BinaryType,
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-        )
-
-        blocks_schema = StructType(
-            [
-                StructField("part_id", IntegerType()),
-                StructField("block_id", LongType()),
-                StructField("bucket", IntegerType()),
-                StructField("n_rows", IntegerType()),
-                StructField("meta", StringType()),
-            ]
-            + [StructField(f.name, BinaryType()) for f in schema.fields]
-        )
-    reader = spark.readStream.schema(blocks_schema).option("basePath", data_dir)
+    reader = spark.readStream.schema(blocks_ddl(snap)).option("basePath", data_dir)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     blocks = reader.parquet(data_dir)

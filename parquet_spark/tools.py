@@ -100,7 +100,7 @@ def cmd_verify(path: str) -> None:
     reader-side footer+page checksum walk."""
     from pyspark.sql import functions as F
 
-    from parquet_spark.operators.decode import read_encoded, read_manifest
+    from parquet_spark.operators.decode import blocks_relation, read_encoded, read_manifest
 
     spark = _spark()
     n = read_encoded(spark, path, verify=True).count()
@@ -119,11 +119,7 @@ def cmd_verify(path: str) -> None:
     snap = read_snapshot(path) or {}
     bloom_cols = snap.get("bloom_cols") or []
     if bloom_cols:
-        import os as _os
-
-        blocks = spark.read.option("mergeSchema", "true").parquet(
-            _os.path.join(path, snap.get("data_dir", "data"))
-        )
+        blocks = blocks_relation(spark, path, snap)
 
         def probe(batches):
             import pyarrow as pa

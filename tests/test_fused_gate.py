@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
@@ -344,3 +345,56 @@ def test_write_reads_input_files_once(spark, tmp_path):
         assert read_snapshot(path)["bucket_mode"] == mode
         assert sum("\ninputFiles\n" in c for c in sent) == 1
         assert sum("\njavaToPython\n" in c for c in sent) == npart_reads
+
+
+_PYSPARK_OWN = {"broadcast", "range", "mapInArrow"}
+
+
+def _engine_call(frame) -> bool:
+    """Whether a py4j command sent from `frame` is the engine's own: a
+    `parquet_spark` frame is on the stack, with no PySpark DataFrame
+    builder (`range`, `mapInArrow`, `broadcast`) above it."""
+    while frame is not None:
+        name = frame.f_code.co_filename
+        if os.sep + "parquet_spark" + os.sep in name:
+            return True
+        if os.sep + "pyspark" + os.sep in name and frame.f_code.co_name in _PYSPARK_OWN:
+            return False
+        frame = frame.f_back
+    return False
+
+
+def test_plan_facts_calls_do_not_grow_with_files(spark, tmp_path):
+    """`plan_facts` reads inputFiles() in a fixed number of py4j round
+    trips: the engine's own calls of a roundtrip_table build and of
+    explain_partitioning are the same on 1 file (64 row groups) and on
+    64 files, and at most 10."""
+    table = _table(0, 6400)
+    one, many = tmp_path / "one", tmp_path / "many"
+    one.mkdir()
+    many.mkdir()
+    pq.write_table(table, str(one / "t.parquet"), row_group_size=100)
+    for i in range(64):
+        pq.write_table(table.slice(i * 100, 100), str(many / f"part-{i:02d}.parquet"))
+    client = spark.sparkContext._gateway._gateway_client
+    send, engine = client.send_command, []
+
+    def spy(command, *a, **k):
+        engine.append(_engine_call(sys._getframe(1)))
+        return send(command, *a, **k)
+
+    for op in (roundtrip_table, explain_partitioning):
+        counts = []
+        for d in (one, many):
+            df = spark.read.parquet(str(d))
+            assert explain_partitioning(df).startswith("arrow fused")
+            assert len(plan_facts(df).files) == len(list_parquet_files(str(d)))
+            op(df)  # warm-up
+            engine.clear()
+            client.send_command = spy
+            try:
+                op(df)
+            finally:
+                client.send_command = send
+            counts.append(sum(engine))
+        assert counts[0] == counts[1] <= 10, (op.__name__, counts)
