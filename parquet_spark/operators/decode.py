@@ -233,14 +233,21 @@ def blocks_ddl(snap: dict) -> str:
     return _blocks_layout(StructType.fromJson(snap["schema"]), snap["columns"], snap.get("bloom_cols") or [])[1]
 
 
-def blocks_relation(spark: SparkSession, path: str, snap: dict, max_batch: int | None = None) -> DataFrame:
+def blocks_relation(
+    spark: SparkSession, path: str, snap: dict, max_batch: int | None = None, *, strict: bool = False
+) -> DataFrame:
     """The blocks relation of the generation `snap` names under `path`,
     typed by `blocks_ddl` (no schema-inference job). With `max_batch`, a
     batch-layout table keeps the `batch=N` dirs with N <= max_batch
-    (`as_of`); the `batch` partition column is then dropped."""
+    (`as_of`); the `batch` partition column is then dropped. `strict`
+    reads every file or raises, whatever `spark.sql.files.ignoreCorruptFiles`
+    says: a rewrite op's split must not lose a file from both sides."""
     from pyspark.sql import functions as F
 
-    blocks = spark.read.schema(blocks_ddl(snap)).parquet(os.path.join(path, snap.get("data_dir", "data")))
+    reader = spark.read.schema(blocks_ddl(snap))
+    if strict:
+        reader = reader.option("ignoreCorruptFiles", "false")
+    blocks = reader.parquet(os.path.join(path, snap.get("data_dir", "data")))
     if "batch" not in blocks.columns or "batch" in snap["columns"]:
         return blocks
     if max_batch is not None:

@@ -548,16 +548,21 @@ def _parse_bytes_conf(v: str, default: int) -> int:
         return default
 
 
-def _publish_manifest(pending: str, man_dir: str, clear: bool) -> None:
+def _publish_manifest(pending: str, man_dir: str, clear: bool) -> list[str]:
     """Move side-band manifest parts from the job's _pending dir into the
-    manifest dir. `clear` wipes previous manifest content first (overwrite
+    manifest dir and return their published paths (none: the job wrote no
+    block). `clear` wipes previous manifest content first (overwrite
     semantics). Dedups by partition id — task retries write identical rows
     under distinct attempt suffixes — and removes any stale _pending dirs
-    left by crashed runs (their entries, if data committed, are re-derived
-    by the resume heal). All IO goes through tablefs (object-store
-    capable); publish is NOT atomic and doesn't need to be — the data dir
-    is the source of truth and a half-published manifest is healed on the
-    next resume."""
+    left by crashed runs. All IO goes through tablefs (object-store
+    capable); publish is NOT atomic and doesn't need to be, because no
+    reader sees the manifest before the snapshot names it:
+    - write_encoded: the data dir is the source of truth, and the resume
+      heal re-derives the entries of a half-published manifest;
+    - a copy-on-write commit (maintain) or a sink batch: a crash before
+      the snapshot write leaves a generation (or batch dir) no snapshot
+      references; the next compaction sweeps the generation, and the
+      stream's checkpoint replays the batch into its own dirs."""
     from parquet_spark import tablefs
 
     tablefs.mkdirs(man_dir)
@@ -573,17 +578,15 @@ def _publish_manifest(pending: str, man_dir: str, clear: bool) -> None:
     # the original run's, and un-tagged names would overwrite the prior
     # run's manifest parts on append
     tag = os.path.basename(pending)[len("_pending-"):]
-    seen_pids = set()
+    published = {}
     for fname in tablefs.listdir(pending):
-        if not fname.endswith(".parquet"):
-            continue
         pid = fname.rsplit("-", 1)[0]
-        if pid in seen_pids:
+        if not fname.endswith(".parquet") or pid in published:
             continue
-        seen_pids.add(pid)
-        dest = f"part-{tag}-{fname[len('part-'):]}"
-        tablefs.move(os.path.join(pending, fname), os.path.join(man_dir, dest))
+        published[pid] = os.path.join(man_dir, f"part-{tag}-{fname[len('part-'):]}")
+        tablefs.move(os.path.join(pending, fname), published[pid])
     tablefs.delete_dir(pending)
+    return list(published.values())
 
 
 def _partition_plan_conf(spark: SparkSession) -> dict:

@@ -15,13 +15,16 @@ directory renames anywhere, so the scheme works on S3/GCS where rename
 does not exist. A crash before the snapshot write leaves the old table
 fully live plus an orphaned generation, which the next compaction sweeps.
 
+delete_where, merge_into and incremental compact_table commit through
+`_commit_cow`, which, like write_encoded, writes in one data job and
+never reads back what it wrote.
+
 `recover_table` remains for the legacy two-rename layout (`<path>.old`)
 written by older engine versions.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -43,13 +46,16 @@ def fragmentation(spark: SparkSession, path: str, block_rows: int | None = None)
     snap = read_snapshot(path)
     if snap is None:
         raise FileNotFoundError(f"no snapshot.json under {path}")
-    target = block_rows or snap.get("block_rows", DEFAULT_BLOCK_ROWS)
     agg = (
         blocks_relation(spark, path, snap)
         .agg(F.count("*").alias("n_blocks"), F.sum("n_rows").alias("n_rows"))
         .collect()[0]
     )
-    n_blocks, n_rows = int(agg["n_blocks"]), int(agg["n_rows"] or 0)
+    target = block_rows or snap.get("block_rows", DEFAULT_BLOCK_ROWS)
+    return _frag_report(int(agg["n_blocks"]), int(agg["n_rows"] or 0), target)
+
+
+def _frag_report(n_blocks: int, n_rows: int, target: int) -> dict:
     mean = n_rows / n_blocks if n_blocks else 0.0
     return {
         "n_blocks": n_blocks,
@@ -87,18 +93,19 @@ def _retained_generation_dirs(path: str) -> set[str]:
     return live
 
 
-def _sweep_orphan_generations(path: str, snap: dict) -> None:
-    """Delete generation dirs referenced by NO retained snapshot —
-    leftovers of crashed compactions. Generations still reachable through
-    the snapshot log are kept (time travel); use expire_snapshots to
-    reclaim them."""
+def _sweep_orphan_generations(path: str) -> list[str]:
+    """Delete generation dirs referenced by NO retained snapshot (the live
+    one included) — leftovers of crashed compactions and of expired
+    snapshots. Generations still reachable through the snapshot log are
+    kept (time travel); use expire_snapshots to reclaim them. Returns the
+    removed dir names."""
     live = _retained_generation_dirs(path)
-    live.update({snap.get("data_dir", "data"), snap.get("manifest_dir", "manifest")})
+    removed = []
     for entry, entry_is_dir in tablefs.list_infos(path):
-        if not entry_is_dir or entry in live:
-            continue
-        if entry == "data" or entry.startswith("data-") or entry == "manifest" or entry.startswith("manifest-"):
+        if entry_is_dir and entry not in live and (entry in ("data", "manifest") or entry.startswith(("data-", "manifest-"))):
             tablefs.delete_dir(os.path.join(path, entry))
+            removed.append(entry)
+    return removed
 
 
 def delete_where(
@@ -140,34 +147,28 @@ def delete_where(
     if not preds:
         raise ValueError("delete_where requires at least one predicate")
     # a batch-layout table flattens: the new generation is a flat rewrite
-    blocks = blocks_relation(spark, path, snap)
+    blocks = blocks_relation(spark, path, snap, strict=True)
     # a block MAY hold a match only if every ANDed predicate's stats range
     # admits one; blocks without stats conservatively count as touched
     may = F.lit(True)
     for col, op, value in preds:
         if f"_min_{col}" in blocks.columns:
             may = may & _block_keep_condition(col, op, value)
-    touched, untouched = _split_blocks(blocks, may)
+    touched, untouched, account = _split_blocks(blocks, may)
     rows = decode_table(touched, schema)
     # null-safe survivor set: a NULL predicate evaluation did not MATCH
     survivors = rows.where(~_row_condition(preds).eqNullSafe(F.lit(True)))
-    before = blocks.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"), F.count("*").alias("blocks")
-    ).collect()[0]
-    stats, n_copied = _commit_cow(
+    remaining, block_counts = _commit_cow(
         spark, path, snap, schema.json(), [f.name for f in schema.fields],
-        untouched, survivors, "delete",
+        untouched, survivors, account, "delete",
     )
-    return {
-        "deleted": int(before["rows"]) - int(stats["rows"]),
-        "remaining": int(stats["rows"]),
-        "blocks_copied": n_copied,
-        "blocks_rewritten": int(stats["blocks"]) - n_copied,
-    }
+    return {"deleted": account["rows"] - remaining, "remaining": remaining, **block_counts}
 
 
-def _split_blocks(blocks, may):
-    """Exhaustive touched/untouched split for copy-on-write rewrites.
+def _split_blocks(blocks, may) -> tuple:
+    """Exhaustive touched/untouched split for copy-on-write rewrites, and
+    the old generation's account from one aggregate: {rows, blocks,
+    copied_rows, copied_blocks}, the untouched side being the copied one.
     `where(c)` and `where(~c)` BOTH drop NULL-condition rows under
     three-valued logic — a block falling through the split would silently
     vanish from the new generation (review finding; _block_keep_condition
@@ -177,7 +178,13 @@ def _split_blocks(blocks, may):
     from pyspark.sql import functions as F
 
     m = F.coalesce(may, F.lit(True))
-    return blocks.where(m), blocks.where(~m)
+    account = blocks.agg(
+        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"),
+        F.count("*").alias("blocks"),
+        F.coalesce(F.sum(F.when(~m, F.col("n_rows"))), F.lit(0)).alias("copied_rows"),
+        F.count(F.when(~m, 1)).alias("copied_blocks"),
+    ).collect()[0]
+    return blocks.where(m), blocks.where(~m), {k: int(v) for k, v in account.asDict().items()}
 
 
 def _commit_cow(
@@ -188,25 +195,33 @@ def _commit_cow(
     columns: list[str],
     untouched,
     new_rows,
+    account: dict,
     fingerprint_prefix: str,
     bloom_cols: list | None = None,
     block_rows: int | None = None,
     keep_fingerprint: bool = False,
-) -> tuple:
-    """Shared copy-on-write commit for delete_where/merge_into: encode the
-    rewritten rows, union with the byte-identical untouched blocks into a
-    FRESH generation, publish its manifest, then swap the snapshot pointer
-    atomically. Returns (written-generation stats row, blocks copied).
+) -> tuple[int, dict]:
+    """Shared copy-on-write commit of delete_where/merge_into/compact_table:
+    encode the rewritten rows and union them with the byte-identical
+    untouched blocks into a FRESH generation in one data job, publish its
+    manifest, then swap the snapshot pointer atomically. Spark reads
+    nothing the commit wrote: the rewritten blocks' manifest parts are
+    written side-band by their encode tasks, the copied blocks' rows come
+    from the old generation's meta column (no job when none is copied),
+    and the counts come from `account` (`_split_blocks`) plus the
+    published parts, read on the driver. Returns the new generation's
+    rows and its {blocks_copied, blocks_rewritten}.
 
     `keep_fingerprint` preserves the prior snapshot's fingerprint —
     correct for commits that do not change logical content (compaction),
     so a later write_encoded(resume=True) of the same source still
     recognizes the table; content-changing commits (delete/merge) must
     NOT keep it, or such a resume would append duplicate rows."""
-    from pyspark.sql import functions as F
+    import pyarrow.parquet as pq
 
     from parquet_spark.operators.encode import (
         BLOCKS_ROW_GROUP_BYTES,
+        _publish_manifest,
         encode_table,
         manifest_from_blocks,
         write_snapshot,
@@ -214,25 +229,29 @@ def _commit_cow(
 
     block_rows = block_rows or snap.get("block_rows", DEFAULT_BLOCK_ROWS)
     bloom_cols = bloom_cols if bloom_cols is not None else (snap.get("bloom_cols") or [])
-    new_blocks = encode_table(
-        new_rows, columns=columns, block_rows=block_rows, bloom_cols=bloom_cols
-    )
     gen = uuid.uuid4().hex[:8]
     extra = {"block_rows": block_rows, "data_dir": f"data-{gen}",
              "manifest_dir": f"manifest-{gen}", "bloom_cols": bloom_cols}
+    man_dir = os.path.join(path, extra["manifest_dir"])
+    pending = os.path.join(man_dir, f"_pending-{gen}")
+    tablefs.mkdirs(pending)
+    new_blocks = encode_table(
+        new_rows, columns=columns, block_rows=block_rows, bloom_cols=bloom_cols, manifest_dir=pending
+    )
     union = untouched.unionByName(new_blocks, allowMissingColumns=True)
     union.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).parquet(os.path.join(path, extra["data_dir"]))
-    written = blocks_relation(spark, path, {**extra, "schema": json.loads(schema_json), "columns": columns})
-    manifest_from_blocks(
-        written.select("bucket", "part_id", "block_id", "meta")
-    ).write.parquet(os.path.join(path, extra["manifest_dir"]))
-    stats = written.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"), F.count("*").alias("blocks")
-    ).collect()[0]
-    n_copied = int(untouched.count())
+    if account["copied_blocks"]:
+        manifest_from_blocks(untouched.select("bucket", "part_id", "block_id", "meta")).write.mode("append").parquet(man_dir)
+    # every block carries every column: one manifest row per block
+    rows_written = blocks_written = 0
+    for part in _publish_manifest(pending, man_dir, clear=False):
+        fs, p, _ = tablefs.resolve(part)
+        n_values = pq.read_table(p, filesystem=fs, columns=["n_values"], filters=[("column", "=", columns[0])])[0]
+        rows_written += sum(n_values.to_pylist())
+        blocks_written += len(n_values)
     fp = snap.get("fingerprint") if keep_fingerprint and snap.get("fingerprint") else f"{fingerprint_prefix}-{gen}"
     write_snapshot(path, schema_json, columns, fp, extra)
-    return stats, n_copied
+    return account["copied_rows"] + rows_written, {"blocks_copied": account["copied_blocks"], "blocks_rewritten": blocks_written}
 
 
 def merge_into(
@@ -284,9 +303,7 @@ def merge_into(
     updates = updates.persist()
     try:
         # flattens a batch layout, as delete_where does
-        blocks = blocks_relation(spark, path, snap)
-        # row count at metadata cost: a column-pruned sum, no payload decode
-        n_before = int(blocks.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).collect()[0][0])
+        blocks = blocks_relation(spark, path, snap, strict=True)
         # ONE metadata job instead of three (dup-check, count, min/max):
         # per-key counts then a single fused aggregate
         meta = (
@@ -316,7 +333,7 @@ def merge_into(
                 may = may & _block_keep_condition(key_col, "in", keys)
         else:
             may = F.lit(True)  # no stats on the key: every block may hold a match
-        touched, untouched = _split_blocks(blocks, may)
+        touched, untouched, account = _split_blocks(blocks, may)
 
         survivors = decode_table(touched, schema).join(
             updates.select(key_col), key_col, "left_anti"
@@ -332,22 +349,15 @@ def merge_into(
                 f"merge_into supports bloom_cols/block_rows overrides only, "
                 f"got {sorted(encode_kwargs)}"
             )
-        stats, n_copied = _commit_cow(
+        total, block_counts = _commit_cow(
             spark, path, snap, out_schema_json, list(merged.columns),
-            untouched, merged, "merge",
+            untouched, merged, account, "merge",
             bloom_cols=bloom_override, block_rows=rows_override,
         )
     finally:
         updates.unpersist()
-    total = int(stats["rows"])
-    inserted = total - n_before
-    return {
-        "updated": n_updates - inserted,
-        "inserted": inserted,
-        "total": total,
-        "blocks_copied": n_copied,
-        "blocks_rewritten": int(stats["blocks"]) - n_copied,
-    }
+    inserted = total - account["rows"]
+    return {"updated": n_updates - inserted, "inserted": inserted, "total": total, **block_counts}
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> dict:
@@ -372,14 +382,7 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
         if seq is not None and seq not in keep_seqs:
             tablefs.delete_file(os.path.join(path, "snapshots", f"snap-{seq:08d}.json"))
             expired.append(seq)
-    removed = []
-    live = _retained_generation_dirs(path)
-    for entry, entry_is_dir in tablefs.list_infos(path):
-        if not entry_is_dir or entry in live:
-            continue
-        if entry == "data" or entry.startswith("data-") or entry == "manifest" or entry.startswith("manifest-"):
-            tablefs.delete_dir(os.path.join(path, entry))
-            removed.append(entry)
+    removed = _sweep_orphan_generations(path)
     return {"expired": expired, "kept": sorted(keep_seqs), "removed_dirs": sorted(removed)}
 
 
@@ -421,9 +424,6 @@ def compact_table(
     if snap is None:
         raise FileNotFoundError(f"no snapshot.json under {path}")
     target = block_rows or snap.get("block_rows", DEFAULT_BLOCK_ROWS)
-    before = fragmentation(spark, path, target)
-    if before["fill_ratio"] >= min_fill_ratio:
-        return {"compacted": False, "before": before, "after": before}
 
     if incremental:
         from pyspark.sql import functions as F
@@ -432,41 +432,36 @@ def compact_table(
         from parquet_spark.operators.decode import decode_table
 
         schema = StructType.fromJson(snap["schema"])
-        blocks = blocks_relation(spark, path, snap)  # flattens, like delete
-        frag_cond = F.col("n_rows") < int(target * copy_fill_ratio)
+        blocks = blocks_relation(spark, path, snap, strict=True)  # flattens, like delete
         # exhaustive split (NULL n_rows → repack side, which fails loudly
         # in decode rather than silently dropping the block)
-        frag, full = _split_blocks(blocks, frag_cond)
-        frag_agg = frag.agg(
-            F.coalesce(F.sum("n_rows"), F.lit(0)).alias("r"), F.count("*").alias("b")
-        ).collect()[0]
-        frag_rows, frag_blocks = int(frag_agg["r"]), int(frag_agg["b"])
-        if frag_blocks <= 1:
-            # nothing to repack (every block already >= copy_fill_ratio ×
-            # target, or a single partial tail block): a sweep would copy
-            # the WHOLE table into a new generation with zero improvement,
-            # forever — converge by declining instead (review finding)
+        frag, full, account = _split_blocks(blocks, F.col("n_rows") < int(target * copy_fill_ratio))
+        before = _frag_report(account["blocks"], account["rows"], target)
+        # with at most one block to repack (every block already >=
+        # copy_fill_ratio × target, or a single partial tail block), a sweep
+        # would copy the WHOLE table into a new generation with zero
+        # improvement, forever — converge by declining instead
+        if before["fill_ratio"] >= min_fill_ratio or account["blocks"] - account["copied_blocks"] <= 1:
             return {"compacted": False, "before": before, "after": before}
         rows = decode_table(frag, schema)
         # repack: ~8 full blocks per partition so the re-encode emits full
         # blocks regardless of how many tiny source files the tail spans
-        n_parts = max(1, frag_rows // (target * 8))
+        n_parts = max(1, (account["rows"] - account["copied_rows"]) // (target * 8))
         rows = rows.repartition(n_parts)
         # preserve the source fingerprint, matching the full-rewrite path:
         # compaction changes layout, not content, so resume semantics must
         # not depend on which compaction form ran (r5 ADVICE finding)
-        stats, n_copied = _commit_cow(
+        n_rows, block_counts = _commit_cow(
             spark, path, snap, schema.json(), [f.name for f in schema.fields],
-            full, rows, "compact", block_rows=target, keep_fingerprint=True,
+            full, rows, account, "compact", block_rows=target, keep_fingerprint=True,
         )
-        new_snap = read_snapshot(path)
-        _sweep_orphan_generations(path, new_snap)
-        after = fragmentation(spark, path, target)
-        return {
-            "compacted": True, "before": before, "after": after,
-            "blocks_copied": n_copied,
-            "blocks_rewritten": int(stats["blocks"]) - n_copied,
-        }
+        _sweep_orphan_generations(path)
+        after = _frag_report(sum(block_counts.values()), n_rows, target)
+        return {"compacted": True, "before": before, "after": after, **block_counts}
+
+    before = fragmentation(spark, path, target)
+    if before["fill_ratio"] >= min_fill_ratio:
+        return {"compacted": False, "before": before, "after": before}
 
     # the read plan is lazy over the OLD generation; the write streams into
     # a fresh one — old data is untouched until the pointer swap commits
@@ -486,7 +481,6 @@ def compact_table(
     )
     # write_encoded's final atomic snapshot write IS the commit; everything
     # the new snapshot doesn't reference is now garbage
-    new_snap = read_snapshot(path)
-    _sweep_orphan_generations(path, new_snap)
+    _sweep_orphan_generations(path)
     after = fragmentation(spark, path, target)
     return {"compacted": True, "before": before, "after": after}

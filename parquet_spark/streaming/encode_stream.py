@@ -78,8 +78,6 @@ class StreamingEncoder:
         self._snapshot_written = False
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # a compaction/delete/merge that rewrote the table under a LIVE
         # stream swaps the snapshot to a generation this encoder does not
         # know; silently writing (and snapshotting) the stale dirname
@@ -115,7 +113,12 @@ class StreamingEncoder:
             salted, columns=columns, block_rows=self.block_rows, codecs=self.codecs, manifest_dir=pending
         )
         blocks.write.option("parquet.block.size", BLOCKS_ROW_GROUP_BYTES).mode("overwrite").parquet(data_dir)
-        _publish_manifest(pending, man_dir, clear=True)
+        if not _publish_manifest(pending, man_dir, clear=True):
+            # no part published: an empty micro-batch leaves no batch dir
+            # and no snapshot
+            for d in (data_dir, man_dir):
+                tablefs.delete_dir(d)
+            return
         # snapshot per committed batch: the sequence log is what makes
         # read_encoded(as_of=...) meaningful on batch/streaming tables.
         # max_batch is monotone even across checkpoint replays (a replayed

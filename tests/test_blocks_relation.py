@@ -8,7 +8,10 @@ from the snapshot (`decode.blocks_ddl`), so no read infers a schema.
 - a blocks file whose stats columns do not match the snapshot's types
   raises or keeps its blocks, and never loses or adds rows;
 - a generation dir without data files reads as an empty table with the
-  snapshot's schema.
+  snapshot's schema;
+- the rewrite ops read every blocks file or raise, under
+  `spark.sql.files.ignoreCorruptFiles` too, and never read the
+  generation they commit; the streaming sink runs one data job per batch.
 """
 
 from __future__ import annotations
@@ -26,11 +29,13 @@ from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from parquet_spark.operators import decode, maintain
 from parquet_spark.operators.decode import blocks_relation, list_blocks_files, read_encoded
 from parquet_spark.operators.encode import append_encoded, read_snapshot, write_encoded
-from parquet_spark.operators.maintain import delete_where, fragmentation
+from parquet_spark.operators.maintain import compact_table, delete_where, fragmentation, merge_into
 from parquet_spark.sources.synth import sequences_df
 from parquet_spark.streaming.decode_stream import read_encoded_stream
+from parquet_spark.streaming.encode_stream import StreamingEncoder
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -103,7 +108,7 @@ def _probe():
 
 # Spark jobs per op that tools/maintenance_jobs_probe.py measures on its
 # inputs at 20k rows (CHANGES.md), as upper bounds
-PROBE_JOBS_20K = {"fragmentation": 2, "delete_where": 8, "merge_into": 14, "compact_table": 13}
+PROBE_JOBS_20K = {"fragmentation": 2, "delete_where": 3, "merge_into": 9, "compact_table": 4}
 
 
 def test_maintenance_jobs_within_probe_counts(spark, tmp_path):
@@ -118,16 +123,89 @@ def test_maintenance_jobs_within_probe_counts(spark, tmp_path):
         assert jobs <= bound, (name, jobs)
 
 
-def _rewrite_one_blocks_file(path: str, edit) -> str:
-    """Rewrite the first blocks file of the table with pyarrow, through
-    `edit(table)`; the Hadoop checksum sidecar of the old bytes goes."""
+def test_sink_batch_jobs(spark, tmp_path):
+    """One 20k-row micro-batch is one data job: the salted shuffle's map
+    stage and the write."""
+    src = sequences_df(spark, 20_000, seed=11, n_partitions=4, mean_tokens=32)
+    enc = StreamingEncoder(str(tmp_path / "t"), target_partitions=8)
+    _out, jobs = _jobs(spark, lambda: enc(src, 0))
+    assert jobs <= 2
+    assert enc._snapshot_written and read_encoded(spark, str(tmp_path / "t")).count() == 20_000
+
+
+def test_sink_empty_batch_leaves_no_trace(spark, tmp_path):
+    """An empty micro-batch writes no batch dir and no snapshot, before
+    and after a non-empty one."""
+    path = str(tmp_path / "t")
+    src = sequences_df(spark, 500, seed=5, n_partitions=2, mean_tokens=8)
+    empty = src.where("false")
+    enc = StreamingEncoder(path, target_partitions=2)
+    enc(empty, 0)
+    assert not enc._snapshot_written
+    assert read_snapshot(path) is None
+    assert not os.path.exists(os.path.join(path, "data", "batch=0"))
+    enc(src, 1)
+    seq = read_snapshot(path)["sequence"]
+    enc(empty, 2)
+    assert read_snapshot(path)["sequence"] == seq
+    for d in ("data", "manifest"):
+        assert sorted(os.listdir(os.path.join(path, d))) == ["batch=1"]
+    assert _crc(read_encoded(spark, path)) == _crc(src)
+
+
+def test_rewrite_ops_never_read_what_they_wrote(spark, tmp_path, monkeypatch):
+    """No Spark read of delete_where, merge_into or incremental
+    compact_table lies under the generation the op commits."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+    relation = decode.blocks_relation
+
+    def spy_parquet(self, *paths, **kw):
+        reads.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    def spy_relation(spark, path, snap, *a, **kw):
+        reads.append(os.path.join(path, snap.get("data_dir", "data")))
+        return relation(spark, path, snap, *a, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+    monkeypatch.setattr(maintain, "blocks_relation", spy_relation)
+    monkeypatch.setattr(decode, "blocks_relation", spy_relation)
+    probe = _probe()
+    inp = probe._inputs(spark, str(tmp_path), 8_000)
+    ops = probe._ops(spark, inp)
+    for name in ("delete_where", "merge_into", "compact_table"):
+        table, op = ops[name]
+        path = str(tmp_path / name)
+        shutil.copytree(inp[table], path)
+        reads.clear()
+        op(path)
+        snap = read_snapshot(path)
+        written = [os.path.join(path, snap[k]) for k in ("data_dir", "manifest_dir")]
+        assert reads, name
+        bad = [r for r in reads if any(r == w or r.startswith(w + os.sep) for w in written)]
+        assert not bad, (name, bad)
+
+
+def _one_blocks_file(path: str) -> str:
+    """The first blocks file of the table; the Hadoop checksum sidecar of
+    its bytes goes, so an edit of them reads as the edit itself."""
     data_dir = os.path.join(path, read_snapshot(path)["data_dir"])
     _fs, files = list_blocks_files(data_dir)
     victim = files[0]
-    pq.write_table(edit(pq.read_table(victim)), victim)
     crc = os.path.join(os.path.dirname(victim), f".{os.path.basename(victim)}.crc")
     if os.path.exists(crc):
         os.remove(crc)
+    return victim
+
+
+def _rewrite_one_blocks_file(path: str, edit) -> str:
+    """Rewrite the first blocks file of the table with pyarrow, through
+    `edit(table)`."""
+    victim = _one_blocks_file(path)
+    pq.write_table(edit(pq.read_table(victim)), victim)
     return victim
 
 
@@ -190,6 +268,55 @@ def test_stats_type_differs_from_snapshot(spark, tmp_path, edit):
     if outcome == "raised":  # the table is left as it was
         assert read_snapshot(path)["sequence"] == snap["sequence"]
         assert read_encoded(spark, path).count() == src.count()
+
+
+def _count(spark, path):
+    try:
+        return read_encoded(spark, path).count()
+    except (Py4JJavaError, PySparkException):
+        return "raised"
+
+
+@pytest.mark.parametrize("edit", ["long", "string", "truncated"])
+def test_rewrite_ops_never_skip_a_file(spark, tmp_path, edit):
+    """Under ignoreCorruptFiles, a blocks file a rewrite op's scan cannot
+    read (stats of another type than the snapshot's, or a truncated file)
+    makes delete_where, merge_into and compact_table raise and leave the
+    table as it was, or return the right rows: it never falls out of the
+    rewrite."""
+    src = sequences_df(spark, 4000, seed=3, n_partitions=2, mean_tokens=16)
+    table = str(tmp_path / "t")
+    write_encoded(src, table, target_partitions=4, resume=False, cluster_col="n_tok")
+    if edit == "truncated":
+        victim = _one_blocks_file(table)
+        with open(victim, "r+b") as f:
+            f.truncate(os.path.getsize(victim) // 2)
+    else:
+        _rewrite_one_blocks_file(table, STATS_EDITS[edit])
+    updates = src.where(F.crc32("doc_id") % 8 == 0).withColumn("n_tok", F.col("n_tok") + 1)
+    merged = src.join(updates.select("doc_id"), "doc_id", "left_anti").unionByName(updates)
+    remaining = src.where(~(F.col(WHERE[0]) > WHERE[2]))
+    ops = {
+        "delete_where": (lambda p: delete_where(spark, p, WHERE)["remaining"], remaining),
+        "merge_into": (lambda p: merge_into(spark, p, updates, key_col="doc_id")["total"], merged),
+        "compact_table": (lambda p: compact_table(spark, p)["after"]["n_rows"], src),
+    }
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        for name, (op, want) in ops.items():
+            path = str(tmp_path / name)
+            shutil.copytree(table, path)
+            seq, n = read_snapshot(path)["sequence"], _count(spark, path)
+            outcome = _raises_or_equals(
+                lambda: (op(path), _crc(read_encoded(spark, path))), (want.count(), _crc(want))
+            )
+            if outcome == "raised":
+                assert read_snapshot(path)["sequence"] == seq, name
+                assert _count(spark, path) == n, name
+            else:
+                assert edit != "truncated", name
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
 
 
 @pytest.mark.xfail(strict=True, reason="ignoreCorruptFiles skips a file whose stats the scan cannot read (CHANGES.md FOUND)")

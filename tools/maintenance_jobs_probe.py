@@ -4,9 +4,11 @@ Inputs, written by the checkout under test into `<work_dir>`:
 - `seq`: 200k `sequences_df` rows (mean 32 tokens, seed 7), written with
   `write_encoded(cluster_col="n_tok", target_partitions=8)`;
 - `frag`: the same rows appended in 6 `append_encoded` batches of
-  `target_partitions=8` (48 blocks, fill about 0.25).
+  `target_partitions=8` (48 blocks, fill about 0.25);
+- `sink`: the `sink_batch` op's table.
 
-Ops, each on a fresh copy of its input (the copy is not timed):
+Ops, each on a fresh copy of its input (the copy is not timed; `sink_batch`
+starts from no table):
 - `read_count`: `read_encoded(spark, seq).count()`;
 - `fragmentation` of `frag`;
 - `delete_where(seq, ("n_tok", ">", 120))`;
@@ -14,7 +16,11 @@ Ops, each on a fresh copy of its input (the copy is not timed):
   multiple of 400, with `n_tok + 1`, keyed on `doc_id`;
 - `compact_table(frag)`, incremental;
 - `read_encoded_stream` of `frag`: building the streaming DataFrame, no
-  query started.
+  query started;
+- `sink_batch`: a `StreamingEncoder(target_partitions=8)` called on 20k
+  `sequences_df` rows (seed 11) as batch 0 of a new table;
+- `sink_empty_batch`: the same encoder called on an empty frame as batch
+  1 of `sink`, the table `sink_batch` writes.
 
 Jobs are counted with `setJobGroup` and
 `statusTracker().getJobIdsForGroup`. Each op runs `--reps` times; every
@@ -78,6 +84,7 @@ def _inputs(spark, work_dir: str, n_rows: int) -> dict:
 
     from parquet_spark.operators.encode import append_encoded, write_encoded
     from parquet_spark.sources.synth import sequences_df
+    from parquet_spark.streaming.encode_stream import StreamingEncoder
 
     src = sequences_df(spark, n_rows, seed=7, n_partitions=4, mean_tokens=32)
     seq = os.path.join(work_dir, "seq")
@@ -88,13 +95,24 @@ def _inputs(spark, work_dir: str, n_rows: int) -> dict:
     for i in range(6):
         append_encoded(src.where(row_no % 6 == i), frag, target_partitions=8)
     updates = src.where(row_no % 400 == 0).withColumn("n_tok", F.col("n_tok") + 1)
-    return {"seq": seq, "frag": frag, "updates": updates}
+    sink_rows = sequences_df(spark, 20_000, seed=11, n_partitions=4, mean_tokens=32)
+    sink = os.path.join(work_dir, "sink")
+    shutil.rmtree(sink, ignore_errors=True)
+    StreamingEncoder(sink, target_partitions=8)(sink_rows, 0)
+    return {"seq": seq, "frag": frag, "sink": sink, "updates": updates, "sink_rows": sink_rows}
 
 
 def _ops(spark, inp: dict) -> dict:
     from parquet_spark.operators.decode import read_encoded
     from parquet_spark.operators.maintain import compact_table, delete_where, fragmentation, merge_into
     from parquet_spark.streaming.decode_stream import read_encoded_stream
+    from parquet_spark.streaming.encode_stream import StreamingEncoder
+
+    def sink(rows, batch_id):
+        def op(p):
+            StreamingEncoder(p, target_partitions=8)(rows, batch_id)
+            return {"batches": sorted(os.listdir(os.path.join(p, "data")))}
+        return op
 
     return {
         "read_count": ("seq", lambda p: {"rows": read_encoded(spark, p).count()}),
@@ -103,6 +121,8 @@ def _ops(spark, inp: dict) -> dict:
         "merge_into": ("seq", lambda p: merge_into(spark, p, inp["updates"], key_col="doc_id")),
         "compact_table": ("frag", lambda p: compact_table(spark, p)),
         "read_encoded_stream": ("frag", lambda p: {"columns": read_encoded_stream(spark, p).columns}),
+        "sink_batch": (None, sink(inp["sink_rows"], 0)),
+        "sink_empty_batch": ("sink", sink(inp["sink_rows"].where("false"), 1)),
     }
 
 
@@ -114,7 +134,7 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=4)
     ap.add_argument("--rows", type=int, default=200_000)
     ap.add_argument("--session", type=int, default=1)
-    ap.add_argument("--label", help="names the checkout in the output (default: its commit)")
+    ap.add_argument("--label", help="names the checkout in the output (default: its commit, `+dirty` with uncommitted edits)")
     ap.add_argument("--out")
     args = ap.parse_args()
     repo = os.path.abspath(args.repo)
@@ -122,6 +142,8 @@ def main() -> None:
     # the Python workers import the engine from the same checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
     commit = subprocess.run(["git", "-C", repo, "rev-parse", "--short", "HEAD"], capture_output=True, text=True).stdout.strip()
+    if subprocess.run(["git", "-C", repo, "diff", "--quiet", "HEAD"]).returncode:
+        commit += "+dirty"  # uncommitted edits of tracked files
 
     from pyspark.sql import SparkSession
 
@@ -140,7 +162,8 @@ def main() -> None:
         for rep in range(args.reps):
             path = os.path.join(args.work_dir, f"{name}-{rep}")
             shutil.rmtree(path, ignore_errors=True)
-            shutil.copytree(inp[table], path)
+            if table:
+                shutil.copytree(inp[table], path)
             group = f"probe-{name}-{rep}"
             sc.setJobGroup(group, group)
             t0 = time.perf_counter()
